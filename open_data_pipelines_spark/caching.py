@@ -21,98 +21,25 @@ and (b) a persist ON THE RETURNED FRAME under a documented caller-owned
 unpersist contract (``plans/media_prep.prepare_media_corpus`` — the
 handle is the caller's to release, which is exactly what an internal
 persist denies them).
-
-``SPARK_GRAFT_NO_INTERNAL_CHECKPOINT=1`` turns :func:`lazy_checkpoint`
-into a no-op. Two uses:
-
-- **plan auditing**: a checkpoint truncates lineage to a
-  ``Scan ExistingRDD`` node, hiding the subtree's exchanges, pushed
-  filters, and scan widths from ``.explain`` — ``tools/
-  explain_audit.py`` sets the flag so EXPLAIN_AUDIT.md reports the
-  FULL logical plan (what executes once per subtree, not what the
-  truncated top plan shows);
-- **debugging**: recompute-everything semantics reproduce issues that
-  block reuse can mask.
-
-The flag changes reuse strategy only, never results.
 """
 
 from __future__ import annotations
 
 import os
-import warnings
 
 from pyspark.sql import DataFrame
 
-# Checkpoint-free grind guard (round 14; VERDICT r13 #5). With the
-# kill switch set, every skipped checkpoint leaves its subtree to be
-# RE-EMBEDDED once per downstream consumer — on a deep composite plan
-# (the corpus funnel) the duplicated expression forest grows
-# multiplicatively and Catalyst's constant-heavy rules (PruneFilters)
-# ground for 25+ minutes (EXPLAIN_AUDIT.md footnote, measured round
-# 13). The tree itself cannot be probed cheaply — analysis of the
-# expanded plan is exactly the cost being avoided (a collectLeaves
-# probe on the funnel shape ran past 400 s) — so the guard is the
-# verdict's construction-time arithmetic: each skipped checkpoint
-# multiplies a session-cumulative estimate by its declared consumer
-# count (callers pass ``consumers``; the default 2 is the minimum a
-# reuse cache implies), and crossing the limit warns ONCE, loudly.
-# Session-cumulative is deliberate and conservative: any no-op'd
-# frame MAY later be composed with any other; resetting between
-# "constructions" would need a boundary the library cannot see.
-_nockpt_state = {"blowup": 1, "points": 0, "warned": False}
-
-
-def _nockpt_limit() -> int:
-    # read per call, like the sibling kill switch — a limit set after
-    # import must take effect (round-14 review)
-    return int(os.environ.get("SPARK_GRAFT_NO_CKPT_WARN_LIMIT", "32"))
-
-
-class CheckpointFreeDepthWarning(UserWarning):
-    """SPARK_GRAFT_NO_INTERNAL_CHECKPOINT is set on a plan deep enough
-    to risk a multi-minute Catalyst optimization grind."""
-
-
-def _reset_checkpoint_free_estimate() -> None:
-    """Test hook: zero the session-cumulative blowup estimate."""
-    _nockpt_state.update(blowup=1, points=0, warned=False)
-
-
-def _note_checkpoint_free(consumers: int) -> None:
-    _nockpt_state["blowup"] *= max(consumers, 1)
-    _nockpt_state["points"] += 1
-    if _nockpt_state["blowup"] >= _nockpt_limit() and not _nockpt_state["warned"]:
-        _nockpt_state["warned"] = True
-        warnings.warn(
-            "SPARK_GRAFT_NO_INTERNAL_CHECKPOINT is set and this session has "
-            f"now skipped {_nockpt_state['points']} reuse checkpoints with a "
-            f"combined consumer fan-out of ~{_nockpt_state['blowup']}x. If "
-            "these frames compose into one plan, every skipped subtree is "
-            "re-embedded per consumer and Catalyst optimization can grind "
-            "for MINUTES (the corpus-funnel shape measured 25+ min; see "
-            "EXPLAIN_AUDIT.md). Unset the flag for production runs, or "
-            "budget the compile like tools/explain_audit.py does "
-            "(SPARK_GRAFT_AUDIT_EXPANDED_BUDGET).",
-            CheckpointFreeDepthWarning,
-            stacklevel=3,
-        )
-
-
-# Segment-audit collector (round 15; VERDICT r14 #5). The expanded
-# (checkpoint-free) compile of the deepest composition — the corpus
-# funnel — is intractable by construction (the grind the guard above
-# warns about), so its EXPLAIN_AUDIT row had no expanded upper bound.
-# The per-SEGMENT bracket replaces it: while a collector is active,
-# every lazy_checkpoint records its input's compiled physical plan
-# text BEFORE truncation. Checkpoint boundaries partition the full
-# plan — each segment's own inputs are already truncated — so
-# sum(segment exchanges) + the final top-plan exchanges is an upper
-# bound on the exchanges the production run can plan, computed in
-# seconds instead of the 25+ minutes the monolithic expanded compile
-# costs. (A subtree reused WITHOUT a checkpoint still re-embeds into
-# multiple segments and counts once per appearance — the same
-# once-per-consumer upper-bound semantics the expanded compile had.)
+# Segment-audit collector (tools/explain_audit.py). A checkpoint
+# truncates lineage to ``Scan ExistingRDD``, hiding its subtree's
+# exchanges, pushed filters and scan widths from the top plan. While
+# a collector is active, every lazy_checkpoint records its input's
+# compiled physical plan text BEFORE truncation. Checkpoint
+# boundaries partition the full plan — each segment's own inputs are
+# already truncated — so sum(segment exchanges) + the top-plan
+# exchanges is an upper bound on the exchanges the production run can
+# plan, from the one production-shape compile. (A subtree reused
+# WITHOUT a checkpoint re-embeds into several segments and counts
+# once per appearance — hence upper bound.)
 _segment_collector: list | None = None
 
 
@@ -214,11 +141,9 @@ def drain_prefetch() -> None:
 def lazy_checkpoint(
     df: DataFrame,
     eager: bool = False,
-    consumers: int = 2,
     prefetch: bool = False,
 ) -> DataFrame:
-    """Local checkpoint per the repo convention (no-op under
-    ``SPARK_GRAFT_NO_INTERNAL_CHECKPOINT=1``), lazy by default.
+    """Local checkpoint per the repo convention, lazy by default.
 
     ``eager=True`` exists for ONE reason: ``df.observe`` metrics in
     the checkpointed subtree. Measured rule (probed on this Spark
@@ -234,19 +159,11 @@ def lazy_checkpoint(
     shuffling. Everything else stays lazy: materialized on first use,
     no extra job when the caller never executes the plan.
 
-    ``consumers`` declares how many downstream consumers the cached
-    frame feeds (the default 2 is the minimum that justifies a reuse
-    cache). It changes nothing when the checkpoint runs; under the
-    kill switch it feeds the grind-guard estimate above.
-
     ``prefetch=True`` (round 16) starts the segment's materialization
     on a background thread immediately — see the prefetch note above.
     Only pass it on paths whose plan is ALWAYS executed (query
-    functions, bench paths); it is ignored in audit mode and under
+    functions, bench paths); it is ignored under
     ``SPARK_GRAFT_NO_CKPT_PREFETCH=1``."""
-    if os.environ.get("SPARK_GRAFT_NO_INTERNAL_CHECKPOINT"):
-        _note_checkpoint_free(consumers)
-        return df
     if _segment_collector is not None:
         _segment_collector.append(
             df._jdf.queryExecution().executedPlan().toString()

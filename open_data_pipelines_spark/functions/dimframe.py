@@ -24,22 +24,15 @@ Arrow-converted **LocalRelation**:
   a ``LocalRelation`` carries accurate size stats — the planner can
   pick the broadcast side by itself.
 
-The one environment where the RDD form is load-bearing stays on it:
-under ``SPARK_GRAFT_NO_INTERNAL_CHECKPOINT=1`` (the explain-audit /
-debugging kill switch, ``caching.py``) reuse checkpoints no-op and a
-deep composition re-embeds every shared subtree once per consumer.
-A LocalRelation's driver-held rows would then ride each re-embedded
-copy through Catalyst's whole-plan passes (`sameResult` data
-comparisons, driver-side `ConvertToLocalRelation` evaluation per
-copy) — the round-13 hazard class the RDD opacity was introduced
-for. The flag therefore selects the representation only; the VALUES
-are identical either way, and audit-mode plans are byte-identical to
-the pre-round-15 shape.
+With Arrow conversion off, ``createDataFrame(pandas)`` would degrade
+to a parallelize over ``defaultParallelism`` slices, so such sessions
+get the explicit bounded-slice ``parallelize`` LogicalRDD instead.
+The switch selects the representation only; the VALUES are identical
+either way.
 """
 
 from __future__ import annotations
 
-import os
 from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
@@ -55,26 +48,21 @@ def dim_frame(
     """A small driver-built table as a plan-friendly DataFrame.
 
     Production: Arrow-converted LocalRelation (no Python worker, no
-    job per broadcast build, accurate size stats). Under
-    ``SPARK_GRAFT_NO_INTERNAL_CHECKPOINT=1``: the opaque
-    ``parallelize(rows, slices)`` LogicalRDD the audit mode relies on.
-    ``slices`` only applies to that fallback (dim-sized frames get 1;
-    callers with genuinely large label sets size it up).
+    job per broadcast build, accurate size stats). With Arrow off: the
+    opaque ``parallelize(rows, slices)`` LogicalRDD. ``slices`` only
+    applies to that fallback (dim-sized frames get 1; callers with
+    genuinely large label sets size it up).
     """
     rows = list(rows)
-    # The LocalRelation path depends on Arrow conversion being on
-    # (session.py sets it): with Arrow off, createDataFrame(pandas)
-    # silently degrades to a parallelize over defaultParallelism
-    # slices — strictly WORSE than the explicit bounded-slice RDD
-    # form below (round-16 advice). Route such sessions to the RDD
-    # form so the representation is at least the pre-round-15 shape.
+    # the LocalRelation path depends on Arrow conversion being on
+    # (session.py sets it); see the module docstring for the fallback
     arrow_on = (
         str(
             spark.conf.get("spark.sql.execution.arrow.pyspark.enabled", "false")
         ).lower()
         == "true"
     )
-    if os.environ.get("SPARK_GRAFT_NO_INTERNAL_CHECKPOINT") or not arrow_on:
+    if not arrow_on:
         return spark.createDataFrame(
             spark.sparkContext.parallelize(rows, max(1, slices)), schema
         )

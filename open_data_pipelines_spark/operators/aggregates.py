@@ -203,7 +203,7 @@ def running_sum_scaled(
         .withColumn("__pid", F.spark_partition_id())
         .withColumn("__v", dec)
     )
-    part = lazy_checkpoint(part, consumers=2)
+    part = lazy_checkpoint(part)
 
     w_local = (
         Window.partitionBy("__pid", *keys)

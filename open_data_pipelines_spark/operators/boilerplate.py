@@ -131,9 +131,8 @@ def strip_boilerplate_lines(
     action. Freezing the set at construction time is also a
     semantics choice: the stripped text is pinned to the corpus as
     seen NOW, not re-derived per downstream action. Callers that
-    only need the unexecuted plan (explain/audit paths, or deep
-    checkpoint-free compositions where the upstream compile itself
-    is the cost) should pass ``method="join"``.
+    only need the unexecuted plan (explain/audit paths) should pass
+    ``method="join"``.
 
     ``broadcast_boilerplate=True`` (default) broadcasts the offending
     fingerprint set on the JOIN path — correct while boilerplate stays

@@ -191,8 +191,8 @@ def _components_driver_union_find(
     # dim_frame (round-15): Arrow LocalRelation — the label frame is
     # bounded by driver_max_edges, so its consumers (broadcast joins
     # in every dedup endgame) collect driver rows with no job and no
-    # Python worker; audit mode keeps the opaque parallelize RDD form
-    # with the explicit slice count (functions/dimframe.py)
+    # Python worker; with Arrow off the parallelize RDD form takes
+    # the explicit slice count (functions/dimframe.py)
     slices = max(1, min(8, len(labels) // 20_000))
     return dim_frame(spark, labels, schema, slices=slices)
 

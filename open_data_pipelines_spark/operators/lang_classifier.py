@@ -279,11 +279,7 @@ def predict_language(
     # production — the broadcast build collects driver rows with no
     # job and no Python worker (the old parallelize form decoded
     # pickled rows per consuming segment, ~0.2 s each in the funnel
-    # event log) — and the opaque parallelize LogicalRDD under the
-    # explain-audit kill switch, where a checkpoint-free composition
-    # re-embeds the gate subtree per consumer and driver-held rows
-    # would ride every copy through Catalyst (the round-13 25-minute
-    # grind hazard class; rationale in functions/dimframe.py).
+    # event log).
     model_df = F.broadcast(
         dim_frame(
             spark,

@@ -208,8 +208,7 @@ def registered_domain_psl(
     ]
     # dim_frame (round-15): Arrow LocalRelation — the ~10k-row PSL is
     # broadcast from driver rows with no job and no Python worker
-    # (the parallelize form decoded pickled rows per broadcast build);
-    # audit mode keeps the opaque RDD form (functions/dimframe.py)
+    # (the parallelize form decoded pickled rows per broadcast build)
     rule_df = dim_frame(
         spark,
         rule_rows,
@@ -320,8 +319,7 @@ def filter_domain_blocklist(
     else:
         spark = df.sparkSession
         # dim_frame (round-15): Arrow LocalRelation — broadcast with
-        # no job, no Python worker; audit mode keeps the opaque RDD
-        # form (functions/dimframe.py)
+        # no job, no Python worker (functions/dimframe.py)
         bl = dim_frame(
             spark, [(d.lower(),) for d in blocked], f"{dom_col} string"
         ).distinct()

@@ -358,12 +358,6 @@ def prepare_corpus(
             # no intervening shuffle — it silently read 0 (round-13
             # probe); eager-materialize like the branch input above
             docs = lazy_checkpoint(docs, eager=True)
-        else:
-            import os as _os  # TEMP experiment gate (A/B only)
-
-            if _os.environ.get("SPARK_GRAFT_X_LANGGATE_CKPT"):
-                docs = lazy_checkpoint(docs)
-
 
     # the observed frame MUST flow into the plan (a dangling observe
     # node never executes, and its Observation.get would block forever)
@@ -385,11 +379,8 @@ def prepare_corpus(
         # read 0, round-8 find) and preserves rows via the left join
         # back to every input id (all-boilerplate docs come back with
         # empty text). Either way input count == stripped count.
-        import os as _os2  # TEMP experiment gate (A/B only)
-
         stripped = strip_boilerplate_lines(
-            docs, "text", "doc_id", min_docs=boilerplate_min_docs,
-            method="join" if _os2.environ.get("SPARK_GRAFT_X_BL_JOIN") else "auto",
+            docs, "text", "doc_id", min_docs=boilerplate_min_docs
         )
         if with_stats and stats_via == "count":
             # equal by construction — one count() serves both keys
@@ -703,7 +694,6 @@ def prepare_corpus(
             surviving = lazy_checkpoint(
                 surviving,
                 eager=with_stats and stats_via == "observe",
-                consumers=2,
                 prefetch=True,
             )
 

@@ -751,9 +751,8 @@ def funnel_planted_docs(spark: SparkSession, sf_dir: str):
     # seven consumers of the base table (the LM training slice, the
     # two NB training slices and the four planted-union branches): one
     # checkpointed scan feeds all of them instead of seven parquet
-    # re-reads (round-9 trim); the declared fan-out feeds the
-    # checkpoint-free grind guard (caching._note_checkpoint_free)
-    docs = lazy_checkpoint(_docs(spark, sf_dir), consumers=7, prefetch=True)
+    # re-reads (round-9 trim)
+    docs = lazy_checkpoint(_docs(spark, sf_dir), prefetch=True)
     exact_copies = docs.filter(F.col("doc_id") % 5 == 0).withColumn(
         "doc_id", F.col("doc_id") + 10000
     )
@@ -841,11 +840,8 @@ def funnel_lang_model(docs: DataFrame):
 
 def funnel_benchmark(spark: SparkSession) -> DataFrame:
     """The funnel's 3-item eval benchmark (see _FUNNEL_BENCH).
-    dim_frame (round-15): Arrow LocalRelation in production (the
-    decon probes collect it driver-side with no job), the opaque
-    parallelize RDD under the explain-audit kill switch where the
-    checkpoint-free expanded form re-embeds the decon subtree per
-    consumer (the lang-model rationale, functions/dimframe.py)."""
+    dim_frame (round-15): Arrow LocalRelation (the decon probes
+    collect it driver-side with no job; functions/dimframe.py)."""
     from ..functions.dimframe import dim_frame
 
     return dim_frame(spark, list(_FUNNEL_BENCH), "bench_id int, text string")
@@ -1365,7 +1361,7 @@ def q_corpus_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     # one checkpointed scan feeds the three release branches; the
     # assembled new release feeds two consumers (diff + datasheet) —
     # the funnel's round-9 reuse discipline (round-14 review)
-    docs = lazy_checkpoint(_docs(spark, sf_dir), consumers=3, prefetch=True)
+    docs = lazy_checkpoint(_docs(spark, sf_dir), prefetch=True)
     old = docs.select("doc_id", "text")
     base = docs.filter(F.col("doc_id") % 11 != 0).select(
         "doc_id", F.expr(_DIFF_MOD_SQL).alias("text"), "lang", "source"

@@ -123,7 +123,7 @@ def stream_retractions_to_packed(
                 )
             # the re-pack (an applyInPandas pass) feeds the audit count
             # AND the partition overwrite — compute it once
-            repacked = lazy_checkpoint(repacked, consumers=2)
+            repacked = lazy_checkpoint(repacked)
             # one pass over the (dim-sized) affected slice serves the
             # audit count and the emptied-domain set
             before = {

@@ -42,7 +42,6 @@ SLOW_TESTS = {
     "tests/test_driver_session.py::test_queries_survive_plain_session_and_foreign_tz",
     "tests/test_ivf_stream.py::test_pq_stream_retrain_bumps_generation_and_persists",
     "tests/test_operators.py::test_range_join_grid_matches_naive",
-    "tests/test_explain_audit.py::test_segment_bracket_for_intractable_expanded",
     "tests/test_contamination.py::test_decontaminate_semantic_drops_only_flagged",
     "tests/test_dedup_properties.py::test_paragraph_keep_first_matches_bruteforce",
     "tests/test_dedup_properties.py::test_substring_stats_match_bruteforce",

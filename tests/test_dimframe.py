@@ -1,18 +1,31 @@
 """dim_frame (functions/dimframe.py): the round-15 driver-dim
 representation. Production = Arrow LocalRelation (no Python worker,
-no job per broadcast build); SPARK_GRAFT_NO_INTERNAL_CHECKPOINT=1 =
-the round-13 opaque parallelize LogicalRDD. Values identical either
-way."""
+no job per broadcast build); Arrow conversion off = the opaque
+parallelize LogicalRDD. Values identical either way."""
 
 from __future__ import annotations
 
-import os
-from unittest import mock
+from contextlib import contextmanager, nullcontext
 
 import pytest
 from pyspark.sql import types as T
 
 from open_data_pipelines_spark.functions.dimframe import dim_frame
+
+ARROW = "spark.sql.execution.arrow.pyspark.enabled"
+
+
+@contextmanager
+def _arrow_off(spark):
+    """Switch Arrow conversion off for the block (a runtime conf),
+    restoring the session's value afterwards."""
+    prev = spark.conf.get(ARROW)
+    spark.conf.set(ARROW, "false")
+    try:
+        yield
+    finally:
+        spark.conf.set(ARROW, prev)
+
 
 ROWS = [
     ("a", None, True, 2**40, 1.5),
@@ -33,8 +46,8 @@ def test_production_is_local_relation(spark):
     assert df.schema == spark.createDataFrame([], SCHEMA).schema
 
 
-def test_audit_mode_keeps_opaque_rdd(spark):
-    with mock.patch.dict(os.environ, {"SPARK_GRAFT_NO_INTERNAL_CHECKPOINT": "1"}):
+def test_arrow_off_keeps_opaque_rdd(spark):
+    with _arrow_off(spark):
         df = dim_frame(spark, ROWS, SCHEMA, slices=2)
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "Scan ExistingRDD" in plan
@@ -43,9 +56,9 @@ def test_audit_mode_keeps_opaque_rdd(spark):
 
 def test_values_identical_across_representations(spark):
     prod = dim_frame(spark, ROWS, SCHEMA)
-    with mock.patch.dict(os.environ, {"SPARK_GRAFT_NO_INTERNAL_CHECKPOINT": "1"}):
-        audit = dim_frame(spark, ROWS, SCHEMA)
-    assert _values(prod) == _values(audit)
+    with _arrow_off(spark):
+        rdd = dim_frame(spark, ROWS, SCHEMA)
+    assert _values(prod) == _values(rdd)
     # NULLs stay NULL (the object-dtype pandas path must not coerce
     # None to NaN) and the long survives past double's exact range
     row = {r["s"]: r for r in prod.collect()}
@@ -71,10 +84,9 @@ def test_structtype_schema(spark):
     assert _values(df) == [(1, 1), (2, 1)]
 
 
-@pytest.mark.parametrize("audit", [False, True])
-def test_broadcast_join_values(spark, audit):
-    env = {"SPARK_GRAFT_NO_INTERNAL_CHECKPOINT": "1"} if audit else {}
-    with mock.patch.dict(os.environ, env, clear=False):
+@pytest.mark.parametrize("arrow_off", [False, True])
+def test_broadcast_join_values(spark, arrow_off):
+    with _arrow_off(spark) if arrow_off else nullcontext():
         dim = dim_frame(spark, [("k1", 10), ("k2", 20)], "k string, v int")
     from pyspark.sql import functions as F
 

@@ -1,16 +1,17 @@
-"""Executed-shuffle column of the explain audit (VERDICT r9 task #3).
+"""Shuffle columns of the explain audit.
 
-The audit's plan-text shuffle bracket (`expanded/ckpt`) was too wide
-to audit regressions (minhash 30/2). The `executed` reading counts
-shuffle-map stages that actually ran, from the status store: run <=
-expanded always (an exchange executes at most once per appearance),
-and for substring_dedup — a canonical checkpoint-reusing query, where
-AQE does not elide exchanges — it lies inside the full bracket; the
-total scope (build + run) captures the shuffles that internal
-materializations execute outside either plan text. (Queries where
-AQE elides a planned exchange at runtime legitimately land run BELOW
-ckpt — minmax_norm/impact_score in the committed audit — which is
-the measurement replacing plan-text guesses, not a bug.)
+The audit compiles each query once in production shape and brackets
+its shuffles by plan text: ``ckpt`` (top plan, checkpointed subtrees
+truncated — lower bound) and ``Σ`` (top plan + every reuse
+checkpoint's pre-truncation segment — upper bound). The ``executed``
+reading counts shuffle-map stages that actually ran, from the status
+store. For substring_dedup — a canonical checkpoint-reusing query,
+where AQE does not elide exchanges — run lies inside the bracket, and
+the total scope (build + run) captures the shuffles that internal
+materializations execute outside any plan text. (Queries where AQE
+elides a planned exchange at runtime legitimately land run BELOW
+ckpt — minmax_norm/impact_score in the committed audit — which is the
+measurement replacing plan-text guesses, not a bug.)
 
 Runs the tool as a subprocess because the executed counter needs
 `spark.ui.enabled=true` (a static conf the shared test session pins
@@ -30,10 +31,9 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 def test_executed_shuffles_lie_inside_bracket():
     # substring_dedup is a canonical checkpoint-reusing query: its
     # wins aggregation executes once under lazy_checkpoint while the
-    # expanded plan text re-counts it per consumer (4/2 bracket in the
-    # committed audit). It replaced scd2_merge as the canary in round
-    # 15: the scd2 driver row now runs the single-shuffle twin, which
-    # has no internal checkpoints and therefore a trivial bracket.
+    # top plan hides it behind the checkpoint. It also passes
+    # prefetch=True, so it doubles as the canary that the audit's
+    # executed count sees every shuffle the query runs.
     proc = subprocess.run(
         [
             sys.executable,
@@ -52,57 +52,15 @@ def test_executed_shuffles_lie_inside_bracket():
     assert len(rows) == 1 and rows[0]["query"] == "substring_dedup"
     r = rows[0]
     assert "error" not in r, r
-    expanded, ckpt = r["shuffles"], r["ckpt_shuffles"]
+    sigma, ckpt = r["shuffles"], r["ckpt_shuffles"]
     run, total = r["executed_shuffles"], r["executed_total_shuffles"]
-    # the bracket actually brackets: lower <= executed(run) <= upper
-    assert ckpt <= run <= expanded, (ckpt, run, expanded)
-    # the bracket is non-trivial for this query (internal reuse), and
-    # the run number resolves it strictly below the inflated upper
-    # bound — the whole point of the executed column
-    assert ckpt < expanded
-    assert run < expanded
+    # the bracket is built from real reuse-checkpoint segments
+    assert r["segments"] >= 1
+    # the bracket brackets: lower <= executed(run) <= upper
+    assert ckpt <= run <= sigma, (ckpt, run, sigma)
     # build-phase materializations (the staging checkpoint) execute
     # real shuffles on top of the final action's
     assert total > run
-
-
-def test_segment_bracket_for_intractable_expanded():
-    """Round-15 (VERDICT r14 #5): a query whose monolithic expanded
-    compile blows the budget gets the per-segment bracket instead of
-    an n/a dagger. Forced here by a 0-second budget on substring_dedup
-    (a cheap stand-in with real internal checkpoints — the production
-    target is corpus_funnel, audited the same way at full budget):
-    expanded counts come back finite via collect_checkpoint_segments,
-    with run <= bracket."""
-    env = dict(
-        os.environ,
-        SPARK_GRAFT_AUDIT_EXPANDED_BUDGET="0",
-        SPARK_GRAFT_AUDIT_WORKER_STARTUP="0",
-    )
-    proc = subprocess.run(
-        [
-            sys.executable,
-            os.path.join(REPO, "tools", "explain_audit.py"),
-            "/root/testdata/sf0.001",
-            "--only=substring_dedup",
-            "--json",
-        ],
-        capture_output=True,
-        text=True,
-        timeout=600,
-        cwd=REPO,
-        env=env,
-    )
-    assert proc.returncode == 0, proc.stderr[-2000:]
-    rows = [json.loads(l) for l in proc.stdout.splitlines() if l.startswith("{")]
-    assert len(rows) == 1 and "error" not in rows[0], rows
-    r = rows[0]
-    assert r["expanded_via_segments"] >= 1
-    assert not r["expanded_intractable"]
-    assert isinstance(r["shuffles"], int)
-    # the bracket brackets: sum(segments)+top is an upper bound on run
-    assert r["executed_shuffles"] <= r["shuffles"]
-    assert r["ckpt_shuffles"] <= r["shuffles"]
 
 
 def test_segment_collector_records_subtree_plans(spark):

@@ -8,9 +8,12 @@ serves both."""
 
 from __future__ import annotations
 
+from types import SimpleNamespace
+
 import pytest
 from pyspark.sql import functions as F
 
+from open_data_pipelines_spark.sinks import writers
 from open_data_pipelines_spark.sinks.writers import write_jdbc
 
 PROPS = {"driver": "org.apache.derby.jdbc.EmbeddedDriver"}
@@ -52,7 +55,11 @@ def test_jdbc_parallel_partitioned_write(spark):
     assert back.agg(F.sum("id")).first()[0] == sum(range(10_000))
 
 
-def test_jdbc_bad_url_raises_through_retry(spark):
+def test_jdbc_bad_url_raises_through_retry(spark, monkeypatch):
+    # record the back-off instead of sleeping it (the writer module's
+    # own `time` only, so no other sleeper is affected)
+    sleeps: list[float] = []
+    monkeypatch.setattr(writers, "time", SimpleNamespace(sleep=sleeps.append))
     df = spark.createDataFrame([(1,)], ["id"])
     # match pins the CONNECTION failure (Derby can't open the db at
     # that path) — a bare Exception also passed on any unrelated crash
@@ -64,3 +71,5 @@ def test_jdbc_bad_url_raises_through_retry(spark):
             "t",
             properties=PROPS,
         )
+    # 3 attempts, 3·2ⁿ s between them: two waits before the final raise
+    assert sleeps == [3.0, 6.0]

@@ -192,24 +192,10 @@ def test_plan_shape(docs, model):
     # the FINAL enrichment join (per-doc predictions back onto docs)
     # is big-big by design and may plan as SMJ pre-AQE; the assertion
     # above is the scale-critical one (the model side must broadcast)
-    # round-15 representation contract (functions/dimframe.py): in
-    # production the model frame is an Arrow LocalRelation — broadcast
-    # builds collect driver rows with no job and no Python worker —
-    # while the explain-audit kill switch keeps the round-13 opaque
-    # RDD form (a checkpoint-free composition re-embeds the gate
-    # subtree per consumer; driver-held rows riding every copy were
-    # the 25-minute optimizer-grind hazard)
+    # representation contract (functions/dimframe.py): the model
+    # frame is an Arrow LocalRelation — broadcast builds collect
+    # driver rows with no job and no Python worker
     assert "LocalTableScan" in plan
-    import os
-    from unittest import mock
-
-    with mock.patch.dict(os.environ, {"SPARK_GRAFT_NO_INTERNAL_CHECKPOINT": "1"}):
-        audit_plan = (
-            predict_language(docs, model, "text", "doc_id")
-            ._jdf.queryExecution().executedPlan().toString()
-        )
-    assert "LocalTableScan" not in audit_plan
-    assert "Scan ExistingRDD" in audit_plan
 
 
 def test_ids_only_single_shuffle(spark, docs, model):

@@ -1,9 +1,8 @@
 """Round-16: background prefetch of lazy reuse checkpoints.
 
 The prefetch is an execution-ORDER change only — these tests pin that
-values are identical with prefetch on, off (kill switch), and in
-audit mode (where checkpoints no-op entirely), and that drain joins
-all in-flight materializations.
+values are identical with prefetch on and off (kill switch), and
+that drain joins all in-flight materializations.
 """
 
 from __future__ import annotations
@@ -39,13 +38,6 @@ def test_prefetch_kill_switch(spark, monkeypatch):
     after = caching._prefetch_queue.qsize() if caching._prefetch_queue else 0
     assert after == before  # nothing enqueued
     assert out.count() == 2000
-
-
-def test_prefetch_ignored_in_audit_mode(spark, monkeypatch):
-    monkeypatch.setenv("SPARK_GRAFT_NO_INTERNAL_CHECKPOINT", "1")
-    df = _frame(spark)
-    out = lazy_checkpoint(df, prefetch=True)
-    assert out is df  # no checkpoint, no prefetch
 
 
 def test_drain_prefetch_joins_inflight(spark):

@@ -6,27 +6,31 @@ the checklist from the scale brief (does the filter reach the scan, is
 the dim join broadcast, is there an avoidable shuffle). Writes
 EXPLAIN_AUDIT.md.
 
-Three shuffle readings per query (round-10: the bracket gained the
-executed count the r9 verdict asked for):
+Each query is compiled ONCE in production shape (reuse checkpoints
+on) under ``caching.collect_checkpoint_segments``, then built again
+and RUN once. Three shuffle readings per query:
 
-- **expanded**: exchanges in the plan text compiled with the internal
-  lazy-checkpoint reuse caches disabled — every subtree visible, but a
-  subtree shared by N consumers is counted N times (upper bound).
-- **ckpt**: exchanges in the production-shape plan text — shared
-  subtrees truncate to ``Scan ExistingRDD`` and their internal
-  shuffles are hidden (lower bound).
-- **executed**: shuffle-map stages that actually ran when the
-  production-shape query executed to a noop sink, measured from the
-  Spark status store via the REST API (stages belonging to the
-  query's job group with completed tasks AND shuffle-write output).
-  Each exchange executes its shuffle write at most once regardless of
-  how many plan subtrees reference it, so ``executed <= expanded``;
-  it can fall BELOW the ``ckpt`` lower bound when AQE elides a
-  planned exchange at runtime (minmax_norm, impact_score in the
-  committed audit) or when a shuffle write is entirely empty (then
-  indistinguishable from a result stage). Executed-below-planned is
-  the measurement working as intended — plan text counts intentions,
-  this column counts what ran.
+- **Σ**: exchanges in the top plan plus every reuse checkpoint's
+  compiled subtree, recorded before truncation. Checkpoint boundaries
+  partition the plan, so the sum sees every checkpointed subtree; a
+  subtree reused WITHOUT a checkpoint counts once per appearance
+  (upper bound).
+- **ckpt**: exchanges in the top plan alone — checkpointed subtrees
+  truncate to ``Scan ExistingRDD`` and their internal shuffles are
+  hidden (lower bound).
+- **executed**: shuffle-map stages that actually ran when the query
+  executed to a noop sink, from the Spark status store via the REST
+  API (stages of the query's job group with completed tasks AND
+  shuffle-write output). Each exchange writes its shuffle at most
+  once however many plan subtrees reference it, so ``executed <= Σ``;
+  it can fall BELOW ``ckpt`` when AQE elides a planned exchange at
+  runtime (minmax_norm, impact_score in the committed audit) or when
+  a shuffle write is entirely empty (then indistinguishable from a
+  result stage). Plan text counts intentions; this column counts what
+  ran.
+
+The other columns (joins, sorts, pushdown, scan widths) read from
+the same Σ of top plan and segments.
 
 Usage::
 
@@ -35,20 +39,6 @@ Usage::
 ``--only`` restricts to a comma-separated subset; ``--json`` prints
 one JSON line per query (machine-readable, used by the test) instead
 of writing EXPLAIN_AUDIT.md.
-
-Round 13: the EXPANDED compiles run in a budgeted SUBPROCESS. With
-every reuse checkpoint disabled, a deep-fan-out pipeline's logical
-plan re-embeds its shared subtrees once per consumer, and Catalyst's
-fixed-point rules (PruneFilters et al.) grind over the duplicated
-expression forests — the corpus_funnel row crossed from ~a minute to
-25+ minutes when round 13 folded two more gates in (jstack'd:
-optimizer, not execution). A wedged in-process py4j call cannot be
-interrupted, so the expanded pass streams from a worker process under
-a per-query budget; a query that exceeds it is marked intractable
-(its expanded columns print ``n/a``) and the audit keeps its
-production-shape plan text and executed counts, which are the
-scale-relevant readings anyway. The production pipeline never pays
-this: lazy checkpoints truncate the plan at construction time.
 """
 
 from __future__ import annotations
@@ -61,12 +51,7 @@ import urllib.request
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-# disable the internal lazy-checkpoint reuse caches while auditing: a
-# checkpoint truncates lineage to a Scan ExistingRDD, hiding the
-# subtree's exchanges / pushed filters / scan widths from the plan —
-# the audit must report what EXECUTES (once per subtree), not the
-# truncated top plan (see open_data_pipelines_spark/caching.py)
-os.environ["SPARK_GRAFT_NO_INTERNAL_CHECKPOINT"] = "1"
+from open_data_pipelines_spark.caching import collect_checkpoint_segments  # noqa: E402
 
 
 def summarize(plan: str) -> dict:
@@ -123,8 +108,8 @@ def executed_shuffles(spark, fn, sf_dir: str, group: str) -> tuple[int, int]:
     """(run, total) executed shuffle counts for one query.
 
     ``run`` covers the final noop-sink action only — the shuffles the
-    production-shape plan actually executes. ``run <= expanded``
-    always (an exchange executes at most once per appearance); it
+    production-shape plan actually executes. ``run <= Σ`` always
+    (an exchange executes at most once per appearance); it
     usually also sits at or above ``ckpt``, but AQE can land it BELOW
     the plan-text lower bound by eliding a planned exchange at
     runtime (empty-relation/broadcast replans — the committed audit
@@ -135,7 +120,7 @@ def executed_shuffles(spark, fn, sf_dir: str, group: str) -> tuple[int, int]:
     guesses with what ran. ``total`` adds the query's BUILD phase:
     operators that internally materialize (eager checkpoints,
     model-training collects like the corpus funnel's LM fit) execute
-    real shuffles before the final action that neither plan text can
+    real shuffles before the final action that no plan text can
     show — ``total`` is the number a regression audit should watch."""
     sc = spark.sparkContext
     sc.setJobGroup(f"{group}.build", group)
@@ -153,167 +138,24 @@ def executed_shuffles(spark, fn, sf_dir: str, group: str) -> tuple[int, int]:
     return run, run + build
 
 
-def _expanded_worker(sf_dir: str, names: list[str]) -> None:
-    """``--expanded-worker`` mode: compile ONLY the expanded plans
-    (the kill-switch env var is set at module import and never
-    toggled here) and stream one prefixed JSON line per query. Runs
-    in a dedicated subprocess so the parent can enforce a per-query
-    compile budget — a wedged py4j call cannot be interrupted
-    in-process."""
-    import __spark_entry__ as e
-    from open_data_pipelines_spark.session import get_spark
-
-    spark = get_spark("explain_audit_expanded")
-    spark.sparkContext.setLogLevel("ERROR")
-    registry = e.queries()
-    for name in names:
-        plan = (
-            registry[name](spark, sf_dir)._jdf.queryExecution().executedPlan().toString()
-        )
-        print("EXPANDED " + json.dumps({"query": name, **summarize(plan)}), flush=True)
-
-
-#: per-query expanded-compile budget (sec); the worker's first query
-#: gets extra headroom for the JVM start
-EXPANDED_BUDGET = int(os.environ.get("SPARK_GRAFT_AUDIT_EXPANDED_BUDGET", "300"))
-_WORKER_STARTUP = int(os.environ.get("SPARK_GRAFT_AUDIT_WORKER_STARTUP", "90"))
-
-
-def expanded_summaries(sf_dir: str, names: list[str]) -> dict[str, dict | None]:
-    """Expanded-plan summaries per query via the budgeted worker.
-    ``None`` marks a query whose expanded compile exceeded
-    EXPANDED_BUDGET (worker killed and restarted on the remainder) or
-    crashed."""
-    import queue
-    import subprocess
-    import threading
-
-    out: dict[str, dict | None] = {}
-    remaining = list(names)
-    while remaining:
-        proc = subprocess.Popen(
-            [
-                sys.executable,
-                os.path.abspath(__file__),
-                sf_dir,
-                "--expanded-worker",
-                ",".join(remaining),
-            ],
-            stdout=subprocess.PIPE,
-            stderr=subprocess.DEVNULL,
-            text=True,
-            cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        )
-        lines: "queue.Queue[str | None]" = queue.Queue()
-
-        def pump(p=proc, q=lines):
-            for raw in p.stdout:
-                if raw.startswith("EXPANDED "):
-                    q.put(raw[len("EXPANDED "):])
-            q.put(None)
-
-        threading.Thread(target=pump, daemon=True).start()
-        first = True
-        worker_died = False
-        for name in list(remaining):
-            try:
-                line = lines.get(
-                    timeout=EXPANDED_BUDGET + (_WORKER_STARTUP if first else 0)
-                )
-            except queue.Empty:
-                line = False
-            first = False
-            if line is False:  # budget exceeded: kill, mark, restart
-                proc.kill()
-                out[name] = None
-                print(
-                    f"expanded compile budget exceeded: {name} "
-                    f"(> {EXPANDED_BUDGET}s; marked intractable)",
-                    file=sys.stderr,
-                )
-                break
-            if line is None:  # worker crashed on this query
-                worker_died = True
-                out[name] = None
-                print(f"expanded worker died on: {name}", file=sys.stderr)
-                break
-            d = json.loads(line)
-            assert d.pop("query") == name, name
-            out[name] = d
-        else:
-            proc.kill()
-            break  # every remaining query answered
-        if not worker_died:
-            proc.kill()
-        remaining = [n for n in names if n not in out]
-    return out
-
-
-def audit_query(spark, fn, sf_dir: str, name: str, expanded: dict | None) -> dict:
-    """One registry row: the (pre-computed, possibly intractable)
-    expanded summary + the production-shape plan summary + the
-    executed shuffle counts. The session runs with reuse checkpoints
-    ENABLED (production shape) throughout.
-
-    Queries whose monolithic expanded compile blew the budget get the
-    per-SEGMENT bracket instead (round 15, VERDICT r14 #5): the
-    production-shape construction runs under
-    ``caching.collect_checkpoint_segments``, which records each reuse
-    checkpoint's compiled subtree before truncation. Checkpoint
-    boundaries partition the plan, so summing the segments plus the
-    final top plan gives the same once-per-consumer upper bound the
-    expanded compile would — in seconds. The bracket bounds ``run``
-    (the final action); ``total`` additionally counts build-phase
-    driver actions (model-training aggregations) that neither
-    expanded form ever covered."""
-    segments: list | None = None
-    if expanded is None:
-        from open_data_pipelines_spark.caching import collect_checkpoint_segments
-
-        with collect_checkpoint_segments() as segs:
-            top_plan = fn(spark, sf_dir)._jdf.queryExecution().executedPlan().toString()
-        segments = list(segs)
-    else:
+def audit_query(spark, fn, sf_dir: str, name: str) -> dict:
+    """One registry row: the Σ summary (top plan + every reuse
+    checkpoint's pre-truncation segment), the top plan's own shuffle
+    count, and the executed shuffle counts. The Σ bounds ``run`` (the
+    final action); ``total`` additionally counts build-phase driver
+    actions (model-training aggregations) that no plan text covers."""
+    with collect_checkpoint_segments() as segs:
         top_plan = fn(spark, sf_dir)._jdf.queryExecution().executedPlan().toString()
-    ckpt_summary = summarize(top_plan)
+    top = summarize(top_plan)
+    parts = [top, *(summarize(p) for p in segs)]
     # fresh build for the run: the compile above may have primed
     # lazy-checkpoint handles whose blocks would hide work
     executed, executed_total = executed_shuffles(spark, fn, sf_dir, f"audit_{name}")
     spark.catalog.clearCache()
-    if expanded is None and segments:
-        seg_sums = [summarize(p) for p in segments]
-        s = {
-            k: ckpt_summary[k] + sum(ss[k] for ss in seg_sums)
-            for k in (
-                "broadcast_joins",
-                "sortmerge_joins",
-                "shuffle_hash_joins",
-                "shuffles",
-                "pushed_filters",
-                "global_sorts",
-            )
-        }
-        s["scan_widths"] = ckpt_summary["scan_widths"] + [
-            w for ss in seg_sums for w in ss["scan_widths"]
-        ]
-        s["expanded_intractable"] = False
-        s["expanded_via_segments"] = len(segments)
-    elif expanded is None:
-        # no reuse checkpoints were reached, so there is no bracket to
-        # sum; a zero-segment query whose expanded compile also failed
-        # (worker crash — a budget blow is impossible here, its plan IS
-        # the production plan that just compiled) keeps the honest
-        # dagger instead of masquerading as a real expanded number
-        # (round-15 review: the bracket path had made † unreachable)
-        s = dict(ckpt_summary)
-        s["shuffles"] = None
-        s["expanded_intractable"] = True
-        s["expanded_via_segments"] = 0
-    else:
-        s = dict(expanded)
-        s["expanded_intractable"] = False
-        s["expanded_via_segments"] = 0
-    s["ckpt_shuffles"] = ckpt_summary["shuffles"]
+    s = {k: sum(p[k] for p in parts) for k in top if k != "scan_widths"}
+    s["scan_widths"] = [w for p in parts for w in p["scan_widths"]]
+    s["segments"] = len(segs)
+    s["ckpt_shuffles"] = top["shuffles"]
     s["executed_shuffles"] = executed
     s["executed_total_shuffles"] = executed_total
     return s
@@ -330,21 +172,15 @@ def main() -> None:
         help="comma-separated query-name subset (both --only=a,b and --only a,b work)",
     )
     ap.add_argument("--json", action="store_true", dest="as_json")
-    ap.add_argument(
-        "--expanded-worker",
-        default=None,
-        help="internal: compile expanded plans for these names and stream JSON",
-    )
     ns = ap.parse_args()
     sf_dir = ns.sf_dir
     only: set[str] | None = set(ns.only.split(",")) if ns.only else None
     as_json = ns.as_json
     if not os.path.isdir(sf_dir):
         ap.error(f"sf_dir {sf_dir!r} is not a directory")
-
-    if ns.expanded_worker is not None:
-        _expanded_worker(sf_dir, ns.expanded_worker.split(","))
-        return
+    # prefetch jobs run on a background thread outside the query's job
+    # group, so the executed counter would miss their shuffles
+    os.environ["SPARK_GRAFT_NO_CKPT_PREFETCH"] = "1"
 
     import __spark_entry__ as e
     from open_data_pipelines_spark.session import get_spark
@@ -354,12 +190,7 @@ def main() -> None:
         unknown = only - set(registry)
         if unknown:
             ap.error(f"--only names not in the query registry: {sorted(unknown)}")
-
     ordered = [n for n in registry if only is None or n in only]
-    # expanded compiles first, from the budgeted worker subprocess —
-    # the parent session then runs only production-shape work
-    expanded = expanded_summaries(sf_dir, ordered)
-    del os.environ["SPARK_GRAFT_NO_INTERNAL_CHECKPOINT"]
 
     # UI on: the executed-shuffle counter reads the status store REST
     # API (stage shuffle-write metrics are not exposed to PySpark's
@@ -374,55 +205,38 @@ def main() -> None:
         "(local sizes — join strategy picks differ at cluster scale; the",
         "point is that dims broadcast, filters push, scans prune).",
         "",
-        "Every query is compiled TWICE and then RUN once: expanded",
-        "(internal lazy-checkpoint reuse caches disabled via",
-        "`SPARK_GRAFT_NO_INTERNAL_CHECKPOINT=1` — all subtree",
-        "scans/filters/exchanges visible, but a subtree shared by N",
-        "consumers is counted N times) and checkpointed (production",
-        "shape — shared subtrees truncate to `Scan ExistingRDD`, so",
-        "their internal shuffles are hidden). The shuffles column",
-        "shows `expanded/ckpt`: the PLANNED counts (expanded is the",
-        "upper bound; they coincide for queries without internal",
-        "reuse). The `executed` column is what actually RAN:",
-        "shuffle-map stages (completed tasks + shuffle-write output,",
-        "read from the status store) when the production-shape plan",
-        "executed to a noop sink — shown as `run(total)`, where",
-        "`total` adds the query's build phase (eager checkpoints,",
-        "model-training collects) that executes real shuffles neither",
-        "plan text can show. `run <= expanded` always; AQE can land it",
-        "below `ckpt` too by eliding a planned exchange at runtime",
-        "(minmax_norm, impact_score) — executed-below-planned is the",
-        "measurement working, not an error. `total` is the number a",
-        "regression audit should watch. The other columns read from",
-        "the expanded plan, where nothing is hidden. Expanded compiles",
-        "run in a budgeted worker subprocess (round 13): a checkpoint-",
-        "free deep-fan-out plan can grind Catalyst for tens of minutes",
-        "(an audit-mode artifact — production plans truncate at their",
-        "checkpoints). A query exceeding the budget gets the",
-        "per-SEGMENT \u03a3 bracket instead (each reuse checkpoint's",
-        "compiled subtree, recorded before truncation, summed with the",
-        "top plan — same once-per-consumer upper-bound semantics); only",
-        "a query with NO bracket (worker crash, zero segments) keeps",
-        "production-shape columns and is marked †.",
+        "Every query is compiled ONCE in production shape and then RUN",
+        "once. While it compiles, each reuse checkpoint records its",
+        "subtree's compiled plan before truncation",
+        "(`caching.collect_checkpoint_segments`). The shuffles column",
+        "shows `Σ/ckpt`: `ckpt` counts the top plan alone, where",
+        "checkpointed subtrees truncate to `Scan ExistingRDD` (lower",
+        "bound); `Σ` adds every recorded segment, and a subtree reused",
+        "without a checkpoint counts once per appearance (upper bound).",
+        "`segments` is the number of segments summed. The `executed`",
+        "column is what actually RAN: shuffle-map stages (completed",
+        "tasks + shuffle-write output, read from the status store) when",
+        "the query executed to a noop sink — shown as `run(total)`,",
+        "where `total` adds the query's build phase (eager checkpoints,",
+        "model-training collects) that executes real shuffles no plan",
+        "text shows. `run <= Σ` always; AQE can land it below `ckpt`",
+        "too by eliding a planned exchange at runtime — executed-below-",
+        "planned is the measurement working, not an error. `total` is",
+        "the number a regression audit should watch. The other columns",
+        "read from the same Σ of top plan and segments.",
         "",
-        "| query | broadcast | sort-merge | shuffle-hash | shuffles | executed | global sorts | pushed filters | scan widths |",
-        "|---|---|---|---|---|---|---|---|---|",
+        "| query | broadcast | sort-merge | shuffle-hash | shuffles Σ/ckpt | segments | executed | global sorts | pushed filters | scan widths |",
+        "|---|---|---|---|---|---|---|---|---|---|",
     ]
-    results: dict[str, dict] = {}
+    audited = 0
     for name in ordered:
-        fn = registry[name]
         try:
-            s = audit_query(spark, fn, sf_dir, name, expanded.get(name))
-            results[name] = s
-            exp_shuffles = (
-                "n/a" if s["shuffles"] is None else str(s["shuffles"])
-            )
-            if s.get("expanded_via_segments"):
-                exp_shuffles = f"\u03a3{s['shuffles']}"
-            marker = "†" if s.get("expanded_intractable") else ""
+            s = audit_query(spark, registry[name], sf_dir, name)
+            audited += 1
             lines.append(
-                f"| {name}{marker} | {s['broadcast_joins']} | {s['sortmerge_joins']} | "
-                f"{s['shuffle_hash_joins']} | {exp_shuffles}/{s['ckpt_shuffles']} | "
+                f"| {name} | {s['broadcast_joins']} | {s['sortmerge_joins']} | "
+                f"{s['shuffle_hash_joins']} | {s['shuffles']}/{s['ckpt_shuffles']} | "
+                f"{s['segments']} | "
                 f"{s['executed_shuffles']}({s['executed_total_shuffles']}) | "
                 f"{s['global_sorts']} | "
                 f"{s['pushed_filters']} | {s['scan_widths']} |"
@@ -430,41 +244,15 @@ def main() -> None:
             if as_json:
                 print(json.dumps({"query": name, **s}))
         except Exception as ex:  # noqa: BLE001
-            lines.append(f"| {name} | ERROR: {str(ex)[:60]} | | | | | | | |")
+            lines.append(f"| {name} | ERROR: {str(ex)[:60]} | | | | | | | | |")
             if as_json:
                 print(json.dumps({"query": name, "error": str(ex)[:200]}))
-    if any(r.get("expanded_via_segments") for r in results.values()):
-        lines.append("")
-        lines.append(
-            "\u03a3 expanded counts computed as the per-SEGMENT bracket "
-            "(round 15): the monolithic checkpoint-free compile exceeds "
-            f"the {EXPANDED_BUDGET}s budget, so each reuse checkpoint's "
-            "compiled subtree is recorded before truncation "
-            "(caching.collect_checkpoint_segments) and summed with the "
-            "final top plan. Checkpoint boundaries partition the plan, so "
-            "the sum carries the same once-per-consumer upper-bound "
-            "semantics as the expanded compile; it bounds `run` (build-"
-            "phase driver actions were outside the expanded plan in both "
-            "forms — `total` is the regression number)."
-        )
-    if any(r.get("expanded_intractable") for r in results.values()):
-        lines.append("")
-        lines.append(
-            "† expanded compile exceeded the "
-            f"{EXPANDED_BUDGET}s budget (checkpoint-free plan re-embeds "
-            "shared subtrees once per consumer; Catalyst's fixed-point "
-            "rules grind over the duplicated forest — an audit-mode "
-            "artifact, never paid by the production pipeline, whose "
-            "checkpoints truncate at construction). Columns for these "
-            "rows read from the production-shape plan; the executed "
-            "counts are measured as usual."
-        )
 
     if not as_json:
         out = "EXPLAIN_AUDIT.md"
         with open(out, "w") as fh:
             fh.write("\n".join(lines) + "\n")
-        print(f"wrote {out} ({len(results)} queries)")
+        print(f"wrote {out} ({audited} queries)")
 
 
 if __name__ == "__main__":

@@ -1702,14 +1702,6 @@ def relational_scale_scenario(factors=(1, 4, 16)) -> None:
     import __spark_entry__ as e
     from tools.explain_audit import executed_shuffles
 
-    # importing tools.explain_audit sets SPARK_GRAFT_NO_INTERNAL_CHECKPOINT=1
-    # as a module-body side effect (its own main() deletes it before the
-    # production-shape phase). Left set, every lazy_checkpoint becomes a
-    # no-op and this scenario would measure the checkpoint-FREE plan
-    # shape — round-15 review caught exactly that in the first recorded
-    # scd2_merge numbers (8 executed shuffles vs the production 2).
-    os.environ.pop("SPARK_GRAFT_NO_INTERNAL_CHECKPOINT", None)
-
     from open_data_pipelines_spark.session import get_spark
 
     # dominant fact table per query: the per-row denominator
@@ -1828,10 +1820,6 @@ def _task_spread(spark, group: str) -> dict:
     import urllib.request
 
     from tools.explain_audit import _rest
-
-    # same env-leak guard as relational_scale_scenario (module-body
-    # side effect of the import)
-    os.environ.pop("SPARK_GRAFT_NO_INTERNAL_CHECKPOINT", None)
 
     stage_ids: set[int] = set()
     for job in _rest(spark, "jobs"):
