@@ -27,8 +27,10 @@ Re-expresses the reference's Section 58 SCD2 machinery
   single-partition stage, one tiny driver action.
 
 The implementation is a pure join-based rewrite over immutable
-storage (oracle-checkable, no Delta dependency): the Delta MERGE
-variant is a drop-in for environments that have it.
+storage (oracle-checkable, no Delta dependency): each merge is one
+full-outer join of the dimension with the deduped staging batch plus
+a row-local explode, and emits the whole new snapshot. The Delta
+MERGE variant is a drop-in for environments that have it.
 """
 
 from __future__ import annotations
@@ -38,7 +40,6 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..caching import lazy_checkpoint
 from ..functions.exprmemo import memo_column
 from ..functions.hashing import record_hash
 from .dedup import top1_per_key
@@ -73,10 +74,9 @@ def _latest_per_entity(
         )
         return top1_per_key_agg(staging, [entity_key], order)
     order = [F.col(event_time).desc()] + [F.col(t).desc() for t in tiebreakers]
-    # default spread=False: staging slices are dim-to-moderate frames
-    # behind reuse checkpoints; the narrow-input spread's extra
-    # exchange measured +0.15 s against a ~0.1 s single-task window
-    # (round-15 interleaved A/B)
+    # default spread=False: staging slices are dim-to-moderate frames;
+    # the narrow-input spread's extra exchange measured +0.15 s against
+    # a ~0.1 s single-task window (round-15 interleaved A/B)
     return top1_per_key(staging, [entity_key], order)
 
 
@@ -120,77 +120,62 @@ def scd2_merge(
     algebraic ``max_by`` aggregation (see :func:`_latest_per_entity`);
     value-identical, structurally skew-immune.
 
-    Plan shape (round 8: the union branches used to re-run their
-    shared subtrees — 9 shuffles in EXPLAIN_AUDIT): ``inc`` (consumed
-    by the change-detection join AND the brand-new anti-join) and the
-    joined frame ``j`` (consumed by THREE union branches) are lazily
-    local-checkpointed, so the staging dedup window and the wide join
-    each execute once; blocks are reclaimed when the result frame is
-    GC'd (repo caching convention — no clearCache() obligation leaks
-    to the caller, incl. the per-batch streaming wrapper).
+    Plan shape: ONE full-outer join of the whole dimension (history
+    and current rows alike) with the deduped staging frame on the
+    entity key, then a row-local explode. Each joined row emits:
+
+    - a current row whose staged event is strictly newer and changed
+      (the I4 guard) -> [closed-out row, new version];
+    - any other dimension row, every history row included -> [itself];
+    - a staging-only row (brand-new entity) -> [new version].
+
+    Null keys never match, so a null-key dimension row passes through
+    and a null-key staged row is inserted, as the anti-join form did.
+    The output is partitioned by the join's (AQE-coalesced) exchange,
+    so a snapshot's file count is bounded by
+    ``spark.sql.shuffle.partitions`` rather than growing with every
+    rewrite. The cost at scale is one dimension-sized exchange per
+    merge — the same order as the full-snapshot write that follows it.
     """
-    inc = (
-        _latest_per_entity(staging, entity_key, event_time, tiebreakers, dedup_via)
-        .select(
-            F.col(entity_key).alias("__k"),
-            *[F.col(c).alias(f"__{c}") for c in attr_cols],
-            F.col(event_time).alias("__t"),
-            record_hash(*hash_cols).alias("__h"),
-        )
+    inc = _latest_per_entity(
+        staging, entity_key, event_time, tiebreakers, dedup_via
+    ).select(
+        F.col(entity_key).alias("__k"),
+        *[F.col(c).alias(f"__{c}") for c in attr_cols],
+        F.col(event_time).alias("__t"),
+        record_hash(*hash_cols).alias("__h"),
     )
-    inc = lazy_checkpoint(inc)
+    marked = dim.withColumn("__in_dim", F.lit(True))
+    j = marked.join(inc, marked[entity_key] == inc["__k"], "full_outer")
 
-    current = dim.filter(F.col("is_current"))
-    history = dim.filter(~F.col("is_current"))
-
-    j = lazy_checkpoint(
-        current.join(inc, current[entity_key] == inc["__k"], "left")
+    # I4 guard: strictly newer AND changed, against the current row only
+    is_changed = (
+        F.col("is_current")
+        & F.col("__k").isNotNull()
+        & (F.col("__t") > F.col("event_time"))
+        & (F.col("__h") != F.col("record_hash"))
     )
+    new_version = {
+        entity_key: F.col("__k"),
+        **{c: F.col(f"__{c}") for c in attr_cols},
+        "event_time": F.col("__t"),
+        "valid_from": F.col("__t"),
+        "valid_to": F.lit(SENTINEL_TS).cast("timestamp"),
+        "is_current": F.lit(True),
+        "record_hash": F.col("__h"),
+    }
+    kept = {c: F.col(c) for c in dim.columns}
+    closed_out = {**kept, "valid_to": F.col("__t"), "is_current": F.lit(False)}
 
-    # I4 guard: strictly newer AND changed
-    is_changed = F.col("__k").isNotNull() & (F.col("__t") > F.col("event_time")) & (
-        F.col("__h") != F.col("record_hash")
+    def row(fields: dict) -> Column:
+        return F.struct(*[fields[c].alias(c) for c in dim.columns])
+
+    rows = (
+        F.when(F.col("__in_dim").isNull(), F.array(row(new_version)))
+        .when(is_changed, F.array(row(closed_out), row(new_version)))
+        .otherwise(F.array(row(kept)))
     )
-
-    untouched_current = j.filter(~F.coalesce(is_changed, F.lit(False))).select(dim.columns)
-
-    closed_out = (
-        j.filter(is_changed)
-        .withColumn("valid_to", F.col("__t"))
-        .withColumn("is_current", F.lit(False))
-        .select(dim.columns)
-    )
-
-    new_versions = j.filter(is_changed).select(
-        F.col("__k").alias(entity_key),
-        *[F.col(f"__{c}").alias(c) for c in attr_cols],
-        F.col("__t").alias("event_time"),
-        F.col("__t").alias("valid_from"),
-        F.lit(SENTINEL_TS).cast("timestamp").alias("valid_to"),
-        F.lit(True).alias("is_current"),
-        F.col("__h").alias("record_hash"),
-    )
-
-    dim_keys = dim.select(F.col(entity_key).alias("__dk")).distinct()
-    brand_new = (
-        inc.join(dim_keys, inc["__k"] == dim_keys["__dk"], "left_anti")
-        .select(
-            F.col("__k").alias(entity_key),
-            *[F.col(f"__{c}").alias(c) for c in attr_cols],
-            F.col("__t").alias("event_time"),
-            F.col("__t").alias("valid_from"),
-            F.lit(SENTINEL_TS).cast("timestamp").alias("valid_to"),
-            F.lit(True).alias("is_current"),
-            F.col("__h").alias("record_hash"),
-        )
-    )
-
-    return (
-        history.unionByName(untouched_current)
-        .unionByName(closed_out)
-        .unionByName(new_versions)
-        .unionByName(brand_new)
-    )
+    return j.select(F.explode(rows).alias("__r")).select("__r.*")
 
 
 def scd2_two_batch_single_shuffle(

@@ -90,10 +90,7 @@ def run_monthly_ingest(
             .withColumn("date_time_processed", F.current_timestamp())
         )
 
-        write_month_partition(silver, warehouse_path)
-        meta.rows_processed = spark.read.parquet(warehouse_path).filter(
-            (F.col("year") == cfg.year) & (F.col("month") == cfg.month)
-        ).count()
+        meta.rows_processed = write_month_partition(silver, warehouse_path)
         return silver
 
 

@@ -32,9 +32,8 @@ def q_scd2_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     # both batches come from ONE source split by a row-local predicate,
     # which is exactly the case scd2_two_batch_single_shuffle exists
     # for. One hash aggregation (two conditional struct-maxes, map-side
-    # combined) replaces the generic path's two dedup windows + change
-    # join + brand-new anti-join (4 keyed shuffles + 3 reuse
-    # checkpoints -> 1 shuffle, 0 checkpoints). Row-identical to
+    # combined) replaces the generic path's two dedup windows + the
+    # full-outer merge join. Row-identical to
     # scd2_initial_load + scd2_merge by construction — pinned by
     # tests/test_scd2_optimized.py and by this row's DuckDB oracle,
     # which still mirrors the generic window+join algebra.

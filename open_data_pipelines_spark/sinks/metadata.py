@@ -19,6 +19,8 @@ from datetime import datetime, timezone
 from pyspark.sql import SparkSession
 from pyspark.sql import types as T
 
+from ..functions.dimframe import dim_frame
+
 ERROR_TRUNCATE = 1000  # metadata_logger.py:104
 
 LOG_SCHEMA = T.StructType(
@@ -101,7 +103,9 @@ class MetadataLogger:
             "additional_info": json.dumps(self.extras, sort_keys=True) if self.extras else None,
         }
         (
-            self.spark.createDataFrame([row], LOG_SCHEMA)
+            # driver-side LocalRelation: one task, so one part file per
+            # logged run (a parallelized list spreads over every core)
+            dim_frame(self.spark, [row], LOG_SCHEMA)
             .write.mode("append")
             .parquet(self.log_path)
         )

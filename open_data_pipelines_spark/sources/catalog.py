@@ -482,12 +482,7 @@ def run_source(
             # dynamic month overwrite -> idempotent re-runs (reference:
             # street_manager.py:202-265 rebuilds the month table,
             # motherduck.py:69-71 CREATE OR REPLACE)
-            write_month_partition(silver, warehouse_path)
-            meta.rows_processed = (
-                spark.read.parquet(warehouse_path)
-                .filter((F.col("year") == year) & (F.col("month") == month))
-                .count()
-            )
+            meta.rows_processed = write_month_partition(silver, warehouse_path)
             return silver
 
     # the remaining kinds share one epilogue: bronze frame(s) ->
@@ -541,12 +536,7 @@ def run_source(
                 .withColumn("date_time_processed", F.current_timestamp())
             )
             target = warehouse_path if table is None else f"{warehouse_path.rstrip('/')}/{table}"
-            write_month_partition(silver, target)
-            total += (
-                spark.read.parquet(target)
-                .filter((F.col("year") == year) & (F.col("month") == month))
-                .count()
-            )
+            total += write_month_partition(silver, target)
         meta.rows_processed = total
         return out
 
@@ -601,16 +591,7 @@ def run_source_backfill(
             .withColumn("month", F.month(ts))
             .withColumn("date_time_processed", F.current_timestamp())
         )
-        write_month_partition(silver, warehouse_path)
-        meta.rows_processed = (
-            spark.read.parquet(warehouse_path)
-            .join(
-                silver.select("year", "month").distinct(),
-                ["year", "month"],
-                "left_semi",
-            )
-            .count()
-        )
+        meta.rows_processed = write_month_partition(silver, warehouse_path)
         return silver
 
 
@@ -660,10 +641,5 @@ def _ingest_csv_files(
             .withColumn("month", F.lit(mcfg.month))
             .withColumn("date_time_processed", F.current_timestamp())
         )
-        write_month_partition(silver, warehouse_path)
-        meta.rows_processed = (
-            spark.read.parquet(warehouse_path)
-            .filter((F.col("year") == mcfg.year) & (F.col("month") == mcfg.month))
-            .count()
-        )
+        meta.rows_processed = write_month_partition(silver, warehouse_path)
         return silver

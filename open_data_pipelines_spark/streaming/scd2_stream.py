@@ -25,10 +25,13 @@ plain-parquet analog of what Delta/Iceberg provide transactionally
 versions double as time travel and are pruned with
 :func:`prune_snapshots`.
 
-Scale: the merge is the batch operator's single wide shuffle on the
-entity key per micro-batch; snapshot size is the dimension (small
-relative to facts, by definition), so full-snapshot rewrite per batch
-is the standard SCD2 trade until a transactional format takes over.
+Scale: the merge is the batch operator's one full-outer join on the
+entity key per micro-batch, so each snapshot is written by that
+join's exchange and holds at most ``spark.sql.shuffle.partitions``
+files however many batches came before. Snapshot size is the
+dimension (small relative to facts, by definition), so full-snapshot
+rewrite per batch is the standard SCD2 trade until a transactional
+format takes over.
 """
 
 from __future__ import annotations

@@ -75,6 +75,50 @@ def test_scd2_merge_idempotent_when_no_changes(spark):
     assert out.filter(F.col("is_current")).count() == 1
 
 
+def test_scd2_three_batch_lifecycle_keeps_history_once(spark):
+    """Batch 3 changes a key that already has a history row: the
+    history row must pass through exactly once and unchanged, beside
+    exactly one new closed-out row and one new current row. (A merge
+    that joins the whole dimension with staging meets history x
+    staging pairs only from the third batch on.)"""
+    args = ("entity", "ts", ["status"], ["status"], ["event_ref"])
+    dim1 = scd2_initial_load(
+        _staging(spark, [("a", "open", T0, 1), ("b", "open", T0, 2)]), *args
+    )
+    dim2 = scd2_merge(
+        dim1, _staging(spark, [("a", "active", T1, 3), ("b", "open", T1, 4)]), *args
+    )
+    dim3 = scd2_merge(
+        dim2,
+        _staging(spark, [("a", "closed", T2, 5), ("c", "open", T2, 6)]),
+        *args,
+    )
+
+    def canon(df):
+        return sorted(
+            (r["entity"], r["status"], r["event_time"], r["valid_from"],
+             r["valid_to"], r["is_current"], r["record_hash"])
+            for r in df.collect()
+        )
+
+    before, after = canon(dim2), canon(dim3)
+    history2 = [r for r in before if r[0] == "a" and not r[5]]
+    assert len(history2) == 1
+    # the pre-existing history row survives exactly once, unchanged
+    assert after.count(history2[0]) == 1
+    a_rows = [r for r in after if r[0] == "a"]
+    assert len(a_rows) == 3
+    closed = [r for r in a_rows if not r[5] and r != history2[0]]
+    current = [r for r in a_rows if r[5]]
+    assert len(closed) == 1 and len(current) == 1
+    assert closed[0][1:5] == ("active", T1, T1, T2)
+    assert current[0][1:5] == ("closed", T2, T2, dt.datetime(9999, 12, 31))
+    # untouched and brand-new entities
+    assert [r[1] for r in after if r[0] == "b"] == ["open"]
+    assert [(r[1], r[5]) for r in after if r[0] == "c"] == [("open", True)]
+    assert len(after) == 5
+
+
 def test_surrogate_keys_scaled_matches_parity_no_single_partition(spark):
     """Scale-mode surrogate keys: identical 1..N numbering to the
     parity-mode global window, with no single-partition exchange in

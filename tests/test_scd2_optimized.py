@@ -5,7 +5,6 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from open_data_pipelines_spark import operators
 from open_data_pipelines_spark.operators.scd2 import (
     scd2_initial_load,
     scd2_merge,
@@ -35,12 +34,7 @@ def _canon(df):
     )
 
 
-def test_single_shuffle_scd2_matches_generic(spark, monkeypatch):
-    # disable the merge's internal lazy checkpoints for the PLAN
-    # assertion below: a checkpoint truncates the generic path's
-    # lineage to Scan ExistingRDD, hiding its shuffles from the plan
-    # text and voiding the relative comparison
-    monkeypatch.setattr(operators.scd2, "lazy_checkpoint", lambda df, **kw: df)
+def test_single_shuffle_scd2_matches_generic(spark):
     events = load_tables(spark, SF_SMOKE, register_views=False)["events"]
     batch1 = events.filter(F.col("event_id") % 2 == 0)
     batch2 = events.filter(F.col("event_id") % 2 == 1)

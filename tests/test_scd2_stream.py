@@ -227,3 +227,35 @@ def test_prune_keeps_newest(spark, tmp_path):
     _, v = latest_snapshot(spark, root)
     assert v == 4
     assert sorted(os.listdir(root)) == ["v00000003", "v00000004"]
+
+
+def test_snapshot_file_count_stays_bounded(spark, tmp_path):
+    """Every merge rewrites the whole snapshot; its file count must be
+    set by the merge's own exchange, not inherited from the previous
+    snapshot's files plus each new branch's partitions (a union-shaped
+    merge grew the snapshots 1, 4, 7, ... files)."""
+    landing = str(tmp_path / "landing")
+    months = [dt.datetime(2024, m, 1) for m in range(1, 6)]
+    schema = None
+    for i, ts in enumerate(months):
+        # each batch changes every existing entity and adds one new one
+        rows = [(f"e{k}", f"s{i}", ts, 10 * i + k) for k in range(i + 2)]
+        df = spark.createDataFrame(rows, COLS)
+        schema = df.schema
+        df.coalesce(1).write.mode("append").parquet(landing)
+        time.sleep(1.1)  # file mtime orders the micro-batches
+
+    stream = spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(landing)
+    root = str(tmp_path / "dim")
+    stream_scd2(stream, root, str(tmp_path / "ckpt"), **ARGS)
+
+    limit = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    versions = sorted(os.listdir(root))
+    assert len(versions) == len(months)
+    for name in versions:
+        parts = [f for f in os.listdir(os.path.join(root, name)) if f.startswith("part-")]
+        assert 1 <= len(parts) <= limit, (name, len(parts))
+    got, _ = latest_snapshot(spark, root)
+    # 5+5+4+3+2+1 versions of e0..e5, one current row each
+    assert got.count() == 20
+    assert got.filter(F.col("is_current")).count() == 6

@@ -1,5 +1,7 @@
 from __future__ import annotations
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -25,10 +27,10 @@ def test_month_partition_overwrite_idempotent(spark, tmp_path):
     df1 = spark.createDataFrame(
         [(1, 2024, 1, "a"), (2, 2024, 2, "b")], ["id", "year", "month", "v"]
     )
-    write_month_partition(df1, path)
+    assert write_month_partition(df1, path) == 2
     # reload month 1 with different content; month 2 must survive (I2)
     df2 = spark.createDataFrame([(9, 2024, 1, "a2")], ["id", "year", "month", "v"])
-    write_month_partition(df2, path)
+    assert write_month_partition(df2, path) == 1
     got = {(r["year"], r["month"]): r["id"] for r in spark.read.parquet(path).collect()}
     assert got == {(2024, 1): 9, (2024, 2): 2}
     # partition pruning still sees the surviving month
@@ -76,6 +78,9 @@ def test_metadata_logger_success_and_failure(spark, tmp_path):
     assert by_status["FAILED"]["error_message"] is not None
     assert len(by_status["FAILED"]["error_message"]) == 1000  # truncation
     assert all(r["duration_seconds"] >= 0 for r in logs)
+    # a one-row log append writes one part file per run
+    parts = [f for f in os.listdir(path) if f.startswith("part-")]
+    assert len(parts) == 2
 
 
 def test_dag_topo_order_and_cleanup(spark):
