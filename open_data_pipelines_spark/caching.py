@@ -25,9 +25,12 @@ persist denies them).
 
 from __future__ import annotations
 
+import logging
 import os
 
 from pyspark.sql import DataFrame
+
+log = logging.getLogger(__name__)
 
 # Segment-audit collector (tools/explain_audit.py). A checkpoint
 # truncates lineage to ``Scan ExistingRDD``, hiding its subtree's
@@ -83,7 +86,12 @@ class collect_checkpoint_segments:
 # - NOTHING outlives the query: the work queue holds the only extra
 #   reference, the worker is a daemon thread (interpreter exit never
 #   blocks on an in-flight prefetch), and a prefetch failure is
-#   swallowed — the consumer job recomputes exactly as before.
+#   counted (``prefetch_failures()``) but not raised — the consumer
+#   job recomputes exactly as before;
+# - the prefetch job runs under the SUBMITTER's job group and
+#   description (local properties are thread-local, so they are
+#   captured at submission and set on the worker), so status readers
+#   attribute it to the query that built the segment.
 # Worst case (slow executors) the consumer action arrives while the
 # prefetch is mid-flight and the post-shuffle narrow tail of ONE
 # segment is computed twice — bounded duplicate work, never wrong
@@ -95,21 +103,34 @@ class collect_checkpoint_segments:
 # ``SPARK_GRAFT_NO_CKPT_PREFETCH=1`` kills it globally (debugging /
 # single-threaded-driver comparisons).
 _prefetch_queue = None
+_prefetch_failures = 0
+
+_GROUP = "spark.jobGroup.id"
+_DESCRIPTION = "spark.job.description"
+
+
+def prefetch_failures() -> int:
+    """Number of prefetches that raised in this process. A failed
+    prefetch costs only its own work: the consumer's first use
+    materializes the checkpoint (and raises) as without prefetch."""
+    return _prefetch_failures
 
 
 def _prefetch_worker(q) -> None:
+    global _prefetch_failures
     while True:
-        out = q.get()
+        out, group, description = q.get()
         try:
             sc = out.sparkSession.sparkContext
-            # job descriptions are thread-local (guide §1.5) — label
-            # the background jobs so event logs attribute them
-            sc.setJobDescription("ckpt-prefetch")
+            sc.setLocalProperty(_GROUP, group)
+            sc.setLocalProperty(
+                _DESCRIPTION,
+                f"{description}: ckpt-prefetch" if description else "ckpt-prefetch",
+            )
             out.write.format("noop").mode("overwrite").save()
         except Exception:
-            # best-effort: the consumer's first use materializes the
-            # checkpoint exactly as it would have without prefetch
-            pass
+            _prefetch_failures += 1
+            log.debug("checkpoint prefetch failed", exc_info=True)
         finally:
             q.task_done()
 
@@ -127,7 +148,10 @@ def _prefetch(out: DataFrame) -> None:
             name="ckpt-prefetch",
             daemon=True,
         ).start()
-    _prefetch_queue.put(out)
+    sc = out.sparkSession.sparkContext
+    _prefetch_queue.put(
+        (out, sc.getLocalProperty(_GROUP), sc.getLocalProperty(_DESCRIPTION))
+    )
 
 
 def drain_prefetch() -> None:

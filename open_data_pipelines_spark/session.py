@@ -13,6 +13,15 @@ The reference delegates all execution to DuckDB/MotherDuck
 - Arrow enabled: pandas UDF / toPandas paths are Arrow-batched.
 - Session timezone pinned UTC so timestamp semantics match the DuckDB
   oracle and are stable across machines.
+- Codegen cache sized to the working set: Spark keeps compiled
+  generated classes in a JVM-global cache of 100 entries by default,
+  fewer than one pass of the analytics queries compiles (108 classes),
+  so every re-run evicts and recompiles through Janino and the JIT
+  compiles the new classes again. ``spark.sql.codegen.cache.maxEntries``
+  is a static conf read once per JVM, so only the builder that
+  launches the JVM can size it; a session this library did not build
+  (the driver's) owns that conf itself, as it owns the timezone under
+  ``load_tables(configure_session=False)``.
 """
 
 from __future__ import annotations
@@ -21,6 +30,15 @@ import os
 from collections.abc import Mapping
 
 from pyspark.sql import SparkSession
+
+# Entries of Spark's JVM-global generated-class cache (default 100).
+# The largest working set this repo re-runs in one session is a
+# bench.py pass of the 16 headline rows at sf0.1: 544 distinct
+# generated classes, corpus_funnel alone 235 (a perfbench analytics
+# pass compiles 108, a warehouse pass 70). 2000 leaves ~3.7x headroom
+# over it, so a warm re-run compiles nothing
+# (tests/test_driver_session.py::test_rerun_compiles_no_new_classes).
+CODEGEN_CACHE_ENTRIES = 2000
 
 
 def get_spark(
@@ -76,6 +94,7 @@ def get_spark(
         # at warehouse scale that silently forfeits the cheapest prune
         # there is. INT64 micros restores stats (tests/test_zorder.py)
         .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "24g"))
     )

@@ -4,6 +4,10 @@ not UTC. ``session.load_tables`` must inject everything the queries
 need at runtime (nanos-as-long parquet conf, UTC session timezone) —
 round 1's biggest failure mode, pinned here as a subprocess test with
 ``TZ=America/New_York`` and a plain ``SparkSession.builder``.
+
+The session this library builds must also stay warm across re-runs:
+re-running a query set compiles no generated class again
+(``session.CODEGEN_CACHE_ENTRIES``).
 """
 
 from __future__ import annotations
@@ -12,6 +16,8 @@ import os
 import subprocess
 import sys
 from pathlib import Path
+
+from conftest import SF_SMOKE
 
 REPO = str(Path(__file__).resolve().parent.parent)
 
@@ -68,3 +74,31 @@ def test_queries_survive_plain_session_and_foreign_tz():
         cwd=REPO,
     )
     assert "DRIVER_SIM_OK" in out.stdout, out.stdout[-2000:] + out.stderr[-2000:]
+
+
+# the analytics queries of the benchmark: over 100 distinct generated
+# classes per run, more than Spark's default codegen cache holds
+RERUN_SET = ["distinct_on", "join_count", "group_sum", "anti_join", "window_tumbling"]
+
+
+def test_rerun_compiles_no_new_classes(spark):
+    import bench
+    import __spark_entry__ as e
+
+    from open_data_pipelines_spark.caching import drain_prefetch
+    from open_data_pipelines_spark.session import CODEGEN_CACHE_ENTRIES
+
+    assert int(spark.conf.get("spark.sql.codegen.cache.maxEntries")) >= CODEGEN_CACHE_ENTRIES
+    compiled = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+    fns = [e.queries()[n] for n in RERUN_SET] + [bench.EXTRA["perplexity_filter"]]
+
+    def run_all() -> None:
+        for fn in fns:
+            fn(spark, SF_SMOKE).write.format("noop").mode("overwrite").save()
+            drain_prefetch()
+        spark.catalog.clearCache()
+
+    run_all()
+    before = compiled.getCount()
+    run_all()
+    assert compiled.getCount() - before == 0

@@ -4,7 +4,11 @@ Runs a bench-identical query pass with event logging on, then parses
 the event log into a per-job timeline: job description, duration,
 stage task counts, and the DRIVER GAP since the previous job ended —
 the construction/Catalyst/codegen time the guide's §7.3 driver-side
-analysis targets.
+analysis targets. Each pass line also gives the generated classes the
+pass compiled through Janino and their compile ms (Spark's
+``CodegenMetrics``; the ms sum is exact while the session has compiled
+fewer than 1028 classes, the metric's sample size). A warm pass that
+compiles classes is re-paying codegen.
 
     python tools/profile_query.py <query> [sf_dir] [passes]
 """
@@ -47,8 +51,15 @@ def main() -> None:
 
     from open_data_pipelines_spark.caching import drain_prefetch
 
+    compiled = sc._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+
+    def janino() -> tuple[int, int]:
+        ms = sc._jvm.java.util.Arrays.stream(compiled.getSnapshot().getValues()).sum()
+        return compiled.getCount(), ms
+
     for p in range(passes):
         label = "warmup" if p == 0 else f"pass{p}"
+        n0, ms0 = janino()
         t0 = time.perf_counter()
         sc.setJobDescription(f"{label}: {qname}")
         df = fn(spark, sf_dir)
@@ -58,9 +69,10 @@ def main() -> None:
         drain_prefetch()
         sc.setJobDescription(None)
         spark.catalog.clearCache()
+        n1, ms1 = janino()
         print(
             f"== {label}: construct {t1 - t0:.3f}s  noop {t2 - t1:.3f}s  "
-            f"total {t2 - t0:.3f}s"
+            f"total {t2 - t0:.3f}s  janino {n1 - n0} classes {ms1 - ms0} ms"
         )
 
     spark.stop()
