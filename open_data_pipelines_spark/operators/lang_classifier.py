@@ -162,19 +162,11 @@ def fit_lang_classifier(
     # partition top-K, driver merge — no global sort, no payload).
     # Level 2: broadcast the winners back onto the (lbl, gram)
     # counts and collect exactly vocab_size x n_labels rows. The
-    # counts frame gains a reuse checkpoint (prefetched — it
-    # materializes while the head job runs); tie-breaking
-    # (__tot desc, __g asc) is unchanged, so the selected
-    # vocabulary — and the model — are value-identical to the
-    # former collect_list one-pass shape (interleaved A/B at
-    # sf0.1: train 1.06 -> 0.96 s median, funnel row flat-to-
-    # better — the prefetched counts checkpoint materializes
-    # while the head job runs, so the extra job costs nothing).
+    # counts frame gains a reuse checkpoint, materialized by the head
+    # job and re-read by level 2; ties break on (__tot desc, __g asc).
     from ..caching import lazy_checkpoint
 
-    counts = lazy_checkpoint(
-        counts.repartition(n_part, "__g"), prefetch=True
-    )
+    counts = lazy_checkpoint(counts.repartition(n_part, "__g"))
     head = (
         counts.groupBy("__g")
         .agg(F.sum("__c").alias("__tot"))

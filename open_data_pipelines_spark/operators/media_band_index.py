@@ -152,14 +152,11 @@ def near_dedup_media_against_index(
     from .image_dedup import require_pigeonhole
 
     require_pigeonhole(max_hamming, band_bits)
-    # prefetch (round 16): band materialization overlaps the
-    # committed-segment listing (same rationale as minhash_index)
     bnd = lazy_checkpoint(
         media_band_rows(
             batch, sig_col, id_col, kind_col,
             band_bits=band_bits, n_buckets=n_buckets,
-        ),
-        prefetch=True,
+        )
     )
 
     base = path.rstrip("/")

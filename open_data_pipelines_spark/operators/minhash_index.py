@@ -194,15 +194,11 @@ def near_dedup_against_index(
         raise ValueError(f"need 1 <= bands <= k, got bands={bands} k={k}")
     if min_agreement is not None and not 0.0 < min_agreement <= 1.0:
         raise ValueError(f"min_agreement must be in (0, 1], got {min_agreement}")
-    # prefetch (round 16): the band materialization overlaps the
-    # driver-side committed-segment listing below — at scale the FS
-    # listing of a many-segment index is real driver time
     bnd = lazy_checkpoint(
         band_rows(
             batch, text_col, id_col, n=n, k=k, bands=bands, fast=fast,
             n_buckets=n_buckets,
-        ),
-        prefetch=True,
+        )
     )
 
     base = path.rstrip("/")

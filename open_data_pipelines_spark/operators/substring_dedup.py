@@ -123,9 +123,7 @@ def duplicated_windows(
     """
     # reuse cache: the window frame feeds both the duplicate-set agg
     # and the occurrence mark — without it the explode+hash runs twice
-    wins = lazy_checkpoint(
-        window_hashes(df, text_col, id_col, k=k, fast=fast), prefetch=True
-    )
+    wins = lazy_checkpoint(window_hashes(df, text_col, id_col, k=k, fast=fast))
     stats = wins.groupBy("whash").agg(
         F.count(F.lit(1)).alias("n_occ"),
         F.min(F.struct(F.col(id_col), F.col("start"))).alias("first_occ"),

@@ -196,8 +196,7 @@ def shingle_corpus(df: DataFrame, text_col: str, id_col: str, n: int = 3) -> Dat
     return lazy_checkpoint(
         scale_out(df, id_col).select(
             F.col(id_col), word_shingles(text_col, n).alias("__sh")
-        ),
-        prefetch=True,
+        )
     )
 
 
@@ -257,7 +256,7 @@ def candidates_from_shingled(
     # md5 banding forest once more, so the cap path keeps the
     # checkpoint.
     if max_bucket_size is not None:
-        banded = lazy_checkpoint(banded, prefetch=True)
+        banded = lazy_checkpoint(banded)
         hot = (
             banded.groupBy("band_id", "band_hash")
             .agg(F.count(F.lit(1)).alias("__bn"))
@@ -330,14 +329,14 @@ def jaccard_from_shingled(
     shingle volume is bounded by the CANDIDATE set (typically a tiny
     fraction after LSH), not the corpus. ``pairs`` (consumed three
     times: id pruning, intersection, final join) is lazily
-    checkpointed and prefetched; the pruned corpus ``needed`` and the
-    exploded shingles are NOT (round 16) — their embeddings share
-    canonically-identical exchanges that runtime exchange reuse
-    executes once, and skipping the checkpoints avoids two segment
-    compiles plus materializing the exploded shingle frame (the
-    operator's largest intermediate) into block storage.
+    checkpointed; the pruned corpus ``needed`` and the exploded
+    shingles are NOT — their embeddings share canonically-identical
+    exchanges that runtime exchange reuse executes once, and skipping
+    the checkpoints avoids two segment compiles plus materializing the
+    exploded shingle frame (the operator's largest intermediate) into
+    block storage.
     """
-    pairs = lazy_checkpoint(pairs, prefetch=True)
+    pairs = lazy_checkpoint(pairs)
     cand_ids = (
         pairs.select(F.col("id_a").alias(id_col))
         .unionByName(pairs.select(F.col("id_b").alias(id_col)))

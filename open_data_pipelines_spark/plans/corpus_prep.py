@@ -332,9 +332,7 @@ def prepare_corpus(
         # checkpoint with no intervening shuffle, and the measured
         # lazy-checkpoint rule (caching.py) would fulfill it with 0
         # (round-12 review, live-reproduced)
-        docs = lazy_checkpoint(
-            docs, eager=with_stats and stats_via == "observe", prefetch=True
-        )
+        docs = lazy_checkpoint(docs, eager=with_stats and stats_via == "observe")
 
         # block on the training future only NOW — everything above
         # (gate/extraction prefix + checkpoint construction) ran while
@@ -448,7 +446,7 @@ def prepare_corpus(
         # measured lazy-checkpoint rule, caching.py; round-10 review
         # find).
         cleaned = lazy_checkpoint(
-            cleaned, eager=with_stats and stats_via == "observe", prefetch=True
+            cleaned, eager=with_stats and stats_via == "observe"
         )
         cut = remove_duplicated_spans(
             cleaned,
@@ -543,7 +541,7 @@ def prepare_corpus(
         # mode anyway so that protection doesn't hinge on dedup's
         # implementation shuffling.
         exact = lazy_checkpoint(
-            exact, eager=with_stats and stats_via == "observe", prefetch=True
+            exact, eager=with_stats and stats_via == "observe"
         )
     exact = note("exact_deduped", exact)
 
@@ -586,7 +584,7 @@ def prepare_corpus(
             # near-dup path (pairs side + anti-join side); without
             # this the whole scoring subtree would execute twice
             exact = lazy_checkpoint(
-                exact, eager=with_stats and stats_via == "observe", prefetch=True
+                exact, eager=with_stats and stats_via == "observe"
             )
 
     # near-dup pair generation is pluggable; every backend is banded
@@ -692,9 +690,7 @@ def prepare_corpus(
         # (measured rule, caching.lazy_checkpoint docstring)
         if pairs is not None:
             surviving = lazy_checkpoint(
-                surviving,
-                eager=with_stats and stats_via == "observe",
-                prefetch=True,
+                surviving, eager=with_stats and stats_via == "observe"
             )
 
         surviving = note(

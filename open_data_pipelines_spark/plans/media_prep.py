@@ -119,7 +119,7 @@ def prepare_media_corpus(
         # consumers — the whole reason it exists
         df = with_media_signature(df, content_col, decoder=decoder)
         if checkpoint_input is not False:
-            df = lazy_checkpoint(df, prefetch=True)
+            df = lazy_checkpoint(df)
     elif have != {"signature", "kind"}:
         # exactly one of the pair: re-signing would append a duplicate
         # column and every downstream reference would be ambiguous —
@@ -137,7 +137,7 @@ def prepare_media_corpus(
         # observe mode); without freezing one materialization a row could
         # land in both or neither branch. Pass checkpoint_input=True to
         # restore the frozen split for such input.
-        df = lazy_checkpoint(df, prefetch=True)
+        df = lazy_checkpoint(df)
     # else: bronze-signed deterministic input (the streaming-bronze
     # parquet form) — no decode to protect, and a full-frame checkpoint
     # write costs more than the two cheap pruned re-scans its consumers
@@ -176,9 +176,7 @@ def prepare_media_corpus(
     # the input/quarantined observations sit below this checkpoint and
     # are fulfilled by a LAZY one only because top1_per_key happens to
     # shuffle — an eager materialization always fulfills them
-    exact = lazy_checkpoint(
-        exact, eager=with_stats and stats_via == "observe", prefetch=True
-    )
+    exact = lazy_checkpoint(exact, eager=with_stats and stats_via == "observe")
     # Re-fan after the checkpoint (round-15, the corpus_prep endgame
     # pattern): the checkpoint freezes the AQE-finalized partitioning
     # of its segment, and on a small frame AQE coalesces the dedup

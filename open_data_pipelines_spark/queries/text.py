@@ -752,7 +752,7 @@ def funnel_planted_docs(spark: SparkSession, sf_dir: str):
     # two NB training slices and the four planted-union branches): one
     # checkpointed scan feeds all of them instead of seven parquet
     # re-reads (round-9 trim)
-    docs = lazy_checkpoint(_docs(spark, sf_dir), prefetch=True)
+    docs = lazy_checkpoint(_docs(spark, sf_dir))
     exact_copies = docs.filter(F.col("doc_id") % 5 == 0).withColumn(
         "doc_id", F.col("doc_id") + 10000
     )
@@ -1361,7 +1361,7 @@ def q_corpus_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     # one checkpointed scan feeds the three release branches; the
     # assembled new release feeds two consumers (diff + datasheet) —
     # the funnel's round-9 reuse discipline (round-14 review)
-    docs = lazy_checkpoint(_docs(spark, sf_dir), prefetch=True)
+    docs = lazy_checkpoint(_docs(spark, sf_dir))
     old = docs.select("doc_id", "text")
     base = docs.filter(F.col("doc_id") % 11 != 0).select(
         "doc_id", F.expr(_DIFF_MOD_SQL).alias("text"), "lang", "source"
@@ -1373,7 +1373,7 @@ def q_corpus_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
         "source",
     )
     dup = base.filter(F.col("doc_id") % 13 == 5)
-    new = lazy_checkpoint(base.unionByName(added).unionByName(dup), prefetch=True)
+    new = lazy_checkpoint(base.unionByName(added).unionByName(dup))
     diff = corpus_diff(old, new.select("doc_id", "text"))
     sheet = corpus_report(new, exact=True)
     null_s = F.lit(None).cast("string")

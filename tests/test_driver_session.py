@@ -85,7 +85,6 @@ def test_rerun_compiles_no_new_classes(spark):
     import bench
     import __spark_entry__ as e
 
-    from open_data_pipelines_spark.caching import drain_prefetch
     from open_data_pipelines_spark.session import CODEGEN_CACHE_ENTRIES
 
     assert int(spark.conf.get("spark.sql.codegen.cache.maxEntries")) >= CODEGEN_CACHE_ENTRIES
@@ -95,7 +94,6 @@ def test_rerun_compiles_no_new_classes(spark):
     def run_all() -> None:
         for fn in fns:
             fn(spark, SF_SMOKE).write.format("noop").mode("overwrite").save()
-            drain_prefetch()
         spark.catalog.clearCache()
 
     run_all()

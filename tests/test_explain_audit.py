@@ -31,9 +31,7 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 def test_executed_shuffles_lie_inside_bracket():
     # substring_dedup is a canonical checkpoint-reusing query: its
     # wins aggregation executes once under lazy_checkpoint while the
-    # top plan hides it behind the checkpoint. It also passes
-    # prefetch=True, so it doubles as the canary that the audit's
-    # executed count sees every shuffle the query runs.
+    # top plan hides it behind the checkpoint.
     proc = subprocess.run(
         [
             sys.executable,

@@ -1,8 +1,10 @@
-"""DuckDB parity for the CCNet-style LM perplexity filter: the
-interpolated-bigram formula re-expressed in plain SQL over the SAME
-trained count tables must reproduce the engine's per-doc perplexities
-and kept set on the harness corpus — the cross-engine evidence the
-boilerplate stage already has (`tests/test_boilerplate.py:72`)."""
+"""DuckDB parity for the CCNet-style LM perplexity filter. Training:
+the engine's count tables, N and V must equal counts DuckDB takes
+directly over the same token pairs. Scoring: the interpolated-bigram
+formula re-expressed in plain SQL over the SAME trained count tables
+must reproduce the engine's per-doc perplexities and kept set on the
+harness corpus — the cross-engine evidence the boilerplate stage
+already has (`tests/test_boilerplate.py:72`)."""
 
 from __future__ import annotations
 
@@ -19,6 +21,56 @@ from open_data_pipelines_spark.session import load_tables
 
 from conftest import SF_SMOKE
 
+
+def _pairs_sql(where: str = "") -> str:
+    """(doc_id, prev, tok) with the BOS sentinel, tokenized as the
+    engine does (ASCII-whitespace split, empty tokens dropped)."""
+    return f"""
+        SELECT doc_id,
+               list_prepend('<s>', toks)[i] AS prev,
+               toks[i] AS tok
+        FROM (
+          SELECT doc_id, toks, unnest(generate_series(1, len(toks))) AS i
+          FROM (
+            SELECT doc_id,
+                   list_filter(
+                     string_split_regex(trim(lower(text)), '\\s+'), t -> t <> ''
+                   ) AS toks
+            FROM documents {where}
+          )
+        )
+    """
+
+
+def _rows(con, sql: str) -> set:
+    return set(con.execute(sql).fetchall())
+
+
+def _assert_training_tables(con, lm) -> None:
+    """c(tok), c(prev, tok), c(prev), N and V counted directly over the
+    reference pairs must equal the engine's trained tables exactly."""
+    con.execute(f"CREATE TABLE ref_pairs AS {_pairs_sql('WHERE doc_id % 10 = 0')}")
+    want_uni = _rows(
+        con, "SELECT tok, CAST(count(*) AS BIGINT) FROM ref_pairs GROUP BY tok"
+    )
+    want_bi = _rows(con, """
+        WITH b AS (SELECT prev, tok, count(*) AS n FROM ref_pairs GROUP BY prev, tok),
+             p AS (SELECT prev, count(*) AS n FROM ref_pairs GROUP BY prev)
+        SELECT b.prev, b.tok, CAST(b.n AS BIGINT), CAST(p.n AS BIGINT)
+        FROM b JOIN p USING (prev)
+    """)
+    n, v = con.execute(
+        "SELECT count(*), count(DISTINCT tok) FROM ref_pairs"
+    ).fetchone()
+
+    assert {tuple(r) for r in lm.unigrams.select("tok", "uni_n").collect()} == want_uni
+    assert {
+        tuple(r) for r in lm.bigrams.select("prev", "tok", "bi_n", "prev_n").collect()
+    } == want_bi
+    assert (lm.n_tokens, lm.vocab_size) == (n, v)
+    assert len(want_uni) == v and len(want_bi) > v  # the corpus is non-trivial
+
+
 def test_duckdb_parity_on_harness_corpus(spark):
     docs = load_tables(spark, SF_SMOKE, register_views=False)["documents"]
     ref = docs.filter(F.col("doc_id") % 10 == 0)
@@ -33,28 +85,14 @@ def test_duckdb_parity_on_harness_corpus(spark):
     con.execute(
         f"CREATE VIEW documents AS SELECT * FROM '{SF_SMOKE}/documents.parquet'"
     )
+    _assert_training_tables(con, lm)
     con.register("uni", lm.unigrams.toPandas())
     con.register(
         "bi", lm.bigrams.select("prev", "tok", "bi_n", "prev_n").toPandas()
     )
     uni_denom = lm.n_tokens + lm.alpha * (lm.vocab_size + 1)
     oracle = con.execute(f"""
-        WITH toks AS (
-          SELECT doc_id,
-                 list_filter(
-                   string_split_regex(trim(lower(text)), '\\s+'), t -> t <> ''
-                 ) AS toks
-          FROM documents
-        ),
-        pairs AS (
-          SELECT doc_id,
-                 list_prepend('<s>', toks)[i] AS prev,
-                 toks[i] AS tok
-          FROM (
-            SELECT doc_id, toks, unnest(generate_series(1, len(toks))) AS i
-            FROM toks
-          )
-        ),
+        WITH pairs AS ({_pairs_sql()}),
         scored AS (
           SELECT p.doc_id,
                  ln(

@@ -61,6 +61,17 @@ def test_score_edges_and_determinism(spark, lm):
     assert {tuple(r) for r in a} == {tuple(r) for r in b}
 
 
+def test_training_counts_match_direct_token_counts(spark):
+    docs = ["", "   ", "fox", "the the the", "the fox  the\tdog"]
+    lm = train_ngram_lm(
+        spark.createDataFrame(list(enumerate(docs)), ["doc_id", "text"]), "text"
+    )
+    toks = [t for d in docs for t in d.split()]
+    want = {t: toks.count(t) for t in set(toks)}
+    assert {r["tok"]: r["uni_n"] for r in lm.unigrams.collect()} == want
+    assert (lm.n_tokens, lm.vocab_size) == (len(toks), len(want))
+
+
 def test_broadcast_and_shuffle_paths_agree(spark, lm):
     rnd = random.Random(5)
     df = spark.createDataFrame(

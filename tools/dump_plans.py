@@ -15,9 +15,6 @@ def main() -> None:
     tag = sys.argv[1]
     only = set(sys.argv[2:])
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    # plan dumping never executes the final frame — don't let reuse
-    # checkpoints prefetch their segments in the background here
-    os.environ.setdefault("SPARK_GRAFT_NO_CKPT_PREFETCH", "1")
 
     import bench
     import __spark_entry__ as entry

@@ -178,9 +178,6 @@ def main() -> None:
     as_json = ns.as_json
     if not os.path.isdir(sf_dir):
         ap.error(f"sf_dir {sf_dir!r} is not a directory")
-    # prefetch jobs run on a background thread outside the query's job
-    # group, so the executed counter would miss their shuffles
-    os.environ["SPARK_GRAFT_NO_CKPT_PREFETCH"] = "1"
 
     import __spark_entry__ as e
     from open_data_pipelines_spark.session import get_spark

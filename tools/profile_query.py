@@ -49,8 +49,6 @@ def main() -> None:
     qs = entry.queries()
     fn = bench.EXTRA.get(qname) or qs[qname]
 
-    from open_data_pipelines_spark.caching import drain_prefetch
-
     compiled = sc._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
 
     def janino() -> tuple[int, int]:
@@ -66,7 +64,6 @@ def main() -> None:
         t1 = time.perf_counter()
         df.write.format("noop").mode("overwrite").save()
         t2 = time.perf_counter()
-        drain_prefetch()
         sc.setJobDescription(None)
         spark.catalog.clearCache()
         n1, ms1 = janino()
