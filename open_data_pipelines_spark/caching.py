@@ -15,8 +15,8 @@ correctness, not a reuse cache).
 
 Two sanctioned ``persist()`` shapes remain, neither an internal reuse
 cache: (a) a persist that is released in the SAME function (``try/
-finally unpersist`` — e.g. the training scratch frame in
-``operators/pq.train_pq``),
+finally unpersist`` — e.g. the training-pair scratch frames in
+``operators/lm_score.train_ngram_lm`` and ``operators/pq.train_pq``),
 and (b) a persist ON THE RETURNED FRAME under a documented caller-owned
 unpersist contract (``plans/media_prep.prepare_media_corpus`` — the
 handle is the caller's to release, which is exactly what an internal

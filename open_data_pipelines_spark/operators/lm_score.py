@@ -7,10 +7,10 @@ signal that needs no labeled junk.
 
 Spark-native shapes:
 
-- **Train** (:func:`train_ngram_lm`): bigram counts are one
-  map-side-combinable ``groupBy`` over the token pairs, and unigram
-  counts are summed from them; the model IS a pair of DataFrames (no
-  driver-side tables), sized O(vocab) and O(seen bigrams).
+- **Train** (:func:`train_ngram_lm`): token unigram + bigram counts
+  are two map-side-combinable ``groupBy`` aggregations; the model IS
+  a pair of DataFrames (no driver-side tables), sized O(vocab) and
+  O(seen bigrams).
 - **Score** (:func:`perplexity_score`): explode candidate docs to
   (prev, token) pairs, LEFT join the count tables (broadcast while
   the model is dim-sized — reference LMs are — with a flag to force
@@ -64,12 +64,10 @@ def _token_pairs(
     text_col: str,
     id_col: str | None,
     carry: tuple[str, ...] = (),
-    pos: bool = False,
 ) -> DataFrame:
     """(prev, tok) pairs per document with a BOS sentinel — one
     explode, all expression-level. ``carry`` columns (functionally
-    dependent on the id, e.g. a language label) ride the explode;
-    ``pos`` adds each pair's token position as ``__i``."""
+    dependent on the id, e.g. a language label) ride the explode."""
     toks = F.filter(
         whitespace_tokens(F.lower(F.col(text_col))), lambda t: t != F.lit("")
     )
@@ -80,12 +78,7 @@ def _token_pairs(
     )
     cols = ([F.col(id_col)] if id_col else []) + [F.col(c) for c in carry]
     names = ([id_col] if id_col else []) + list(carry)
-    if pos:
-        names.append("__i")
-        rows = F.posexplode(pairs).alias("__i", "__p")
-    else:
-        rows = F.explode(pairs).alias("__p")
-    return df.select(*cols, rows).select(
+    return df.select(*cols, F.explode(pairs).alias("__p")).select(
         *names,
         F.col("__p.prev").alias("prev"),
         F.col("__p.tok").alias("tok"),
@@ -98,15 +91,15 @@ def train_ngram_lm(
     alpha: float = DEFAULT_ALPHA,
     lam: float = DEFAULT_LAM,
 ) -> NgramLM:
-    """Fit the interpolated bigram model on a trusted corpus: ONE
-    pair-sized aggregation; only two scalars (N, V) reach the driver.
+    """Fit the interpolated bigram model on a trusted corpus: two
+    hash aggregations over the token pairs; only two scalars (N, V)
+    reach the driver.
 
-    ``c(prev, tok)`` is the only aggregation over the token pairs.
-    ``c(prev)`` equals ``sum_tok c(prev, tok)``, so it rides a window
-    over the bigram counts, and ``c(tok)`` equals ``sum_prev c(prev,
-    tok)`` because BOS padding gives every token a ``prev`` — a
-    bigram-sized groupBy. Both are integer-exact, so the tables equal
-    direct per-token and per-prev counts.
+    ``c(prev)`` is NOT a third full-pairs aggregation: it equals
+    ``sum_tok c(prev, tok)``, so it rides a window over the already
+    bigram-sized counts — one vocab-sized shuffle instead of a third
+    pass over every token pair (round-10: cut train from three
+    pair-sized shuffles to two).
     """
     from pyspark.sql import Window
 
@@ -114,31 +107,50 @@ def train_ngram_lm(
 
     # the token-pair explode is the expensive per-row piece of
     # training; a single-file reference corpus scans as 1-2 partitions
-    # and would run it on as many cores. scale_out is a no-op once the
-    # input is defaultParallelism wide — the 100 TB case pays no extra
-    # shuffle.
-    pairs = _token_pairs(scale_out(reference), text_col, None)
-    # Explicit repartition: the window's own exchange carries a few MB
-    # of bigram counts, so AQE would coalesce it to ONE partition and
-    # run the window sort single-task — the byte heuristic cannot see
-    # the per-row sort cost. REPARTITION_BY_NUM on the window's exact
-    # key satisfies its distribution (one exchange either way, AQE
-    # leaves user-numbered exchanges alone); integer sums are
-    # partitioning-invariant.
-    n_part = reference.sparkSession.sparkContext.defaultParallelism
-    # model tables cached per the repo convention (caching.py): lazy
-    # localCheckpoints, reclaimed when the NgramLM is GC'd
-    bi = lazy_checkpoint(
-        pairs.groupBy("prev", "tok")
-        .agg(F.count(F.lit(1)).alias("bi_n"))
-        .repartition(n_part, "prev")
-        .withColumn("prev_n", F.sum("bi_n").over(Window.partitionBy("prev")))
-    )
-    uni = lazy_checkpoint(bi.groupBy("tok").agg(F.sum("bi_n").alias("uni_n")))
-    totals = uni.agg(F.sum("uni_n").alias("n"), F.count(F.lit(1)).alias("v")).first()
-    return NgramLM(
-        uni, bi, int(totals["n"]), int(totals["v"]), float(alpha), float(lam)
-    )
+    # and would run it on as many cores (round-15 event-log audit).
+    # scale_out is a no-op once the input is defaultParallelism wide —
+    # the 100 TB case pays no extra shuffle.
+    pairs = _token_pairs(scale_out(reference), text_col, None).persist()
+    try:
+        # model dims cached per the repo convention (caching.py): lazy
+        # localCheckpoint, reclaimed when the NgramLM is GC'd — not a
+        # bare persist whose handle outlives the model invisibly
+        uni = lazy_checkpoint(
+            pairs.groupBy("tok").agg(F.count(F.lit(1)).alias("uni_n"))
+        )
+        bi_counts = pairs.groupBy("prev", "tok").agg(
+            F.count(F.lit(1)).alias("bi_n")
+        )
+        # c(prev) == sum over tok of c(prev, tok) — integer-exact, so
+        # the window form is value-identical to the old third groupBy.
+        # Explicit repartition (round-15): the window's own exchange
+        # carries a few MB of bigram counts, so AQE coalesces it to
+        # ONE partition and the window sort ran single-task (0.44 s of
+        # the training phase in the funnel event log) — the byte
+        # heuristic cannot see the per-row sort cost. REPARTITION_BY_NUM
+        # on the window's exact key satisfies its distribution (one
+        # exchange either way, AQE leaves user-numbered exchanges
+        # alone); integer sums are partitioning-invariant.
+        n_part = reference.sparkSession.sparkContext.defaultParallelism
+        bi = lazy_checkpoint(
+            bi_counts.repartition(n_part, "prev").withColumn(
+                "prev_n", F.sum("bi_n").over(Window.partitionBy("prev"))
+            )
+        )
+        # bi's first consumer is the scoring pass, after the unpersist
+        # below, so left to itself it would re-run the token-pair
+        # explode. The totals query reads BOTH checkpoints, so one query
+        # materializes them from the live pair cache.
+        totals = (
+            uni.agg(F.sum("uni_n").alias("n"), F.count(F.lit(1)).alias("v"))
+            .crossJoin(bi.agg(F.count(F.lit(1)).alias("n_bi")))
+            .first()
+        )
+        return NgramLM(
+            uni, bi, int(totals["n"]), int(totals["v"]), float(alpha), float(lam)
+        )
+    finally:
+        pairs.unpersist()
 
 
 def _interp_logp(lm: NgramLM, bi_n: Column, prev_n: Column, uni_n: Column) -> Column:
@@ -171,9 +183,7 @@ def _per_doc_scores(
     # same guard as training: the explode + model joins + partial agg
     # run BEFORE any exchange, so a narrow scan serializes the whole
     # scoring pass onto 1-2 cores; no-op on already-wide input
-    pairs = _token_pairs(
-        scale_out(df, id_col), text_col, id_col, carry, pos=not broadcast_model
-    )
+    pairs = _token_pairs(scale_out(df, id_col), text_col, id_col, carry)
     uni = lm.unigrams
     bi = lm.bigrams.select("prev", "tok", "bi_n", "prev_n")
     if broadcast_model:
@@ -185,15 +195,8 @@ def _per_doc_scores(
             F.col(id_col),
             *[F.col(c) for c in carry],
             _interp_logp(lm, F.col("bi_n"), F.col("prev_n"), F.col("uni_n")).alias("__lp"),
-            *([] if broadcast_model else ["__i"]),
         )
     )
-    if not broadcast_model:
-        # A shuffle join scatters a doc's pairs across partitions, and
-        # a double sum depends on its order. Re-cluster each doc and
-        # sum in token order, as the broadcast path (one doc row, one
-        # partition) does, so both paths score bit-identically.
-        scored = scored.repartition(id_col).sortWithinPartitions(id_col, "__i")
     return scored.groupBy(id_col, *carry).agg(
         F.count(F.lit(1)).alias("n_tokens"),
         (-F.avg("__lp")).alias("avg_neg_logp"),

@@ -6,8 +6,6 @@ without executing them."""
 
 from __future__ import annotations
 
-from open_data_pipelines_spark.caching import drain_prefetch
-
 from conftest import SF_SMOKE
 
 
@@ -26,6 +24,5 @@ def test_building_checkpointing_query_runs_no_job(spark):
     build(spark, SF_SMOKE)  # warm: schema inference and file listing
     before = _job_count(spark)
     df = build(spark, SF_SMOKE)
-    drain_prefetch()
     assert _job_count(spark) - before == 0
     assert df.count() > 0
