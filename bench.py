@@ -8,11 +8,12 @@ Each query is materialized with the ``noop`` datasource (full
 execution, zero sink cost, nothing collected to the driver) — the
 number measured is the engine, not pandas conversion.
 
-Noise control (round 3): after one warmup pass, each query is timed
-``$SPARK_GRAFT_BENCH_PASSES`` times (default 3) and the MEDIAN is
-reported — single-pass numbers on this container swing 2-6x under
-load (round-2 driver run flagged a 2.2x "regression" on code that
-hadn't changed; fresh runs measured 0.95-1.2x).
+Noise control: after ``WARMUP_PASSES`` warm-up passes (timed, not in
+the median), each query is timed ``$SPARK_GRAFT_BENCH_PASSES`` times
+(default 3) and the MEDIAN is reported — single-pass numbers on this
+container swing 2-6x under load. ``spread`` carries every timed sample
+and the warm-up times next to min/max, so a reader can see whether a
+row reached steady state.
 """
 
 from __future__ import annotations
@@ -189,6 +190,35 @@ SHUFFLE_NORMALIZED = {
 }
 
 
+# Two warm-up passes per headline row: after one, corpus_funnel's
+# first timed pass was still the slowest of three in most processes at
+# local[4] (codegen, JIT and broadcast builds still settling).
+WARMUP_PASSES = 2
+
+
+def _time_runs(run, n: int, after=None) -> list[float]:
+    """Wall seconds of ``n`` calls of ``run``; ``after`` runs untimed
+    after each call."""
+    out = []
+    for _ in range(n):
+        t0 = time.perf_counter()
+        run()
+        out.append(round(time.perf_counter() - t0, 3))
+        if after is not None:
+            after()
+    return out
+
+
+def _summary(samples: list[float], warmup: list[float]) -> dict:
+    return {
+        "median": round(statistics.median(samples), 3),
+        "min": min(samples),
+        "max": max(samples),
+        "samples": samples,
+        "warmup": warmup,
+    }
+
+
 def _gc_settle(spark) -> None:
     """Deterministic storage reclaim between headline entries.
 
@@ -230,7 +260,7 @@ def main() -> None:
 
     passes = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_PASSES", "3")))
     timings: dict[str, float] = {}
-    spreads: dict[str, dict[str, float]] = {}
+    spreads: dict[str, dict] = {}
     # ambient-load witness (round 15): this container shares hardware
     # and its external load bursts 1->10 within minutes (STRESS.md
     # round-15 burst attribution: impact_score flagged 3.3x normalized
@@ -248,63 +278,45 @@ def main() -> None:
         # bench keeps timing the original xxhash64 frame so numbers
         # stay A/B-comparable with bench_reference.json across rounds
         fn = EXTRA.get(name) or qs[name]
-        # pass 0: warmup (codegen compile + broadcast build); then
-        # `passes` measured runs -> median steady-state engine time.
-        fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-        spark.catalog.clearCache()
-        load_per_query[name] = round(os.getloadavg()[0], 1)
-        samples: list[float] = []
-        for _ in range(passes):
-            t0 = time.perf_counter()
+
+        def run(fn=fn):
             fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-            samples.append(time.perf_counter() - t0)
-            spark.catalog.clearCache()
-        timings[name] = round(statistics.median(samples), 3)
-        spreads[name] = {
-            "min": round(min(samples), 3),
-            "max": round(max(samples), 3),
-        }
+
+        # warm-up passes (codegen compile + broadcast build), then
+        # `passes` measured runs -> median steady-state engine time
+        warmup = _time_runs(run, WARMUP_PASSES, spark.catalog.clearCache)
+        load_per_query[name] = round(os.getloadavg()[0], 1)
+        samples = _time_runs(run, passes, spark.catalog.clearCache)
+        spreads[name] = _summary(samples, warmup)
+        timings[name] = spreads[name]["median"]
         _gc_settle(spark)
 
-    # fixed-work calibration probe (see _calibration): timed with the
-    # same warmup+median discipline, kept OUT of the headline total
-    cal_q = _calibration(spark)
-    cal_q.write.format("noop").mode("overwrite").save()
-    cal_samples = []
-    for _ in range(passes):
-        t0 = time.perf_counter()
-        cal_q.write.format("noop").mode("overwrite").save()
-        cal_samples.append(time.perf_counter() - t0)
-    calibration = {
-        "median": round(statistics.median(cal_samples), 3),
-        "min": round(min(cal_samples), 3),
-        "max": round(max(cal_samples), 3),
-    }
-    _gc_settle(spark)
+    # fixed-work calibration probes (see _calibration): timed with the
+    # same warmup+median discipline, kept OUT of the headline total;
+    # the second (round 14) runs one real exchange
+    probes = {}
+    for key, build in (
+        ("calibration", _calibration),
+        ("calibration_shuffle", _calibration_shuffle),
+    ):
+        q = build(spark)
 
-    # second probe (round 14): same discipline, one real exchange
-    shuf_q = _calibration_shuffle(spark)
-    shuf_q.write.format("noop").mode("overwrite").save()
-    shuf_samples = []
-    for _ in range(passes):
-        t0 = time.perf_counter()
-        shuf_q.write.format("noop").mode("overwrite").save()
-        shuf_samples.append(time.perf_counter() - t0)
-    calibration_shuffle = {
-        "median": round(statistics.median(shuf_samples), 3),
-        "min": round(min(shuf_samples), 3),
-        "max": round(max(shuf_samples), 3),
-    }
-    _gc_settle(spark)
+        def run(q=q):
+            q.write.format("noop").mode("overwrite").save()
+
+        warmup = _time_runs(run, 1)
+        probes[key] = _summary(_time_runs(run, passes), warmup)
+        _gc_settle(spark)
+    calibration, calibration_shuffle = probes["calibration"], probes["calibration_shuffle"]
 
     result = {
         "metric": "headline_total_runtime",
         "value": round(sum(timings.values()), 3),
         "unit": "sec",
         "queries": timings,
-        # per-query min/max across the measured passes: lets a reader
-        # attribute +-30% drift on ~1 s queries to run noise vs a real
-        # regression without a re-run (r5 verdict ask)
+        # per-query min/max, every measured sample and the warm-up
+        # times: lets a reader attribute +-30% drift on ~1 s queries to
+        # run noise vs a real regression without a re-run
         "spread": spreads,
         # fixed-work CPU probe for cross-round ambient normalization
         # (constant seed, no repo code path) — NOT in `value`

@@ -12,10 +12,12 @@ Spark-native shapes:
   a pair of DataFrames (no driver-side tables), sized O(vocab) and
   O(seen bigrams).
 - **Score** (:func:`perplexity_score`): explode candidate docs to
-  (prev, token) pairs, LEFT join the count tables (broadcast while
-  the model is dim-sized — reference LMs are — with a flag to force
-  the shuffle join at extreme vocab), and one per-doc aggregation of
-  interpolated log-probabilities. No UDFs, no python in the row path.
+  (prev, token) pairs, LEFT join the count tables (always broadcast:
+  the model is dim-sized — reference LMs are — and a broadcast join
+  leaves each document's pairs in one task, so its log-probability
+  sum never depends on shuffle fetch order), and one per-doc
+  aggregation of interpolated log-probabilities. No UDFs, no python
+  in the row path.
 
 Probability model (deliberately simple and fully deterministic):
 interpolated bigram ML with add-alpha-smoothed unigrams,
@@ -169,7 +171,6 @@ def _per_doc_scores(
     text_col: str,
     id_col: str,
     lm: NgramLM,
-    broadcast_model: bool,
     carry: tuple[str, ...] = (),
 ) -> DataFrame:
     """(id, *carry, n_tokens, avg_neg_logp) for every NON-empty
@@ -184,10 +185,8 @@ def _per_doc_scores(
     # run BEFORE any exchange, so a narrow scan serializes the whole
     # scoring pass onto 1-2 cores; no-op on already-wide input
     pairs = _token_pairs(scale_out(df, id_col), text_col, id_col, carry)
-    uni = lm.unigrams
-    bi = lm.bigrams.select("prev", "tok", "bi_n", "prev_n")
-    if broadcast_model:
-        uni, bi = F.broadcast(uni), F.broadcast(bi)
+    uni = F.broadcast(lm.unigrams)
+    bi = F.broadcast(lm.bigrams.select("prev", "tok", "bi_n", "prev_n"))
     scored = (
         pairs.join(uni, "tok", "left")
         .join(bi, ["prev", "tok"], "left")
@@ -208,12 +207,11 @@ def perplexity_score(
     text_col: str,
     id_col: str,
     lm: NgramLM,
-    broadcast_model: bool = True,
 ) -> DataFrame:
     """(id, n_tokens, avg_neg_logp, perplexity) per document. Empty
     docs score NULL perplexity (nothing to model) — filter or coalesce
     by policy downstream."""
-    per_doc = _per_doc_scores(df, text_col, id_col, lm, broadcast_model)
+    per_doc = _per_doc_scores(df, text_col, id_col, lm)
     base = df.select(F.col(id_col)).distinct()
     return base.join(per_doc, id_col, "left").select(
         id_col,
@@ -229,7 +227,6 @@ def perplexity_filter(
     id_col: str,
     lm: NgramLM,
     max_perplexity: float,
-    broadcast_model: bool = True,
 ) -> DataFrame:
     """Keep documents at or below ``max_perplexity`` (schema
     unchanged); empty docs drop (no evidence of quality). The CCNet
@@ -245,7 +242,7 @@ def perplexity_filter(
     since a doc with no token pairs has no score row and cannot pass
     the threshold).
     """
-    per_doc = _per_doc_scores(df, text_col, id_col, lm, broadcast_model)
+    per_doc = _per_doc_scores(df, text_col, id_col, lm)
     keep = per_doc.filter(
         F.exp("avg_neg_logp") <= max_perplexity
     ).select(id_col)
@@ -343,7 +340,6 @@ def perplexity_buckets(
     lm: NgramLM,
     bounds: tuple[float, float] = DEFAULT_BUCKET_BOUNDS,
     by_lang: str | None = None,
-    broadcast_model: bool = True,
     accuracy: int = 10_000,
     exact: bool = False,
 ) -> DataFrame:
@@ -379,9 +375,7 @@ def perplexity_buckets(
     if not 0.0 < lo < hi < 1.0:
         raise ValueError(f"bounds must satisfy 0 < lo < hi < 1, got {bounds}")
     keys = [by_lang] if by_lang else []
-    per_doc = _per_doc_scores(
-        df, text_col, id_col, lm, broadcast_model, carry=tuple(keys)
-    )
+    per_doc = _per_doc_scores(df, text_col, id_col, lm, carry=tuple(keys))
     # the language label rides the scoring explode/groupBy (carry), so
     # no corpus-sized join — and certainly no corpus-sized broadcast —
     # is ever needed to recover it. Checkpoint: the scored frame feeds

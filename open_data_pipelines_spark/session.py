@@ -119,26 +119,53 @@ TESTDATA_TABLES = (
 )
 
 
-# Session-lifetime scan catalog (round 16). Constructing a parquet
-# scan costs ~0.1-0.15 s of driver work (py4j + footer/schema read)
-# even on a warm JVM, and every load_tables call re-paid it — across
-# the bench that is several seconds of pure fixed cost for byte-
-# identical scan relations. Real applications register a table ONCE
-# per session (a catalog); this cache is exactly that: the unresolved
-# scan DataFrame per (session, file path, file stat), holding no
-# data, no results, no plan state — embedding one immutable relation
-# into many plans is as safe as calling read.parquet again (the
-# dim_frame/memo_column rationale). The file's (mtime_ns, size) is in
-# the key, so a rewritten fixture can never be served a stale scan;
-# entries of dead sessions are unreachable (session id in the key)
-# and dim-bounded (#sessions x #tables).
+# Session-lifetime scan catalog. Constructing a parquet scan is py4j
+# calls plus one footer read on the driver (``footer_schema``) even on
+# a warm JVM, and every load_tables call would re-pay it for
+# byte-identical scan relations. Real applications register a table
+# ONCE per session (a catalog); this cache is exactly that: the
+# unresolved scan DataFrame per (session, file path, file stat),
+# holding no data, no results, no plan state — embedding one immutable
+# relation into many plans is as safe as calling read.parquet again
+# (the dim_frame/memo_column rationale). The file's (mtime_ns, size)
+# is in the key, so a rewritten fixture can never be served a stale
+# scan; entries of dead sessions are unreachable (session id in the
+# key) and dim-bounded (#sessions x #tables).
 _SCAN_CACHE: dict = {}
 
 
+def footer_schema(spark: SparkSession, path: str):
+    """The Spark schema of the parquet file at ``path``, read from its
+    footer on the driver.
+
+    These are the calls Spark's own schema inference makes in its one
+    task (``ParquetFileFormat.readSchemaFromFooter`` with a converter
+    built from the session conf), so ``nanosAsLong``,
+    ``inferTimestampNTZ``, ``binaryAsString``, INT96 and a Spark-written
+    schema in the footer's key-value metadata read as they would there.
+    Inference also reads one footer when ``mergeSchema`` is off, but
+    launches a Spark job to do it. A missing or corrupt file raises."""
+    from pyspark.sql.types import _parse_datatype_json_string
+
+    jvm, jss = spark._jvm, spark._jsparkSession
+    hconf = jss.sessionState().newHadoopConf()
+    hpath = jvm.org.apache.hadoop.fs.Path(path)
+    status = hpath.getFileSystem(hconf).getFileStatus(hpath)
+    meta = jvm.org.apache.parquet.hadoop.ParquetFileReader.readFooter(
+        hconf, status, jvm.org.apache.parquet.format.converter.ParquetMetadataConverter.NO_FILTER
+    )
+    footer = jvm.org.apache.parquet.hadoop.Footer(status.getPath(), meta)
+    parquet = jvm.org.apache.spark.sql.execution.datasources.parquet
+    converter = parquet.ParquetToSparkSchemaConverter(jss.sessionState().conf())
+    return _parse_datatype_json_string(
+        parquet.ParquetFileFormat.readSchemaFromFooter(footer, converter).json()
+    )
+
+
 class _LazyTables(Mapping):
-    """Mapping name -> DataFrame that defers ``spark.read.parquet`` to
-    first access (round-15 optimization; round-16: construction is
-    additionally cached for the SESSION lifetime — see _SCAN_CACHE).
+    """Mapping name -> DataFrame that defers building each scan to first
+    access; construction is also cached for the session lifetime (see
+    _SCAN_CACHE).
 
     At cluster scale the same deferral avoids footer reads and file
     listings for tables a job never touches. The scan object is
@@ -211,7 +238,9 @@ def load_tables(
         return df
 
     def _build(name: str):
-        df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+        path = os.path.join(sf_dir, f"{name}.parquet")
+        schema = footer_schema(spark, path)
+        df = spark.read.schema(schema).parquet(path)
         for col in _EVENT_TIME_COLUMNS.get(name, ()):
             # Normalize whatever the harness encoded the event-time
             # column as to a proper TimestampType:
@@ -226,7 +255,7 @@ def load_tables(
             #  - already TimestampType -> leave untouched.
             from pyspark.sql import types as T
 
-            dt = df.schema[col].dataType
+            dt = schema[col].dataType
             if isinstance(dt, T.LongType):
                 df = df.withColumn(col, F.timestamp_micros(F.expr(f"`{col}` div 1000")))
             elif isinstance(dt, T.TimestampNTZType):

@@ -85,6 +85,9 @@ def test_bench_emits_per_query_spread(monkeypatch, capsys):
     for name in bench_mod.HEADLINE:
         s = result["spread"][name]
         assert s["min"] <= result["queries"][name] <= s["max"]
+        # every timed sample and warm-up time is in the record
+        assert len(s["samples"]) == 2 and len(s["warmup"]) == bench_mod.WARMUP_PASSES
+        assert (min(s["samples"]), max(s["samples"])) == (s["min"], s["max"])
     # the fixed-work calibration probe reports its own spread and
     # stays OUT of the headline total (round-12: ambient normalizer)
     cal = result["calibration"]
@@ -98,5 +101,6 @@ def test_bench_emits_per_query_spread(monkeypatch, capsys):
     # every headline query actually EXECUTED (warmup + measured
     # passes) — without this, a bench that emitted spreads while
     # skipping execution entirely would pass (round-9 test-review);
-    # +2 for the two calibration probes' own warmup + passes
-    assert calls["n"] == (len(bench_mod.HEADLINE) + 2) * 3  # 1 warmup + 2 passes
+    # plus the two calibration probes' own warmup (1) + passes (2)
+    headline_runs = len(bench_mod.HEADLINE) * (bench_mod.WARMUP_PASSES + 2)
+    assert calls["n"] == headline_runs + 2 * 3

@@ -1,5 +1,6 @@
 """N-gram LM perplexity scoring: separation of in-domain vs junk
-text, determinism, empty/single-token edges, broadcast==shuffle."""
+text, determinism, empty/single-token edges, the model always
+broadcast."""
 
 from __future__ import annotations
 
@@ -72,14 +73,26 @@ def test_training_counts_match_direct_token_counts(spark):
     assert (lm.n_tokens, lm.vocab_size) == (len(toks), len(want))
 
 
-def test_broadcast_and_shuffle_paths_agree(spark, lm):
+def test_model_joins_broadcast_whatever_the_size_estimate(spark, lm):
+    """The model tables are always broadcast, so each document's pairs
+    stay in one task and its score never depends on shuffle fetch
+    order, even when the planner would not broadcast them itself."""
     rnd = random.Random(5)
     df = spark.createDataFrame(
         [(i, _sentence(rnd, 15)) for i in range(30)], ["doc_id", "text"]
     )
-    a = perplexity_score(df, "text", "doc_id", lm, broadcast_model=True)
-    b = perplexity_score(df, "text", "doc_id", lm, broadcast_model=False)
-    assert {tuple(r) for r in a.collect()} == {tuple(r) for r in b.collect()}
+    want = {tuple(r) for r in perplexity_score(df, "text", "doc_id", lm).collect()}
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    before = spark.conf.get(key)
+    spark.conf.set(key, "-1")  # the planner broadcasts only hinted sides
+    try:
+        scored = perplexity_score(df, "text", "doc_id", lm)
+        plan = scored._jdf.queryExecution().executedPlan().toString()
+        got = {tuple(r) for r in scored.collect()}
+    finally:
+        spark.conf.set(key, before)
+    assert plan.count("BroadcastHashJoin") == 2, plan
+    assert got == want
 
 
 def test_perplexity_filter_keeps_head(spark, lm):

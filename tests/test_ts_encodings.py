@@ -19,13 +19,15 @@ the next regeneration without losing a round.
 from __future__ import annotations
 
 import datetime as dt
+import shutil
 
 import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
+from pyspark.errors import AnalysisException
 from pyspark.sql import types as T
 
-from open_data_pipelines_spark.session import load_tables
+from open_data_pipelines_spark.session import footer_schema, load_tables
 
 # epoch micros chosen to exercise sub-second precision and a DST-risky
 # wall-clock hour (would drift if anything read through a local zone)
@@ -119,3 +121,29 @@ def test_live_testdata_loads_as_timestamp(spark):
     as TimestampType (watermark-able, unix_micros-able)."""
     tables = load_tables(spark, "/root/testdata/sf0.001", register_views=False)
     assert isinstance(tables["events"].schema["ts"].dataType, T.TimestampType)
+
+
+def test_footer_schema_equals_inferred_for_every_encoding(spark, encoded_dirs):
+    for enc, sf_dir in encoded_dirs.items():
+        path = sf_dir + "/events.parquet"
+        assert footer_schema(spark, path) == spark.read.parquet(path).schema, enc
+
+
+def test_nanos_unreadable_without_nanos_as_long(spark, encoded_dirs, tmp_path):
+    """A session that owns its confs (``configure_session=False``) and
+    did not set ``nanosAsLong`` cannot read TIMESTAMP(NANOS), exactly
+    as Spark's own inference cannot."""
+    # a fresh path, so the scan is not served from the session's cache
+    shutil.copy(encoded_dirs["nanos"] + "/events.parquet", tmp_path / "events.parquet")
+    key = "spark.sql.legacy.parquet.nanosAsLong"
+    before = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try:
+        with pytest.raises(AnalysisException, match="PARQUET_TYPE_ILLEGAL"):
+            spark.read.parquet(str(tmp_path / "events.parquet"))
+        with pytest.raises(AnalysisException, match="PARQUET_TYPE_ILLEGAL"):
+            load_tables(spark, str(tmp_path), register_views=False, configure_session=False)[
+                "events"
+            ]
+    finally:
+        spark.conf.set(key, before)
