@@ -120,8 +120,9 @@ TESTDATA_TABLES = (
 
 
 # Session-lifetime scan catalog. Constructing a parquet scan is py4j
-# calls plus one footer read on the driver (``footer_schema``) even on
-# a warm JVM, and every load_tables call would re-pay it for
+# calls plus one footer read on the driver (``footer_schema``; a
+# directory table is also listed) even on a warm JVM, and every
+# load_tables call would re-pay it for
 # byte-identical scan relations. Real applications register a table
 # ONCE per session (a catalog); this cache is exactly that: the
 # unresolved scan DataFrame per (session, file path, file stat),
@@ -134,28 +135,78 @@ TESTDATA_TABLES = (
 _SCAN_CACHE: dict = {}
 
 
-def footer_schema(spark: SparkSession, path: str):
-    """The Spark schema of the parquet file at ``path``, read from its
-    footer on the driver.
+def _hidden(name: str) -> bool:
+    """Spark's listing rule (``HadoopFSUtils.shouldFilterOutPathName``):
+    names starting with ``.``, or with ``_`` and holding no ``=``, are
+    not part of a table, except the two parquet summary files."""
+    if name.startswith(("_common_metadata", "_metadata")):
+        return False
+    return (
+        (name.startswith("_") and "=" not in name)
+        or name.startswith(".")
+        or name.endswith("._COPYING_")
+    )
 
-    These are the calls Spark's own schema inference makes in its one
-    task (``ParquetFileFormat.readSchemaFromFooter`` with a converter
-    built from the session conf), so ``nanosAsLong``,
-    ``inferTimestampNTZ``, ``binaryAsString``, INT96 and a Spark-written
-    schema in the footer's key-value metadata read as they would there.
-    Inference also reads one footer when ``mergeSchema`` is off, but
-    launches a Spark job to do it. A missing or corrupt file raises."""
+
+def _schema_file(fs, status):
+    """The one file whose footer Spark's inference reads when
+    ``mergeSchema`` is off (``ParquetUtils.inferSchema``): ``path``
+    itself if it is a file; in a directory, ``_common_metadata``, else
+    ``_metadata``, else the first data file in path order, over the
+    leaves Spark's listing keeps (partition subdirectories included)."""
+    if not status.isDirectory():
+        return status
+    summaries = ("_common_metadata", "_metadata")
+    leaves, dirs = [], [status]
+    while dirs:
+        for st in fs.listStatus(dirs.pop().getPath()):
+            p = st.getPath()
+            name = p.getName()
+            if _hidden(name):
+                continue
+            if st.isDirectory():
+                dirs.append(st)
+            else:
+                leaves.append((p.toString(), name, st))
+    leaves.sort(key=lambda leaf: leaf[0])
+    for pick in summaries:
+        for _, name, st in leaves:
+            if name == pick:
+                return st
+    for _, name, st in leaves:
+        if name not in summaries:
+            return st
+    raise FileNotFoundError(
+        f"Unable to infer schema for Parquet: no data file under {status.getPath().toString()}"
+    )
+
+
+def footer_schema(spark: SparkSession, path: str):
+    """The Spark schema of the parquet table at ``path`` (one file, or a
+    directory of part files), read from one footer on the driver.
+
+    These are the calls Spark's own schema inference makes when
+    ``mergeSchema`` is off: it picks the same file (``_schema_file``),
+    reads its footer without row groups, and converts it with
+    ``ParquetFileFormat.readSchemaFromFooter`` and a converter built
+    from the session conf. So ``nanosAsLong``, ``inferTimestampNTZ``,
+    ``binaryAsString``, INT96 and a Spark-written schema in the footer's
+    key-value metadata read as they would there, but no Spark job is
+    launched. A missing or corrupt file, or a directory with no data
+    file, raises."""
     from pyspark.sql.types import _parse_datatype_json_string
 
     jvm, jss = spark._jvm, spark._jsparkSession
     hconf = jss.sessionState().newHadoopConf()
     hpath = jvm.org.apache.hadoop.fs.Path(path)
-    status = hpath.getFileSystem(hconf).getFileStatus(hpath)
-    meta = jvm.org.apache.parquet.hadoop.ParquetFileReader.readFooter(
-        hconf, status, jvm.org.apache.parquet.format.converter.ParquetMetadataConverter.NO_FILTER
+    fs = hpath.getFileSystem(hconf)
+    status = _schema_file(fs, fs.getFileStatus(hpath))
+    parquet = jvm.org.apache.spark.sql.execution.datasources.parquet
+    meta = parquet.ParquetFooterReader.readFooter(
+        jvm.org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(status, hconf),
+        jvm.org.apache.parquet.format.converter.ParquetMetadataConverter.SKIP_ROW_GROUPS,
     )
     footer = jvm.org.apache.parquet.hadoop.Footer(status.getPath(), meta)
-    parquet = jvm.org.apache.spark.sql.execution.datasources.parquet
     converter = parquet.ParquetToSparkSchemaConverter(jss.sessionState().conf())
     return _parse_datatype_json_string(
         parquet.ParquetFileFormat.readSchemaFromFooter(footer, converter).json()
