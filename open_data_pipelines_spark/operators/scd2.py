@@ -52,27 +52,10 @@ def _latest_per_entity(
     entity_key: str,
     event_time: str,
     tiebreakers: Sequence[str],
-    via: str = "window",
 ) -> DataFrame:
-    """Latest staging row per entity. ``via="agg"`` swaps the
-    row_number window for the algebraic ``max_by`` twin
-    (:func:`..dedup.top1_per_key_agg`) — value-identical because the
-    order here is all-DESC (max of the (event_time, *tiebreakers)
-    struct IS the window's first row). Both forms measured flat under
-    a 13%-hot zipf key (STRESS.md round 15 ``--relational-skew``):
-    Spark 4's WindowGroupLimit pre-reduces the rn=1 window map-side,
-    and max_by partial-aggregates map-side. The agg form is the one
-    whose immunity doesn't hinge on the optimizer recognizing the
-    filter pattern."""
-    if via not in ("window", "agg"):
-        raise ValueError(f"unknown dedup via {via!r} (use 'window' or 'agg')")
-    if via == "agg":
-        from .dedup import top1_per_key_agg
-
-        order = F.struct(
-            F.col(event_time), *[F.col(t) for t in tiebreakers]
-        )
-        return top1_per_key_agg(staging, [entity_key], order)
+    """Latest staging row per entity. Measured flat under a 13%-hot
+    zipf key (STRESS.md round 15 ``--relational-skew``): Spark 4's
+    WindowGroupLimit pre-reduces the rn=1 window map-side."""
     order = [F.col(event_time).desc()] + [F.col(t).desc() for t in tiebreakers]
     # default spread=False: staging slices are dim-to-moderate frames;
     # the narrow-input spread's extra exchange measured +0.15 s against
@@ -87,12 +70,9 @@ def scd2_initial_load(
     attr_cols: Sequence[str],
     hash_cols: Sequence[str],
     tiebreakers: Sequence[str] = (),
-    dedup_via: str = "window",
 ) -> DataFrame:
-    """W2 dedup -> typed insert with validity window + change hash.
-    ``dedup_via="agg"`` is the skew-immune staging dedup (see
-    :func:`_latest_per_entity`)."""
-    latest = _latest_per_entity(staging, entity_key, event_time, tiebreakers, dedup_via)
+    """W2 dedup -> typed insert with validity window + change hash."""
+    latest = _latest_per_entity(staging, entity_key, event_time, tiebreakers)
     return latest.select(
         entity_key,
         *attr_cols,
@@ -112,13 +92,8 @@ def scd2_merge(
     attr_cols: Sequence[str],
     hash_cols: Sequence[str],
     tiebreakers: Sequence[str] = (),
-    dedup_via: str = "window",
 ) -> DataFrame:
     """Incremental merge -> new dimension snapshot (join-based rewrite).
-
-    ``dedup_via="agg"`` swaps the staging dedup window for the
-    algebraic ``max_by`` aggregation (see :func:`_latest_per_entity`);
-    value-identical, structurally skew-immune.
 
     Plan shape: ONE full-outer join of the whole dimension (history
     and current rows alike) with the deduped staging frame on the
@@ -137,9 +112,7 @@ def scd2_merge(
     rewrite. The cost at scale is one dimension-sized exchange per
     merge — the same order as the full-snapshot write that follows it.
     """
-    inc = _latest_per_entity(
-        staging, entity_key, event_time, tiebreakers, dedup_via
-    ).select(
+    inc = _latest_per_entity(staging, entity_key, event_time, tiebreakers).select(
         F.col(entity_key).alias("__k"),
         *[F.col(c).alias(f"__{c}") for c in attr_cols],
         F.col(event_time).alias("__t"),

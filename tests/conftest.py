@@ -32,7 +32,6 @@ SLOW_TESTS = {
     "tests/test_contamination.py::test_embedding_near_dup_composes_with_semantic_decon",
     "tests/test_incremental_dedup_model.py::test_log_protocol_model[47]",
     "tests/test_incremental_dedup_model.py::test_log_protocol_model[11]",
-    "tests/test_explain_audit.py::test_executed_shuffles_lie_inside_bracket",
     "tests/test_packing_stream.py::test_cross_batch_continuation",
     "tests/test_quality_model.py::test_fit_separates_held_out",
     "tests/test_corpus_prep.py::test_substring_stage_cuts_shared_passage",

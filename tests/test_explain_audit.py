@@ -13,43 +13,24 @@ elides a planned exchange at runtime legitimately land run BELOW
 ckpt — minmax_norm/impact_score in the committed audit — which is the
 measurement replacing plan-text guesses, not a bug.)
 
-Runs the tool as a subprocess because the executed counter needs
-`spark.ui.enabled=true` (a static conf the shared test session pins
-off) — one JVM start on the tiny sf0.001 data.
+The executed counter reads the in-process status store
+(``open_data_pipelines_spark.metrics``), which Spark fills with the UI
+off, so the audit runs on the shared test session.
 """
 
 from __future__ import annotations
 
-import json
-import os
-import subprocess
-import sys
-
-REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+from conftest import SF_SMOKE
 
 
-def test_executed_shuffles_lie_inside_bracket():
+def test_executed_shuffles_lie_inside_bracket(spark):
     # substring_dedup is a canonical checkpoint-reusing query: its
     # wins aggregation executes once under lazy_checkpoint while the
     # top plan hides it behind the checkpoint.
-    proc = subprocess.run(
-        [
-            sys.executable,
-            os.path.join(REPO, "tools", "explain_audit.py"),
-            "/root/testdata/sf0.001",
-            "--only=substring_dedup",
-            "--json",
-        ],
-        capture_output=True,
-        text=True,
-        timeout=600,
-        cwd=REPO,
-    )
-    assert proc.returncode == 0, proc.stderr[-2000:]
-    rows = [json.loads(line) for line in proc.stdout.splitlines() if line.startswith("{")]
-    assert len(rows) == 1 and rows[0]["query"] == "substring_dedup"
-    r = rows[0]
-    assert "error" not in r, r
+    import __spark_entry__ as e
+    from tools.explain_audit import audit_query
+
+    r = audit_query(spark, e.queries()["substring_dedup"], SF_SMOKE, "substring_dedup")
     sigma, ckpt = r["shuffles"], r["ckpt_shuffles"]
     run, total = r["executed_shuffles"], r["executed_total_shuffles"]
     # the bracket is built from real reuse-checkpoint segments

@@ -60,13 +60,11 @@ def test_top1_agg_matches_window_on_zipf_keys(spark):
     """Round-15 skew escape (VERDICT r14 #3): the max_by aggregation
     form of top-1-per-key equals the row_number window form on a
     zipf-hot key distribution (one key holds ~1/3 of rows), given a
-    total order. Also pins the scd2 staging-dedup wiring of the same
-    twin (dedup_via='agg')."""
+    total order."""
     from open_data_pipelines_spark.operators.dedup import (
         top1_per_key,
         top1_per_key_agg,
     )
-    from open_data_pipelines_spark.operators.scd2 import scd2_merge
 
     rows = [
         (i, "hot" if i % 3 else f"k{i % 97}", i * 37 % 1009, f"p{i}")
@@ -79,39 +77,6 @@ def test_top1_agg_matches_window_on_zipf_keys(spark):
     agg = top1_per_key_agg(df, ["k"], F.struct(F.col("t"), F.col("id")))
     assert sorted(map(tuple, win.collect())) == sorted(map(tuple, agg.collect()))
     assert win.columns == agg.columns
-
-    # scd2_merge(dedup_via='agg') == scd2_merge() on skewed staging
-    import datetime as dt
-
-    base = dt.datetime(2024, 1, 1)
-    staging = spark.createDataFrame(
-        [
-            (
-                "e%d" % (0 if i % 3 else i % 11),
-                base + dt.timedelta(minutes=i),
-                "attr%d" % (i % 5),
-                i,
-            )
-            for i in range(500)
-        ],
-        ["entity", "ts", "attr", "ref"],
-    )
-    from open_data_pipelines_spark.operators.scd2 import scd2_initial_load
-
-    dim = scd2_initial_load(
-        staging.filter(F.col("ref") < 100), "entity", "ts", ["attr"],
-        ["entity", "attr"], tiebreakers=["ref"],
-    )
-    late = staging.filter(F.col("ref") >= 100)
-    out_w = scd2_merge(
-        dim, late, "entity", "ts", ["attr"], ["entity", "attr"],
-        tiebreakers=["ref"],
-    )
-    out_a = scd2_merge(
-        dim, late, "entity", "ts", ["attr"], ["entity", "attr"],
-        tiebreakers=["ref"], dedup_via="agg",
-    )
-    assert sorted(map(tuple, out_w.collect())) == sorted(map(tuple, out_a.collect()))
 
 
 def test_running_sum_scaled_matches_window(spark):

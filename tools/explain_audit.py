@@ -19,9 +19,9 @@ and RUN once. Three shuffle readings per query:
   truncate to ``Scan ExistingRDD`` and their internal shuffles are
   hidden (lower bound).
 - **executed**: shuffle-map stages that actually ran when the query
-  executed to a noop sink, from the Spark status store via the REST
-  API (stages of the query's job group with completed tasks AND
-  shuffle-write output). Each exchange writes its shuffle at most
+  executed to a noop sink, read in-process from the Spark status store
+  (``metrics.shuffle_stages_run``: stages of the query's job group
+  with shuffle-write output). Each exchange writes its shuffle at most
   once however many plan subtrees reference it, so ``executed <= Σ``;
   it can fall BELOW ``ckpt`` when AQE elides a planned exchange at
   runtime (minmax_norm, impact_score in the committed audit) or when
@@ -47,10 +47,10 @@ import json
 import os
 import re
 import sys
-import urllib.request
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from open_data_pipelines_spark import metrics  # noqa: E402
 from open_data_pipelines_spark.caching import collect_checkpoint_segments  # noqa: E402
 
 
@@ -72,36 +72,6 @@ def summarize(plan: str) -> dict:
         # the old heuristic also counted local sorts (round-9 review)
         "global_sorts": len(re.findall(r"Sort \[[^\]]*\], true,", plan)),
     }
-
-
-def _rest(spark, endpoint: str):
-    ui = spark.sparkContext.uiWebUrl
-    app = spark.sparkContext.applicationId
-    with urllib.request.urlopen(f"{ui}/api/v1/applications/{app}/{endpoint}") as r:
-        return json.load(r)
-
-
-def _group_shuffle_stages(spark, group: str) -> int:
-    """Shuffle-map stages that actually executed under ``group``:
-    stages of the group's jobs with completed tasks and non-zero
-    shuffle-write output (a SKIPPED stage — reused shuffle output —
-    has zero completed tasks and is correctly excluded). Each exchange
-    writes its shuffle exactly once however many plan subtrees
-    reference it, so this is the executed-exchange count."""
-    stage_ids: set[int] = set()
-    for job in _rest(spark, "jobs"):
-        if job.get("jobGroup") == group:
-            stage_ids.update(job["stageIds"])
-    seen: set[int] = set()
-    for st in _rest(spark, "stages"):
-        if (
-            st["stageId"] in stage_ids
-            and st["stageId"] not in seen
-            and st["numCompleteTasks"] > 0
-            and (st["shuffleWriteRecords"] > 0 or st["shuffleWriteBytes"] > 0)
-        ):
-            seen.add(st["stageId"])
-    return len(seen)
 
 
 def executed_shuffles(spark, fn, sf_dir: str, group: str) -> tuple[int, int]:
@@ -133,8 +103,8 @@ def executed_shuffles(spark, fn, sf_dir: str, group: str) -> tuple[int, int]:
         df.write.format("noop").mode("overwrite").save()
     finally:
         sc._jsc.clearJobGroup()
-    run = _group_shuffle_stages(spark, f"{group}.run")
-    build = _group_shuffle_stages(spark, f"{group}.build")
+    run = metrics.shuffle_stages_run(spark, f"{group}.run")
+    build = metrics.shuffle_stages_run(spark, f"{group}.build")
     return run, run + build
 
 
@@ -189,10 +159,7 @@ def main() -> None:
             ap.error(f"--only names not in the query registry: {sorted(unknown)}")
     ordered = [n for n in registry if only is None or n in only]
 
-    # UI on: the executed-shuffle counter reads the status store REST
-    # API (stage shuffle-write metrics are not exposed to PySpark's
-    # StatusTracker)
-    spark = get_spark("explain_audit", extra_conf={"spark.ui.enabled": "true"})
+    spark = get_spark("explain_audit")
     spark.sparkContext.setLogLevel("ERROR")
 
     lines = [

@@ -1711,9 +1711,7 @@ def relational_scale_scenario(factors=(1, 4, 16)) -> None:
         "scd2_merge": ("events",),
         "impact_score": ("orders", "lineitem"),
     }
-    spark = get_spark(
-        "stress-relational-scale", extra_conf={"spark.ui.enabled": "true"}
-    )
+    spark = get_spark("stress-relational-scale")
     spark.sparkContext.setLogLevel("ERROR")
     qs = e.queries()
     report = []
@@ -1813,43 +1811,24 @@ def relational_scale_scenario(factors=(1, 4, 16)) -> None:
 
 def _task_spread(spark, group: str) -> dict:
     """Worst-stage task-time spread for the job group: for each stage
-    the group ran, pull the executorRunTime distribution from the
-    status store and report the stage with the largest max task —
+    the group ran, the executorRunTime distribution from the status
+    store, reported for the stage with the largest max task —
     (median_ms, max_ms, n_tasks, skew = max/median). A serialized hot
     key shows up as skew >> 1 on the reduce stage."""
-    import urllib.request
+    from open_data_pipelines_spark import metrics
 
-    from tools.explain_audit import _rest
-
-    stage_ids: set[int] = set()
-    for job in _rest(spark, "jobs"):
-        if job.get("jobGroup") == group:
-            stage_ids.update(job["stageIds"])
-    ui = spark.sparkContext.uiWebUrl
-    app = spark.sparkContext.applicationId
-    stages = []
-    for sid in sorted(stage_ids):
-        try:
-            with urllib.request.urlopen(
-                f"{ui}/api/v1/applications/{app}/stages/{sid}/0/taskSummary"
-                "?quantiles=0.0,0.5,1.0"
-            ) as r:
-                summ = json.load(r)
-        except Exception:
-            continue  # skipped stage (no tasks) has no summary
-        med, mx = summ["executorRunTime"][1], summ["executorRunTime"][2]
-        with urllib.request.urlopen(
-            f"{ui}/api/v1/applications/{app}/stages/{sid}?details=false"
-        ) as r:
-            st = json.load(r)[0]
-        stages.append({
-            "stage": sid,
-            "n_tasks": st["numCompleteTasks"],
-            "read_mb": st.get("shuffleReadBytes", 0) // (1 << 20),
-            "median_ms": round(med),
-            "max_ms": round(mx),
-            "skew": round(mx / max(med, 1.0), 1),
-        })
+    stages = [
+        {
+            "stage": st.id,
+            "n_tasks": st.completed_tasks,
+            "read_mb": st.shuffle_read_bytes // (1 << 20),
+            "median_ms": round(st.median_run_ms),
+            "max_ms": round(st.max_run_ms),
+            "skew": round(st.max_run_ms / max(st.median_run_ms, 1.0), 1),
+        }
+        for st in metrics.stages(spark, metrics.jobs(spark, group)).values()
+        if st.status != "SKIPPED"
+    ]
     if not stages:
         return {}
     # the map-side scan can dominate max_ms while being perfectly
@@ -1924,7 +1903,6 @@ def relational_skew_scenario(n_rows: int = 8_000_000) -> None:
     spark = get_spark(
         "stress-relational-skew",
         extra_conf={
-            "spark.ui.enabled": "true",
             # 128 shuffle partitions: with a 13%-hot key the skewed
             # partition is ~16x the median, so AQE's DEFAULT
             # skewedPartitionFactor=5 fires exactly as it would on a
