@@ -28,9 +28,3 @@ def round_half_up(col: Column | str, scale: int = 2) -> Column:
     c = F.col(col) if isinstance(col, str) else col
     p = float(10**scale)
     return (F.floor(c * F.lit(p) + F.lit(0.5)) / F.lit(p)).cast("double")
-
-
-def round_half_up_sql(expr: str, scale: int = 2) -> str:
-    """The DuckDB-side rendering of the same operation."""
-    p = float(10**scale)
-    return f"(floor(({expr}) * {p} + 0.5) / {p})"

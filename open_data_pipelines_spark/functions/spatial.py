@@ -100,11 +100,3 @@ def squared_distance(x1: Column, y1: Column, x2: Column, y2: Column) -> Column:
 def within_distance(x1: Column, y1: Column, x2: Column, y2: Column, r: float) -> Column:
     """``ST_Contains(ST_Buffer(p1, r), p2)`` on a planar CRS (X9)."""
     return squared_distance(x1, y1, x2, y2) <= F.lit(r * r)
-
-
-def bbox_prefilter(x1: Column, y1: Column, x2: Column, y2: Column, r: float) -> Column:
-    """The reference's hand-written conjunctive range prefilter (F4,
-    ``int_emergency_works_postcodes_by_authority.sql:34-37``)."""
-    return (
-        (x1 >= x2 - r) & (x1 <= x2 + r) & (y1 >= y2 - r) & (y1 <= y2 + r)
-    )

@@ -1,23 +1,17 @@
-"""Durable-index commit protocols for the IVF / IVF+PQ layouts —
-``rename`` (directory swap) and ``manifest`` (generation pointer).
+"""The durable-index commit protocol for the IVF / IVF+PQ layouts:
+every rewrite publishes an immutable generation through a manifest
+pointer.
 
 Engine extension (the reference has no vector index to persist); the
-protocols mirror the two commit families real table formats use:
-
-- **rename** (:func:`.ivf._swap_directory`): the retrained/compacted
-  layout is written to a sibling directory and swapped over the live
-  path with two directory renames. Atomic on POSIX-local and HDFS,
-  where directory rename is a metadata operation — but NOT on object
-  stores, where "rename" is a per-object copy+delete and a reader can
-  observe a half-copied index.
-- **manifest** (this module): every rewrite lands in a fresh,
-  immutable generation directory ``gen-<n>/`` under the index root,
-  and is committed by publishing an immutable pointer file
-  ``_manifests/manifest-<n>.json``. Readers list the manifests and
-  resolve the highest generation. Nothing is ever renamed over or
-  mutated in place, so the protocol is safe wherever a single small
-  object can be written and listed — i.e. on object stores, which is
-  where 100 TB indexes live (the Iceberg/Delta commit shape).
+protocol is the commit shape real table formats use (Iceberg/Delta):
+every rewrite (build, retrain, compaction) lands in a fresh,
+immutable generation directory ``gen-<n>/`` under the index root, and
+is committed by publishing an immutable pointer file
+``_manifests/manifest-<n>.json``. Readers list the manifests and
+resolve the highest generation. Nothing is ever renamed over or
+mutated in place, so the protocol is safe wherever a single small
+object can be written and listed — POSIX, HDFS and object stores
+alike, where directory "rename" is a per-object copy+delete.
 
 Manifest atomicity: each pointer file is written once to a
 ``.tmp`` name and renamed to its final — never pre-existing — name.
@@ -42,14 +36,12 @@ double-publishing — but the winning generation may already hold the
 loser's partial files. Serialize retrain/compaction per index
 (the streaming wrappers already do: one foreachBatch at a time).
 
-Crash adoption for ``rename`` mode (:func:`adopt_sibling`): if the
-live path is missing, a crash inside the swap window left the full
-index in a sibling (``.retrain.tmp`` / ``.compact.tmp`` holds the NEW
-copy; ``.retrain.old`` / ``.compact.old`` the previous one). The
-maintenance entry points probe the siblings and adopt the newest
-COMPLETE copy (parquet ``_SUCCESS`` marker) instead of silently
-retraining from one batch — the silent-index-replacement hazard a
-bare missing-path fallback reintroduces.
+A path holding data outside this layout (bare parquet, or an index
+written by an older release that swapped directories) is never
+adopted: the first commit refuses to initialize over it, and the
+maintenance entry points refuse to treat it as fresh
+(:func:`require_manifest_target`) — either would silently abandon the
+data on disk.
 """
 
 from __future__ import annotations
@@ -59,17 +51,6 @@ import json
 from pyspark.sql import DataFrame
 
 MANIFEST_DIR = "_manifests"
-
-#: rename-mode swap siblings, newest copy first — adoption preference
-_SIBLING_SUFFIXES = (".retrain.tmp", ".compact.tmp", ".retrain.old", ".compact.old")
-
-
-def require_commit_mode(commit: str) -> None:
-    """Shared validation for the ``commit="rename"|"manifest"``
-    parameter every index writer takes (build / maintain / compact,
-    IVF and PQ) — one definition instead of five copies."""
-    if commit not in ("rename", "manifest"):
-        raise ValueError(f"unknown commit mode {commit!r}")
 
 
 def _hadoop_fs(spark, path: str):
@@ -98,8 +79,9 @@ def _manifest_gen(name: str) -> int | None:
 
 def latest_manifest(spark, path: str) -> dict | None:
     """The highest-generation committed manifest under ``path``, or
-    None when the index is not manifest-committed (fresh, or a
-    rename-mode layout). One small-object listing + one small read."""
+    None when no generation has been committed there (a fresh path,
+    or data outside the layout). One small-object listing + one small
+    read."""
     base = path.rstrip("/")
     mdir = base + "/" + MANIFEST_DIR
     fs, hpath = _hadoop_fs(spark, base)
@@ -123,14 +105,19 @@ def latest_manifest(spark, path: str) -> dict | None:
 
 
 def resolve_index_path(spark, path: str) -> str:
-    """The directory holding the index's CURRENT data: the committed
-    generation for a manifest index, the path itself otherwise. Every
-    read AND append goes through this, so both commit modes share one
-    reader surface."""
-    manifest = latest_manifest(spark, path)
-    if manifest is None:
-        return path
+    """The committed generation directory holding the index's CURRENT
+    data. Every read AND append goes through this. Raises when
+    ``path`` has no committed manifest: an append there would leave
+    bare rows outside the layout, which the next commit then refuses
+    to initialize over."""
     base = path.rstrip("/")
+    manifest = latest_manifest(spark, base)
+    if manifest is None:
+        raise IOError(
+            f"no committed index at {base!r} (no manifest under "
+            f"{MANIFEST_DIR}/) — build one first with build_ivf_index / "
+            "build_ivf_pq_index"
+        )
     gen_dir = base + "/" + manifest["dir"]
     fs, hpath = _hadoop_fs(spark, base)
     if not fs.exists(hpath(gen_dir)):
@@ -143,7 +130,7 @@ def resolve_index_path(spark, path: str) -> str:
 
 
 def read_index(spark, path: str) -> DataFrame:
-    """Read the committed index data regardless of commit mode."""
+    """Read the committed generation of the index at ``path``."""
     return spark.read.parquet(resolve_index_path(spark, path))
 
 
@@ -163,11 +150,9 @@ def commit_generation(spark, path: str, write_fn, keep: int = 2) -> str:
     current = latest_manifest(spark, base)
     if current is None:
         # first-generation commit: the root must be virgin (or hold
-        # only unpublished orphans). Publishing gen-1 NEXT TO a
-        # rename-mode layout would silently convert the index, strand
-        # the bare parquet files forever (GC only tracks gen-*), and
-        # break direct readers of the old layout — the same
-        # silent-migration hazard the load-side guards refuse. This
+        # only unpublished orphans). Publishing gen-1 NEXT TO bare
+        # parquet files would strand them forever (GC only tracks
+        # gen-*) and break direct readers of the old layout. This
         # chokepoint covers every first commit: build_*, compact, and
         # maintain retrains.
         foreign = unmanifested_content(spark, base)
@@ -237,8 +222,8 @@ def _gc_generations(spark, base: str, committed_gen: int, keep: int) -> None:
 def unmanifested_content(spark, path: str) -> list[str]:
     """Names under ``path`` that belong to NEITHER the manifest
     protocol's layout (``_manifests/``, ``gen-<digits>/``) nor to it
-    being absent — i.e. data a manifest-mode operation would silently
-    strand or discard. Empty for a missing or protocol-clean path."""
+    being absent — i.e. data an index operation would silently strand
+    or discard. Empty for a missing or protocol-clean path."""
     base = path.rstrip("/")
     fs, hpath = _hadoop_fs(spark, base)
     if not fs.exists(hpath(base)):
@@ -258,12 +243,10 @@ def require_manifest_target(spark, path: str) -> dict | None:
     """The committed manifest for ``path``, or None when the path is
     genuinely virgin (missing, or holding only unpublished orphan
     generations, which were never reader-visible). Raises when the
-    path holds un-manifested data — a rename-mode layout, or rows a
-    bare-path append stranded — because every manifest-mode code path
-    that treated that state as 'fresh' silently abandoned the on-disk
-    index (review find). Initialize such a path deliberately with
-    ``build_ivf_index(..., commit="manifest")`` or keep using
-    ``commit="rename"``."""
+    path holds un-manifested data — bare parquet, or a layout from an
+    older directory-swapping release — because every code path that
+    treated that state as 'fresh' silently abandoned the on-disk
+    index."""
     manifest = latest_manifest(spark, path)
     if manifest is not None:
         return manifest
@@ -273,79 +256,20 @@ def require_manifest_target(spark, path: str) -> dict | None:
             f"index path {path!r} holds data outside the manifest layout "
             f"({foreign[:5]}{'...' if len(foreign) > 5 else ''}) but no "
             "committed manifest — refusing to treat it as fresh (that "
-            "would abandon the existing index); keep using "
-            "commit='rename' for this path, or migrate deliberately by "
-            "building a manifest index at a FRESH path"
+            "would abandon the existing index); build the index at a "
+            "FRESH path, or remove the old layout deliberately first"
         )
     return None
 
 
-def refuse_rename_on_manifest(spark, path: str, op: str) -> None:
-    """The cross-mode mirror of :func:`require_manifest_target`:
-    rename-mode maintenance on a manifest-committed index would read
-    pointer JSONs and generation dirs as one parquet layout, and a
-    rename-mode rewrite would swap its output over the root, deleting
-    the generation history. One shared guard so every entry point
-    (build / append-maintain / retrain / compact) refuses with the
-    same message at ENTRY — not at an arbitrary later drift point."""
-    if latest_manifest(spark, path) is not None:
-        raise IOError(
-            f"index at {path!r} is manifest-committed — pass "
-            f"commit='manifest' to {op} it (rename-mode would misread "
-            "the layout and destroy the generation history)"
-        )
-
-
-def adopt_sibling(spark, path: str) -> str | None:
-    """Rename-mode crash recovery: when the live ``path`` is missing,
-    probe the swap siblings and rename the newest COMPLETE copy back
-    into place. Returns the adopted suffix, None when no sibling
-    exists (a genuinely fresh index), and raises when siblings exist
-    but none is complete — never lets the caller fall through to a
-    silent batch-only rebuild over a recoverable index."""
-    base = path.rstrip("/")
-    fs, hpath = _hadoop_fs(spark, base)
-    present = [s for s in _SIBLING_SUFFIXES if fs.exists(hpath(base + s))]
-    if not present:
-        return None
-    for suffix in present:
-        if _is_complete(fs, hpath, base + suffix):
-            if not fs.rename(hpath(base + suffix), hpath(base)):
-                raise IOError(
-                    f"adopt_sibling: rename {base + suffix!r} -> {base!r} failed"
-                )
-            for other in present:
-                if other != suffix:
-                    fs.delete(hpath(base + other), True)
-            return suffix
-    raise IOError(
-        f"index at {base!r} is missing and its swap siblings "
-        f"{[base + s for s in present]} are all incomplete (no _SUCCESS) — "
-        "refusing to rebuild the index from a single batch; inspect and "
-        "remove the siblings to start fresh deliberately"
-    )
-
-
-def load_existing_index(spark, path: str, commit: str) -> DataFrame | None:
+def load_existing_index(spark, path: str) -> DataFrame | None:
     """The existing index DataFrame for a maintenance rewrite, or None
-    when the index is genuinely fresh. Shared by
-    :func:`.ivf.maintain_ivf_index` / :func:`.pq.maintain_ivf_pq_index`
-    so both get identical crash-adoption semantics. Existence is
-    checked explicitly — no broad exception catch that could swallow a
-    schema error and silently discard the on-disk index."""
-    require_commit_mode(commit)
-    base = path.rstrip("/")
-    if commit == "manifest":
-        # require_manifest_target raises on un-manifested data at the
-        # path (rename-mode layout or stranded bare appends) instead
-        # of returning None — None here feeds a batch-only rebuild
-        if require_manifest_target(spark, base) is None:
-            return None
-        return read_index(spark, base)
-    refuse_rename_on_manifest(spark, base, "maintain")
-    fs, hpath = _hadoop_fs(spark, base)
-    if fs.exists(hpath(base)):
-        return spark.read.parquet(base)
-    if adopt_sibling(spark, base) is not None:
-        return spark.read.parquet(base)
-    return None
+    when the path is genuinely fresh. Shared by
+    :func:`.ivf.maintain_ivf_index` / :func:`.pq.maintain_ivf_pq_index`.
+    Existence is checked explicitly — no broad exception catch that
+    could swallow a schema error and silently discard the on-disk
+    index — and un-manifested data raises instead of returning None,
+    which would feed a batch-only rebuild."""
+    if require_manifest_target(spark, path) is None:
+        return None
+    return read_index(spark, path)

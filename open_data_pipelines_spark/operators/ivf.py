@@ -17,7 +17,9 @@ Design, Spark-first:
   shuffles nothing.
 - **Index** (:func:`build_ivf_index`): ``(row, list_id)`` written
   ``partitionBy("list_id")`` — a probe of nprobe cells becomes a
-  partition-pruned scan reading nprobe/k of the corpus.
+  partition-pruned scan reading nprobe/k of the corpus. Every
+  persisted layout is a manifest-committed generation
+  (:mod:`.index_commit`).
 - **Search** (:func:`ivf_topk`): per query, the nprobe nearest cells
   (same expression bank, ``array_sort`` + ``slice``), a broadcast
   equi-join on ``list_id`` to fetch candidates, then exact quantized
@@ -39,12 +41,9 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from .index_commit import (
-    _hadoop_fs,
     commit_generation,
     load_existing_index,
     read_index,
-    refuse_rename_on_manifest,
-    require_commit_mode,
     require_manifest_target,
     resolve_index_path,
 )
@@ -134,42 +133,37 @@ def train_centroids(
     return centroids
 
 
+def _write_layout(frame: DataFrame, list_col: str = "list_id"):
+    """The ``write_fn`` an index commit hands
+    :func:`.index_commit.commit_generation`: a plain
+    ``partitionBy(list_col)`` parquet write into the fresh generation
+    directory."""
+    return (
+        lambda gen_dir: frame.write.mode("overwrite")
+        .partitionBy(list_col)
+        .parquet(gen_dir)
+    )
+
+
 def build_ivf_index(
     corpus: DataFrame,
     vec_col: str,
     id_col: str,
     centroids: list[list[float]],
     path: str | None = None,
-    commit: str = "rename",
 ) -> DataFrame:
     """Corpus + ``list_id`` cell assignment; written
     ``partitionBy("list_id")`` when ``path`` is given so probes become
-    partition-pruned scans. ``commit="manifest"`` writes the layout as
-    generation 1 of a manifest-committed index (see
-    :mod:`.index_commit`) — the object-store-safe protocol every later
-    retrain/compaction of the index then follows."""
-    # validated before the path=None early return so a typo'd mode
-    # fails in the in-memory call too, not only once a path lands
-    require_commit_mode(commit)
+    partition-pruned scans. The layout is committed as the next
+    generation of a manifest-committed index (:mod:`.index_commit`):
+    generation 1 on a fresh path, a full rebuild on an existing
+    index."""
     indexed = corpus.withColumn("list_id", assign_list_id(vec_col, centroids))
     if path is None:
         return indexed
     spark = corpus.sparkSession
-    if commit == "manifest":
-        commit_generation(
-            spark,
-            path,
-            lambda gen_dir: indexed.write.mode("overwrite")
-            .partitionBy("list_id")
-            .parquet(gen_dir),
-        )
-        return read_index(spark, path)
-    # a rename-mode overwrite of a manifest root would wipe the
-    # generation history with no error — the one unguarded rename
-    # writer the round-10 second review found
-    refuse_rename_on_manifest(spark, path, "rebuild")
-    indexed.write.mode("overwrite").partitionBy("list_id").parquet(path)
-    return spark.read.parquet(path)
+    commit_generation(spark, path, _write_layout(indexed))
+    return read_index(spark, path)
 
 
 def append_to_ivf_index(
@@ -193,43 +187,17 @@ def append_to_ivf_index(
     compaction (:func:`maintain_ivf_index` ``compact_on_retrain``,
     on by default), or run :func:`compact_ivf_index` between retrains.
 
-    The append resolves the index's commit layout first
-    (:func:`.index_commit.resolve_index_path`): on a
-    manifest-committed index the batch lands inside the CURRENT
-    generation directory, so both commit modes share this one entry
-    point. (An append is never a commit — replayed appends are the
-    at-least-once duplicates compaction collapses.)
+    The batch lands inside the CURRENT generation directory
+    (:func:`.index_commit.resolve_index_path`), which raises on a path
+    with no committed index — build it first with
+    :func:`build_ivf_index` (:func:`maintain_ivf_index` does that for a
+    fresh path). An append is never a commit — replayed appends are
+    the at-least-once duplicates compaction collapses.
     """
     data_path = resolve_index_path(new_vectors.sparkSession, path)
     new_vectors.withColumn("list_id", assign_list_id(vec_col, centroids)).write.mode(
         "append"
     ).partitionBy("list_id").parquet(data_path)
-
-
-def _swap_directory(spark, tmp: str, base: str, old: str) -> None:
-    """Commit a fully-written sibling ``tmp`` over ``base`` with two
-    directory renames: at every instant a complete durable copy exists
-    on disk. If a crash lands between the renames, ``base`` is briefly
-    absent but ``tmp`` holds the full new copy — the maintenance entry
-    points adopt it automatically on the next call
-    (:func:`.index_commit.adopt_sibling`; round-10 ADVICE fix — the
-    old missing-path fallback silently retrained from one batch over
-    the recoverable copy). Shared by :func:`compact_ivf_index` and the
-    retrain rewrites of ``maintain_ivf_index`` /
-    ``maintain_ivf_pq_index``. Only atomic where directory rename is
-    (POSIX/HDFS); object stores use ``commit="manifest"``."""
-    fs, hpath = _hadoop_fs(spark, base)
-
-    def _rename(src: str, dst: str) -> None:
-        # Hadoop rename reports failure as False, not an exception
-        if not fs.rename(hpath(src), hpath(dst)):
-            raise IOError(f"atomic swap: rename {src!r} -> {dst!r} failed")
-
-    fs.delete(hpath(old), True)
-    if fs.exists(hpath(base)):
-        _rename(base, old)
-    _rename(tmp, base)
-    fs.delete(hpath(old), True)
 
 
 def compact_ivf_index(
@@ -238,7 +206,6 @@ def compact_ivf_index(
     id_col: str,
     on_conflict: str = "error",
     list_col: str = "list_id",
-    commit: str = "rename",
 ) -> dict:
     """Restore exactly-once contents after at-least-once appends.
 
@@ -250,22 +217,10 @@ def compact_ivf_index(
     ``compact_on_retrain``). One ``dropDuplicates`` over the index
     collapses replay copies (identical rows — one keyed shuffle).
 
-    The rewrite is an atomic sibling swap, never an in-place
-    overwrite: the compacted layout is written to ``<path>.compact.tmp``
-    first, then swapped over ``path`` with two directory renames — at
-    every instant a complete durable copy of the index exists on disk
-    (the in-place overwrite it replaces deleted the only copy before
-    the new write committed; an executor loss mid-job lost the index).
-    If a crash lands between the two renames, ``path`` is briefly
-    absent but ``<path>.compact.tmp`` holds the full compacted copy —
-    rename it back to recover. The renames go through the Hadoop
-    ``FileSystem`` API resolved from the path's own scheme (round-9
-    review fix: driver-local ``os.replace`` could not rename an HDFS
-    or any non-driver-local directory, crashing after the full rewrite
-    was already paid), so the swap works wherever Spark can write:
-    atomic directory rename on POSIX-local and HDFS. An object-store
-    deployment — where "rename" is a per-object copy — should pass
-    ``commit="manifest"`` instead, which exists since round 10.
+    The rewrite is never an in-place overwrite: the compacted layout
+    is published as a new generation of the index
+    (:mod:`.index_commit`), so readers see the previous generation
+    until the pointer lands and a crash mid-rewrite loses nothing.
 
     An id surviving with MORE than one distinct row is not a replay —
     it is a genuine conflict (the upstream sent two payloads for one
@@ -274,22 +229,14 @@ def compact_ivf_index(
     payload per id — deterministic, but a policy the caller must opt
     into. Returns ``{"rows_before", "rows_after", "replay_rows",
     "conflict_ids"}``.
-
-    ``commit="manifest"`` publishes the compacted layout as a new
-    generation of a manifest-committed index instead
-    (:mod:`.index_commit` — the object-store-safe protocol, since the
-    directory-rename swap below is only atomic on POSIX/HDFS).
     """
     if on_conflict not in ("error", "min"):
         raise ValueError(f"unknown on_conflict {on_conflict!r}")
-    require_commit_mode(commit)
-    if commit == "rename":
-        refuse_rename_on_manifest(spark, path, "compact")
     idx = read_index(spark, path)
     before = idx.count()
     # localCheckpoint for reuse across the 3 consumers (conflict
-    # count, resolution, rewrite) — the overwrite hazard itself is
-    # gone now that the rewrite targets a sibling path
+    # count, resolution, rewrite) — the rewrite targets a fresh
+    # generation directory, never the data being read
     deduped = idx.dropDuplicates().localCheckpoint(eager=True)
     replay_rows = before - deduped.count()
     payload_cols = [c for c in deduped.columns if c != id_col]
@@ -315,21 +262,7 @@ def compact_ivf_index(
             .drop("__rn")
         )
     after = deduped.count()
-    base = path.rstrip("/")
-    if commit == "manifest":
-        commit_generation(
-            spark,
-            base,
-            lambda gen_dir: deduped.write.mode("overwrite")
-            .partitionBy(list_col)
-            .parquet(gen_dir),
-        )
-    else:
-        tmp = base + ".compact.tmp"
-        fs, hpath = _hadoop_fs(spark, base)
-        fs.delete(hpath(tmp), True)
-        deduped.write.mode("overwrite").partitionBy(list_col).parquet(tmp)
-        _swap_directory(spark, tmp, base, base + ".compact.old")
+    commit_generation(spark, path, _write_layout(deduped, list_col))
     return {
         "rows_before": before,
         "rows_after": after,
@@ -387,7 +320,6 @@ def maintain_ivf_index(
     k: int | None = None,
     iters: int = 3,
     compact_on_retrain: bool = True,
-    commit: str = "rename",
 ) -> dict:
     """The retrain policy on top of :func:`index_drift_stats` /
     :func:`append_to_ivf_index` (round-6 gap: drift was measured but
@@ -411,18 +343,13 @@ def maintain_ivf_index(
     survive); run :func:`compact_ivf_index` for the policy-controlled
     resolution.
 
-    ``commit`` selects the rewrite protocol: ``"rename"`` (sibling
-    write + atomic directory swap — POSIX/HDFS) or ``"manifest"``
-    (generation directory + immutable pointer — object stores; see
-    :mod:`.index_commit`). Missing-index handling is explicit in both
-    modes: a missing path with COMPLETE swap siblings on disk (a crash
-    inside the rename window) adopts the sibling instead of silently
-    rebuilding the index from one batch, and incomplete siblings
-    raise; only a genuinely fresh path retrains on the batch alone
-    (the streaming entry point makes a drift-first call reachable). A
-    missing/renamed column still raises from the select — existence is
-    probed, not caught broadly (round-9 review find, hardened further
-    here).
+    Every rewrite publishes a new generation (:mod:`.index_commit`).
+    Fresh-path handling is explicit: a fitting first batch on a virgin
+    path initializes generation 1, and a drifted one retrains on the
+    batch alone (the streaming entry point makes both reachable). A
+    path holding data outside the manifest layout raises instead of
+    being treated as fresh, and a missing/renamed column raises from
+    the select — existence is probed, not caught broadly.
 
     Returns ``{"centroids", "baseline_mean_dist2", "retrained",
     "batch_mean_dist2"}`` — the caller's next-round state. Scale
@@ -430,25 +357,13 @@ def maintain_ivf_index(
     partition-local append); the retrain path pays one full index
     read + k-means + rewrite, which is the point of thresholding it.
     """
-    require_commit_mode(commit)
     spark = new_vectors.sparkSession
-    if commit == "rename":
-        # at ENTRY, not only on the retrain path: a misconfigured
-        # streaming job would otherwise append calmly for days and
-        # first die at an arbitrary later drift point (second-review
-        # find)
-        refuse_rename_on_manifest(spark, path, "maintain")
     batch_fit = global_mean_dist2(new_vectors, vec_col, centroids)
     if batch_fit <= retrain_factor * baseline_mean_dist2:
-        if commit == "manifest" and require_manifest_target(spark, path) is None:
-            # virgin path: initialize generation 1 from the batch — a
-            # bare-path append would strand rows OUTSIDE the manifest
-            # layout, and the next retrain's load would then refuse
-            # (or, before the round-10 review fix, silently discard
-            # them in a batch-only rebuild)
-            build_ivf_index(
-                new_vectors, vec_col, id_col, centroids, path, commit="manifest"
-            )
+        if require_manifest_target(spark, path) is None:
+            # virgin path: initialize generation 1 from the batch (an
+            # append needs a committed generation to land in)
+            build_ivf_index(new_vectors, vec_col, id_col, centroids, path)
         else:
             append_to_ivf_index(new_vectors, vec_col, id_col, centroids, path)
         return {
@@ -457,43 +372,24 @@ def maintain_ivf_index(
             "retrained": False,
             "batch_mean_dist2": batch_fit,
         }
-    existing = load_existing_index(spark, path, commit)
+    existing = load_existing_index(spark, path)
     if existing is None:
         full = new_vectors
     else:
         full = existing.select(*new_vectors.columns).unionByName(new_vectors)
     if compact_on_retrain:
         full = full.dropDuplicates()
-    # materialize before the rewrite — the rebuilt index derives from
-    # the path being replaced
+    # materialize once: k-means, the rewrite and the new baseline all
+    # read it
     full = full.localCheckpoint(eager=True)
     new_centroids = train_centroids(
         full, vec_col, id_col, k=k or len(centroids), iters=iters
     )
-    if commit == "manifest":
-        commit_generation(
-            spark,
-            path,
-            lambda gen_dir: build_ivf_index(
-                full, vec_col, id_col, new_centroids, gen_dir
-            ),
-        )
-        return {
-            "centroids": new_centroids,
-            "baseline_mean_dist2": global_mean_dist2(full, vec_col, new_centroids),
-            "retrained": True,
-            "batch_mean_dist2": batch_fit,
-        }
-    # rename mode: sibling write + atomic swap, never an in-place
-    # overwrite — the checkpoint blocks above are unreplicated, so an
-    # executor loss mid-overwrite would have destroyed the only
-    # durable copy of the index (round-9 review find — the hazard
-    # compact_ivf_index's swap already eliminated)
-    tmp = path.rstrip("/") + ".retrain.tmp"
-    fs, hpath = _hadoop_fs(full.sparkSession, path)
-    fs.delete(hpath(tmp), True)
-    build_ivf_index(full, vec_col, id_col, new_centroids, tmp)
-    _swap_directory(full.sparkSession, tmp, path.rstrip("/"), path.rstrip("/") + ".retrain.old")
+    commit_generation(
+        spark,
+        path,
+        _write_layout(build_ivf_index(full, vec_col, id_col, new_centroids)),
+    )
     return {
         "centroids": new_centroids,
         "baseline_mean_dist2": global_mean_dist2(full, vec_col, new_centroids),

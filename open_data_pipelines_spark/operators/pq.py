@@ -49,20 +49,25 @@ from .index_commit import (
     commit_generation,
     load_existing_index,
     read_index,
-    refuse_rename_on_manifest,
-    require_commit_mode,
     require_manifest_target,
     resolve_index_path,
 )
-from .ivf import _cell_dists, assign_list_id, probe_list_ids, train_centroids
+from .ivf import (
+    _cell_dists,
+    _write_layout,
+    assign_list_id,
+    global_mean_dist2,
+    probe_list_ids,
+    train_centroids,
+)
 from .similarity import as_double_array, dot_int, quantize
 
 Codebooks = list[list[list[float]]]  # [subspace][centroid][component]
 
-#: per-index properties sidecar, written INSIDE the data directory so
-#: it travels with every commit protocol (rename-mode sibling swaps
-#: move it with the data; manifest mode writes one per generation).
-#: The leading underscore hides it from Spark's parquet reader.
+#: per-index properties sidecar, written INSIDE each generation
+#: directory before its manifest pointer publishes, so every committed
+#: generation carries its own. The leading underscore hides it from
+#: Spark's parquet reader.
 PQ_META_FILE = "_pq_meta.json"
 
 
@@ -83,10 +88,14 @@ def _write_pq_meta(spark, data_dir: str, nbits: int, m: int) -> None:
 
 def read_pq_meta(spark, path: str) -> dict | None:
     """The committed index's persisted code geometry
-    (``{"nbits", "m"}``), or None for an index written before the meta
-    existed. Resolves the manifest generation first, so the answer
-    always describes the data a reader would scan."""
-    data_dir = resolve_index_path(spark, path.rstrip("/"))
+    (``{"nbits", "m"}``), or None for a virgin path or an index
+    written before the meta existed. Resolves the manifest generation
+    first, so the answer always describes the data a reader would
+    scan; raises on data outside the manifest layout
+    (:func:`.index_commit.require_manifest_target`)."""
+    if require_manifest_target(spark, path) is None:
+        return None
+    data_dir = resolve_index_path(spark, path)
     fs, hpath = _hadoop_fs(spark, data_dir)
     target = hpath(data_dir.rstrip("/") + "/" + PQ_META_FILE)
     if not fs.exists(target):
@@ -324,15 +333,12 @@ def build_ivf_pq_index(
     path: str | None = None,
     code_col: str = "pq_code",
     list_col: str = "list_id",
-    commit: str = "rename",
     nbits: int | None = None,
 ) -> DataFrame:
     """Corpus + cell assignment + PQ codes in ONE projection pass,
     written ``partitionBy(list_col)`` when ``path`` is given — the
-    persisted form :func:`ivf_pq_topk` searches. ``commit="manifest"``
-    initializes an object-store-safe manifest-committed index
-    (:mod:`.index_commit`) that later retrains/compactions publish new
-    generations of.
+    persisted form :func:`ivf_pq_topk` searches, committed as the next
+    generation of a manifest-committed index (:mod:`.index_commit`).
 
     The code geometry (``nbits``, subspace count) is persisted as
     ``_pq_meta.json`` inside the written layout, so a later bare
@@ -341,22 +347,14 @@ def build_ivf_pq_index(
     codebooks. Pass ``nbits`` when the configured width exceeds what
     the current codebooks happen to hold (``train_pq`` seeds at most
     one centroid per training row)."""
-    # validated before the path=None early return (the ivf.py note)
-    require_commit_mode(commit)
     encoded = corpus.withColumn(code_col, pq_encode(vec_col, codebooks)).withColumn(
         list_col, assign_list_id(vec_col, centroids)
     )
     if path is None:
         return encoded
-    persist_meta = True
     if nbits is None:
         nbits = (len(codebooks[0]) - 1).bit_length()
         if len(codebooks[0]) != 1 << nbits:
-            # the books are not exactly full, so the inference may be
-            # NARROWER than the configured width — persisting it would
-            # permanently suppress the maintenance-time warning this
-            # meta exists to make unnecessary (the append-path rule)
-            persist_meta = False
             warnings.warn(
                 f"build_ivf_pq_index: nbits={nbits} inferred from codebooks "
                 f"holding {len(codebooks[0])} centroids (not a full 2**nbits) "
@@ -364,23 +362,32 @@ def build_ivf_pq_index(
                 "to pin the configured width in the index meta",
                 stacklevel=2,
             )
-    m = len(codebooks)
+            # the books are not exactly full, so the inference may be
+            # NARROWER than the configured width — persisting it would
+            # permanently suppress the maintenance-time warning this
+            # meta exists to make unnecessary (the append-path rule)
+            nbits = None
     spark = corpus.sparkSession
+    commit_generation(
+        spark, path, _pq_layout_writer(encoded, list_col, nbits, len(codebooks))
+    )
+    return read_index(spark, path)
 
-    def _write(gen_dir: str) -> None:
-        encoded.write.mode("overwrite").partitionBy(list_col).parquet(gen_dir)
-        # meta lands before the manifest pointer publishes, so a
-        # committed generation always carries its geometry
-        if persist_meta:
-            _write_pq_meta(spark, gen_dir, nbits, m)
 
-    if commit == "manifest":
-        commit_generation(spark, path, _write)
-        return read_index(spark, path)
-    # guard the one remaining rename overwrite (the ivf.py note)
-    refuse_rename_on_manifest(spark, path, "rebuild")
-    _write(path)
-    return spark.read.parquet(path)
+def _pq_layout_writer(encoded: DataFrame, list_col: str, nbits: int | None, m: int):
+    """``write_fn`` for :func:`.index_commit.commit_generation`: the
+    partitioned layout, then — when the width is pinned — its
+    ``_pq_meta.json``. The meta lands before the manifest pointer
+    publishes, so a committed generation always carries its
+    geometry."""
+    write_layout = _write_layout(encoded, list_col)
+
+    def write(gen_dir: str) -> None:
+        write_layout(gen_dir)
+        if nbits is not None:
+            _write_pq_meta(encoded.sparkSession, gen_dir, nbits, m)
+
+    return write
 
 
 def maintain_ivf_pq_index(
@@ -399,7 +406,6 @@ def maintain_ivf_pq_index(
     list_col: str = "list_id",
     nbits: int | None = None,
     compact_on_retrain: bool = True,
-    commit: str = "rename",
 ) -> dict:
     """The PQ-layer extension of :func:`.ivf.maintain_ivf_index`: the
     drift gate covers BOTH models that age together — the cell bank
@@ -426,28 +432,20 @@ def maintain_ivf_pq_index(
     recomputed from the vectors, so the dedup runs on the raw
     vector rows).
 
-    ``commit`` selects the rewrite protocol — ``"rename"`` (sibling
-    directory swap; POSIX/HDFS) or ``"manifest"`` (generation +
-    immutable pointer; object stores) — with the same crash-adoption
-    semantics as :func:`.ivf.maintain_ivf_index` (see
-    :mod:`.index_commit`).
+    Every rewrite publishes a new generation (:mod:`.index_commit`),
+    with the same fresh-path and foreign-data handling as
+    :func:`.ivf.maintain_ivf_index`.
 
     Returns ``{"centroids", "codebooks", "baseline_mean_dist2",
     "retrained", "batch_mean_dist2", "nbits"}``.
     """
-    from .ivf import global_mean_dist2, train_centroids
-
-    require_commit_mode(commit)
-    if commit == "rename":
-        # at ENTRY, like maintain_ivf_index: fail the first calm
-        # batch, not an arbitrary later drift point
-        refuse_rename_on_manifest(new_vectors.sparkSession, path, "maintain")
+    spark = new_vectors.sparkSession
     nbits_inferred = nbits is None
     if nbits_inferred:
         # committed state first: every layout build_ivf_pq_index wrote
         # carries _pq_meta.json, so a bare maintenance call reads the
         # pinned width back instead of inferring from in-memory books
-        meta = read_pq_meta(new_vectors.sparkSession, path)
+        meta = read_pq_meta(spark, path)
         if meta is not None:
             if meta["m"] != len(codebooks):
                 raise ValueError(
@@ -462,20 +460,19 @@ def maintain_ivf_pq_index(
             nbits = (len(codebooks[0]) - 1).bit_length()
     batch_fit = global_mean_dist2(new_vectors, vec_col, centroids)
     if batch_fit <= retrain_factor * baseline_mean_dist2:
-        # resolve the commit layout (manifest-mode appends land inside
-        # the current generation directory), like append_to_ivf_index;
-        # a VIRGIN manifest path initializes generation 1 instead — a
-        # bare-path append would strand rows outside the layout
-        spark = new_vectors.sparkSession
-        if commit == "manifest" and require_manifest_target(spark, path) is None:
+        # appends land inside the current generation directory, like
+        # append_to_ivf_index; a VIRGIN path initializes generation 1
+        # instead (an append needs a committed generation to land in)
+        if require_manifest_target(spark, path) is None:
             build_ivf_pq_index(
                 new_vectors, vec_col, id_col, centroids, codebooks, path,
-                code_col, list_col, commit="manifest", nbits=nbits,
+                code_col, list_col, nbits=nbits,
             )
         else:
             data_path = resolve_index_path(spark, path)
-            new_vectors.withColumn(code_col, pq_encode(vec_col, codebooks)).withColumn(
-                list_col, assign_list_id(vec_col, centroids)
+            build_ivf_pq_index(
+                new_vectors, vec_col, id_col, centroids, codebooks,
+                code_col=code_col, list_col=list_col,
             ).write.mode("append").partitionBy(list_col).parquet(data_path)
             # upgrade a pre-meta layout in place (write-once: no-op on
             # any index build_ivf_pq_index produced) — but never
@@ -502,12 +499,9 @@ def maintain_ivf_pq_index(
             "the configured width (the streaming wrapper does)",
             stacklevel=2,
         )
-    spark = new_vectors.sparkSession
-    # explicit existence probe + crash-sibling adoption, never a broad
-    # exception catch: a schema mismatch must raise from the select
-    # below, and a swap-window crash must adopt the recoverable
-    # sibling copy instead of silently retraining from one batch
-    existing = load_existing_index(spark, path, commit)
+    # explicit existence probe, never a broad exception catch: a
+    # schema mismatch must raise from the select below
+    existing = load_existing_index(spark, path)
     if existing is None:
         full = new_vectors
     else:
@@ -527,45 +521,12 @@ def maintain_ivf_pq_index(
         iters=iters,
         train_fraction=train_fraction,
     )
-    if commit == "manifest":
-        commit_generation(
-            spark,
-            path,
-            lambda gen_dir: build_ivf_pq_index(
-                full,
-                vec_col,
-                id_col,
-                new_centroids,
-                new_books,
-                gen_dir,
-                code_col,
-                list_col,
-                nbits=nbits,
-            ),
-        )
-        return {
-            "centroids": new_centroids,
-            "codebooks": new_books,
-            "baseline_mean_dist2": global_mean_dist2(full, vec_col, new_centroids),
-            "retrained": True,
-            "batch_mean_dist2": batch_fit,
-            "nbits": nbits,
-        }
-    # rename mode: sibling write + atomic swap (shared with
-    # maintain_ivf_index / compact_ivf_index): an in-place overwrite
-    # deleted the only durable index copy before the rewrite from
-    # unreplicated checkpoint blocks committed
-    from .ivf import _hadoop_fs, _swap_directory
-
-    tmp = path.rstrip("/") + ".retrain.tmp"
-    fs, hpath = _hadoop_fs(full.sparkSession, path)
-    fs.delete(hpath(tmp), True)
-    build_ivf_pq_index(
-        full, vec_col, id_col, new_centroids, new_books, tmp, code_col, list_col,
-        nbits=nbits,
+    encoded = build_ivf_pq_index(
+        full, vec_col, id_col, new_centroids, new_books,
+        code_col=code_col, list_col=list_col,
     )
-    _swap_directory(
-        full.sparkSession, tmp, path.rstrip("/"), path.rstrip("/") + ".retrain.old"
+    commit_generation(
+        spark, path, _pq_layout_writer(encoded, list_col, nbits, len(codebooks))
     )
     return {
         "centroids": new_centroids,

@@ -152,11 +152,6 @@ def minhash_signature_from_base(base: Column | str, k: int = 8) -> Column:
     return F.array(*sigs)
 
 
-def minhash_signature(shingles: Column, k: int = 8, fast: bool = False) -> Column:
-    """Array of k min-hashes (NULL components for empty shingle sets)."""
-    return minhash_signature_from_base(base_hashes(shingles, fast), k)
-
-
 @memo_column
 def lsh_bands(signature: Column | str, bands: int, rows: int) -> list[Column]:
     """One hash per band over ``rows`` consecutive signature slots.
@@ -503,17 +498,3 @@ def simhash_band_candidates(
     if max_hamming is not None:
         out = out.filter(F.col("hamming") <= max_hamming)
     return out.select("id_a", "id_b", "hamming")
-
-
-def simhash_dedup_candidates(
-    df: DataFrame, text_col: str, id_col: str, bits: int = 16, fast: bool = False
-) -> DataFrame:
-    """Pairs with identical SimHash — group-by signature, no product."""
-    sig = df.select(F.col(id_col), simhash(text_col, bits, fast).alias("__sh"))
-    a = sig.select(F.col(id_col).alias("id_a"), "__sh")
-    b = sig.select(F.col(id_col).alias("id_b"), "__sh")
-    return (
-        a.join(b, "__sh")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b", F.col("__sh").alias("simhash"))
-    )

@@ -8,7 +8,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..operators.aggregates import approx_distinct, decimal_sum, salted_sum
+from ..operators.aggregates import approx_distinct, decimal_sum
 from ..operators.asof import asof_join
 from ..session import load_tables
 
@@ -78,32 +78,6 @@ g AS (
 )
 SELECT epoch_us(min(ts)) AS session_start_us, user_id, count(*) AS n_events
 FROM g GROUP BY user_id, session_id
-"""
-
-
-# --- salted_group_sum: skew-resistant two-stage aggregation ------------------
-# NOT registered as a driver row since round 5: the driver window caps
-# at 50 queries and this row's ANSWER is a plain GROUP BY duplicate —
-# its value is the salted plan, which tests/test_macros_salting.py
-# pins (salted_sum == plain sum row-for-row). Its slot went to
-# corpus_funnel (queries/text.py), the flagship LLM-pipeline row.
-def q_salted_group_sum(spark: SparkSession, sf_dir: str) -> DataFrame:
-    events = _events(spark, sf_dir)
-    return salted_sum(
-        events,
-        ["event_type"],
-        F.col("value"),
-        salt=F.col("event_id"),
-        salt_mod=16,
-        alias="sum_value",
-    )
-
-
-# salting never changes the answer — the oracle is the plain GROUP BY
-ORACLE_SALTED_GROUP_SUM = """
-SELECT event_type,
-       CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value
-FROM events GROUP BY event_type
 """
 
 

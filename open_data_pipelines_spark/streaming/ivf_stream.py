@@ -148,7 +148,6 @@ def stream_embeddings_to_ivf(
     iters: int = 3,
     state_path: str | None = None,
     compact_on_retrain: bool = True,
-    commit: str = "rename",
 ):
     """availableNow drain of an embedding stream into a maintained IVF
     index. Returns ``(query, state)``; ``state`` is updated per batch:
@@ -158,7 +157,12 @@ def stream_embeddings_to_ivf(
     sidecar is loaded on start when present — validated against the
     seed shape, then the passed ``centroids``/``baseline_mean_dist2``
     only seed the FIRST session — and saved after every batch. Delete
-    the sidecar to force a fresh bank from the seeds."""
+    the sidecar to force a fresh bank from the seeds.
+
+    The index is manifest-committed (:mod:`..operators.index_commit`):
+    appends land in the current generation and every retrain publishes
+    a new one, so a reader never sees a half-rewritten index. A fresh
+    ``index_path`` is initialized by the first batch."""
     state = {
         "centroids": centroids,
         "baseline_mean_dist2": baseline_mean_dist2,
@@ -187,7 +191,6 @@ def stream_embeddings_to_ivf(
             k=k,
             iters=iters,
             compact_on_retrain=compact_on_retrain,
-            commit=commit,
         )
         state["centroids"] = res["centroids"]
         state["baseline_mean_dist2"] = res["baseline_mean_dist2"]
@@ -221,7 +224,6 @@ def stream_embeddings_to_ivf_pq(
     nbits: int | None = None,
     state_path: str | None = None,
     compact_on_retrain: bool = True,
-    commit: str = "rename",
 ):
     """The PQ twin of :func:`stream_embeddings_to_ivf` (VERDICT r8
     task #1): each micro-batch flows through
@@ -243,7 +245,8 @@ def stream_embeddings_to_ivf_pq(
     Returns ``(query, state)`` with state keys ``centroids``,
     ``codebooks``, ``baseline_mean_dist2``, ``nbits``, ``generation``,
     ``retrains``, ``batches``, ``index_path``. Delete the sidecar to
-    force a fresh model from the seeds."""
+    force a fresh model from the seeds. The index commit protocol is
+    the one :func:`stream_embeddings_to_ivf` documents."""
     if nbits is None:
         nbits = (len(codebooks[0]) - 1).bit_length()
         if len(codebooks[0]) != 1 << nbits:
@@ -297,7 +300,6 @@ def stream_embeddings_to_ivf_pq(
             train_fraction=train_fraction,
             nbits=state["nbits"],
             compact_on_retrain=compact_on_retrain,
-            commit=commit,
         )
         state["centroids"] = res["centroids"]
         state["codebooks"] = res["codebooks"]

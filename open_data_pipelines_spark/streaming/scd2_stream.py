@@ -40,17 +40,12 @@ import re
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..operators.index_commit import _hadoop_fs, _is_complete
 from ..operators.scd2 import scd2_initial_load, scd2_merge
 
 # Writers format ``v{batch_id:08d}`` — zero-padded but GROWABLE past
 # 1e8 batches, so the match must be 8-or-more digits, not exactly 8.
 _VDIR = re.compile(r"^v(\d{8,})$")
-
-
-def _fs(spark: SparkSession, path: str):
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path
-    return hpath(path).getFileSystem(spark._jsc.hadoopConfiguration()), hpath
 
 
 def _versions(spark: SparkSession, root: str) -> list[tuple[int, str]]:
@@ -59,20 +54,18 @@ def _versions(spark: SparkSession, root: str) -> list[tuple[int, str]]:
     # write — a driver-local listing on an HDFS root silently saw zero
     # committed snapshots and re-ran initial_load per batch (round-9
     # review find)
-    fs, hpath = _fs(spark, root)
+    fs, hpath = _hadoop_fs(spark, root)
     rpath = hpath(root)
     if not fs.exists(rpath):
         return []
     out = []
     for status in fs.listStatus(rpath):
-        name = status.getPath().getName()
-        m = _VDIR.match(name)
-        if (
-            m
-            and status.isDirectory()
-            and fs.exists(hpath(status.getPath(), "_SUCCESS"))
-        ):
-            out.append((int(m.group(1)), status.getPath().toString()))
+        m = _VDIR.match(status.getPath().getName())
+        if not (m and status.isDirectory()):
+            continue
+        path = status.getPath().toString()
+        if _is_complete(fs, hpath, path):
+            out.append((int(m.group(1)), path))
     return sorted(out)
 
 
@@ -91,7 +84,7 @@ def latest_snapshot(
 def prune_snapshots(spark: SparkSession, root: str, keep: int = 3) -> int:
     """Drop all but the newest ``keep`` committed versions (time-travel
     retention); returns how many were removed."""
-    fs, hpath = _fs(spark, root)
+    fs, hpath = _hadoop_fs(spark, root)
     vs = _versions(spark, root)
     drop = vs[:-keep] if keep > 0 else vs
     for _, path in drop:

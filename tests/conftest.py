@@ -25,6 +25,8 @@ def spark():
 # 2026-08-18 full-suite run (688 passed, 46:56 wall). pytest.ini deselects
 # them by default so the driver's fixed verify window sees a COMPLETED run;
 # `-m ""` restores the full suite. Parametrized entries list each id.
+# Entries later re-timed under the cut at `local[4]` were taken out;
+# CHANGES.md records their timings.
 SLOW_TESTS = {
     "tests/test_dedup_properties.py::test_cap_per_stratum_matches_bruteforce",
     "tests/test_incremental_dedup_model.py::test_log_protocol_model[23]",
@@ -39,7 +41,6 @@ SLOW_TESTS = {
     "tests/test_text_norm.py::test_mojibake_round_trip_property",
     "tests/test_contamination.py::test_derived_banding_recall_at_marginal_cosine",
     "tests/test_driver_session.py::test_queries_survive_plain_session_and_foreign_tz",
-    "tests/test_ivf_stream.py::test_pq_stream_retrain_bumps_generation_and_persists",
     "tests/test_operators.py::test_range_join_grid_matches_naive",
     "tests/test_contamination.py::test_decontaminate_semantic_drops_only_flagged",
     "tests/test_dedup_properties.py::test_paragraph_keep_first_matches_bruteforce",
@@ -47,9 +48,6 @@ SLOW_TESTS = {
     "tests/test_graph.py::test_auto_escalates_to_star_on_deep_chain",
     "tests/test_minhash_index.py::test_streaming_near_dedup_with_kill_resume",
     "tests/test_media_band_index.py::test_streaming_media_near_dedup_kill_resume",
-    "tests/test_ivf_stream.py::test_pq_bank_survives_restart",
-    "tests/test_ivf.py::test_retrain_compacts_replayed_appends",
-    "tests/test_ivf_stream.py::test_stream_manifest_commit_end_to_end",
     "tests/test_quality_model.py::test_funnel_composition_model_stage",
     "tests/test_corpus_prep.py::test_observe_audit_with_new_text_stages",
     "tests/test_retraction_stream.py::test_stream_retraction_matches_batch_twin",
@@ -58,10 +56,7 @@ SLOW_TESTS = {
     "tests/test_wds_exactly_once.py::test_index_commit_exactly_once_under_retry",
     "tests/test_graph.py::test_union_find_equals_distributed_on_random_graphs",
     "tests/test_media_band_index.py::test_incremental_matches_greedy_oracle",
-    "tests/test_ivf_stream.py::test_stream_maintains_index_and_retrains_on_drift",
-    "tests/test_ivf.py::test_maintain_ivf_index_retrain_policy",
     "tests/test_corpus_prep.py::test_observe_audit_matches_eager_counts_optin",
-    "tests/test_ivf_pq.py::test_pq_meta_legacy_index_still_warns_and_m_mismatch_raises",
     "tests/test_wds_exactly_once.py::test_wds_exactly_once_under_retry[remote_after]",
     "tests/test_oracle_sample.py::test_query_matches_oracle[corpus_funnel]",
     "tests/test_wds_exactly_once.py::test_wds_exactly_once_under_retry[local_before]",
@@ -70,14 +65,11 @@ SLOW_TESTS = {
     "tests/test_incremental_dedup.py::test_compaction_crash_windows_never_lose_membership",
     "tests/test_quality_model.py::test_streaming_funnel_applies_quality_model",
     "tests/test_wds_exactly_once.py::test_wds_exactly_once_under_retry[local_after]",
-    "tests/test_ivf_pq.py::test_pq_meta_pins_nbits_across_bare_maintenance",
-    "tests/test_ivf_pq.py::test_path_built_index_probe_gets_dynamic_partition_pruning",
     "tests/test_minhash_index.py::test_incremental_matches_greedy_oracle_membership",
     "tests/test_scd2_stream.py::test_streamed_dim_equals_batch_dim",
     "tests/test_scd2_stream.py::test_log_ahead_of_checkpoint_errors_by_default",
     "tests/test_scd2_stream.py::test_skip_mode_never_writes_out_of_order_versions",
     "tests/test_quality_model.py::test_filter_composes_and_is_deterministic",
-    "tests/test_ivf_stream.py::test_bank_state_survives_restart",
     "tests/test_macros_salting.py::test_running_sum_scaled_matches_window",
     "tests/test_graph.py::test_star_converges_on_deep_chain",
     "tests/test_corpus_prep.py::test_observe_audit_with_perplexity_stage",

@@ -1,17 +1,15 @@
-"""Index commit protocols: manifest-pointer (object-store-safe) and
-rename-mode crash adoption.
+"""The index commit protocol: every persisted IVF / IVF-PQ index is a
+manifest-committed generation.
 
-The load-bearing invariants, per the round-9 verdict's top task:
+The load-bearing invariants:
 
-- a reader NEVER sees a partial index under ``commit="manifest"`` —
-  an unpublished generation (crash before the pointer write) is
-  invisible and the previous generation keeps resolving;
-- probe-all == brute force holds across a manifest-committed retrain
-  (the same anchor the rename-mode retrain test pins);
-- a missing index path with a COMPLETE swap sibling on disk (a crash
-  inside the rename window) is ADOPTED by the maintenance entry
-  points, never silently replaced by a batch-only rebuild; incomplete
-  siblings raise.
+- a reader NEVER sees a partial index — an unpublished generation
+  (crash before the pointer write) is invisible and the previous
+  generation keeps resolving;
+- probe-all == brute force holds across a committed retrain;
+- data outside the manifest layout at an index path is never treated
+  as a fresh index: maintenance, appends and first commits refuse,
+  and the data is left untouched.
 """
 
 from __future__ import annotations
@@ -24,7 +22,6 @@ from pyspark.sql import functions as F
 
 from open_data_pipelines_spark.operators.index_commit import (
     MANIFEST_DIR,
-    adopt_sibling,
     commit_generation,
     latest_manifest,
     load_existing_index,
@@ -73,11 +70,11 @@ def _topk_sets(spark, corpus, index, cents, queries, k_cells):
 def test_manifest_build_layout_and_read(spark, tmp_path):
     """Generation-1 layout: _manifests/manifest-00000001.json points at
     gen-00000001/; read_index resolves it; the raw path itself holds no
-    parquet (nothing to mistake for a rename-mode index)."""
+    parquet (nothing to mistake for a bare layout)."""
     base = _vecs(spark, range(60))
     cents = train_centroids(base, "embedding", "vec_id", k=4, iters=2)
     path = str(tmp_path / "ivf")
-    idx = build_ivf_index(base, "embedding", "vec_id", cents, path=path, commit="manifest")
+    idx = build_ivf_index(base, "embedding", "vec_id", cents, path=path)
     assert idx.count() == 60
 
     m = latest_manifest(spark, path)
@@ -95,7 +92,7 @@ def test_manifest_append_lands_in_current_generation(spark, tmp_path):
     base = _vecs(spark, range(60))
     cents = train_centroids(base, "embedding", "vec_id", k=4, iters=2)
     path = str(tmp_path / "ivf")
-    build_ivf_index(base, "embedding", "vec_id", cents, path=path, commit="manifest")
+    build_ivf_index(base, "embedding", "vec_id", cents, path=path)
     append_to_ivf_index(_vecs(spark, range(60, 80)), "embedding", "vec_id", cents, path)
     assert read_index(spark, path).count() == 80
     # still one generation — an append is not a commit
@@ -109,13 +106,13 @@ def test_manifest_retrain_probe_all_equals_brute_force(spark, tmp_path):
     base = _vecs(spark, range(100))
     cents = train_centroids(base, "embedding", "vec_id", k=k_cells, iters=5)
     path = str(tmp_path / "ivf")
-    build_ivf_index(base, "embedding", "vec_id", cents, path=path, commit="manifest")
+    build_ivf_index(base, "embedding", "vec_id", cents, path=path)
     baseline = global_mean_dist2(base, "embedding", cents)
 
     drifted = _vecs(spark, range(200, 240), offset=50.0)
     st = maintain_ivf_index(
         drifted, "embedding", "vec_id", cents, path, baseline,
-        retrain_factor=2.0, commit="manifest",
+        retrain_factor=2.0,
     )
     assert st["retrained"] is True
     m = latest_manifest(spark, path)
@@ -137,7 +134,7 @@ def test_manifest_crash_before_pointer_is_invisible(spark, tmp_path):
     base = _vecs(spark, range(60))
     cents = train_centroids(base, "embedding", "vec_id", k=4, iters=2)
     path = str(tmp_path / "ivf")
-    build_ivf_index(base, "embedding", "vec_id", cents, path=path, commit="manifest")
+    build_ivf_index(base, "embedding", "vec_id", cents, path=path)
 
     # simulate the crash: gen-2 layout written, pointer never published
     orphan = _vecs(spark, range(1000, 1010))
@@ -165,7 +162,7 @@ def test_manifest_partial_pointer_tmp_is_ignored(spark, tmp_path):
     base = _vecs(spark, range(40))
     cents = train_centroids(base, "embedding", "vec_id", k=2, iters=1)
     path = str(tmp_path / "ivf")
-    build_ivf_index(base, "embedding", "vec_id", cents, path=path, commit="manifest")
+    build_ivf_index(base, "embedding", "vec_id", cents, path=path)
     stray = path + f"/{MANIFEST_DIR}/manifest-00000009.json.tmp"
     with open(stray, "w") as fh:
         fh.write(json.dumps({"generation": 9, "dir": "gen-00000009"})[:10])
@@ -179,7 +176,7 @@ def test_manifest_missing_generation_dir_raises(spark, tmp_path):
     base = _vecs(spark, range(40))
     cents = train_centroids(base, "embedding", "vec_id", k=2, iters=1)
     path = str(tmp_path / "ivf")
-    build_ivf_index(base, "embedding", "vec_id", cents, path=path, commit="manifest")
+    build_ivf_index(base, "embedding", "vec_id", cents, path=path)
     import shutil
 
     shutil.rmtree(path + "/gen-00000001")
@@ -194,7 +191,7 @@ def test_manifest_gc_keeps_two_generations(spark, tmp_path):
     base = _vecs(spark, range(40))
     cents = train_centroids(base, "embedding", "vec_id", k=2, iters=1)
     path = str(tmp_path / "ivf")
-    build_ivf_index(base, "embedding", "vec_id", cents, path=path, commit="manifest")
+    build_ivf_index(base, "embedding", "vec_id", cents, path=path)
     for _ in range(3):
         snap = read_index(spark, path).localCheckpoint(eager=True)
         commit_generation(
@@ -218,12 +215,12 @@ def test_manifest_compact_publishes_new_generation(spark, tmp_path):
     base = _vecs(spark, range(50))
     cents = train_centroids(base, "embedding", "vec_id", k=4, iters=2)
     path = str(tmp_path / "ivf")
-    build_ivf_index(base, "embedding", "vec_id", cents, path=path, commit="manifest")
+    build_ivf_index(base, "embedding", "vec_id", cents, path=path)
     batch = _vecs(spark, range(50, 70))
     append_to_ivf_index(batch, "embedding", "vec_id", cents, path)
     append_to_ivf_index(batch, "embedding", "vec_id", cents, path)  # replay
     assert read_index(spark, path).count() == 90
-    res = compact_ivf_index(spark, path, "vec_id", commit="manifest")
+    res = compact_ivf_index(spark, path, "vec_id")
     assert res["rows_after"] == 70 and res["replay_rows"] == 20
     assert latest_manifest(spark, path)["generation"] == 2
     assert read_index(spark, path).count() == 70
@@ -245,15 +242,13 @@ def test_manifest_pq_retrain_probe_all(spark, tmp_path):
     cents = train_centroids(base, "embedding", "vec_id", k=k_cells, iters=3)
     books = train_pq(base, "embedding", "vec_id", m=2, nbits=2, iters=2)
     path = str(tmp_path / "ivfpq")
-    build_ivf_pq_index(
-        base, "embedding", "vec_id", cents, books, path=path, commit="manifest"
-    )
+    build_ivf_pq_index(base, "embedding", "vec_id", cents, books, path=path)
     baseline = global_mean_dist2(base, "embedding", cents)
 
     drifted = _vecs(spark, range(200, 230), offset=40.0)
     st = maintain_ivf_pq_index(
         drifted, "embedding", "vec_id", cents, books, path, baseline,
-        retrain_factor=2.0, nbits=2, commit="manifest",
+        retrain_factor=2.0, nbits=2,
     )
     assert st["retrained"] is True
     assert latest_manifest(spark, path)["generation"] == 2
@@ -267,98 +262,10 @@ def test_manifest_pq_retrain_probe_all(spark, tmp_path):
     assert by_q == {0, 205}
 
 
-# ---------------------------------------------------------------- rename-mode
-# crash adoption (ADVICE r9 #2: the swap window must not trigger a
-# silent batch-only rebuild)
-
-
-def _crash_in_swap_window(path: str) -> None:
-    """Reproduce _swap_directory's state after rename(base->old) and
-    before rename(tmp->base): base missing, tmp = complete NEW copy,
-    old = complete previous copy."""
-    os.rename(path, path + ".retrain.old")
-
-
-def test_rename_swap_window_crash_adopts_new_copy(spark, tmp_path):
-    """base missing + complete .retrain.tmp → maintain adopts the tmp
-    copy (the fully-written NEW index) and the retrain sees all prior
-    rows — never a batch-only rebuild."""
-    base_rows = _vecs(spark, range(100))
-    cents = train_centroids(base_rows, "embedding", "vec_id", k=4, iters=3)
-    path = str(tmp_path / "ivf")
-    build_ivf_index(base_rows, "embedding", "vec_id", cents, path=path)
-    baseline = global_mean_dist2(base_rows, "embedding", cents)
-
-    # the crashed retrain had fully written its new layout to tmp
-    os.rename(path, path + ".retrain.tmp")
-    # and had already renamed the previous live copy aside
-    build_ivf_index(
-        _vecs(spark, range(100)), "embedding", "vec_id", cents,
-        path=path + ".retrain.old",
-    )
-    assert not os.path.exists(path)
-
-    drifted = _vecs(spark, range(200, 240), offset=50.0)
-    st = maintain_ivf_index(
-        drifted, "embedding", "vec_id", cents, path, baseline, retrain_factor=2.0
-    )
-    assert st["retrained"] is True
-    index = spark.read.parquet(path)
-    # 100 adopted + 40 batch — a batch-only rebuild would hold 40
-    assert index.count() == 140
-    assert not os.path.exists(path + ".retrain.tmp")
-    assert not os.path.exists(path + ".retrain.old")
-
-
-def test_rename_swap_window_crash_adopts_old_when_tmp_incomplete(spark, tmp_path):
-    """tmp incomplete (no _SUCCESS) but old complete → adopt old."""
-    base_rows = _vecs(spark, range(60))
-    cents = train_centroids(base_rows, "embedding", "vec_id", k=4, iters=2)
-    path = str(tmp_path / "ivf")
-    build_ivf_index(base_rows, "embedding", "vec_id", cents, path=path)
-    _crash_in_swap_window(path)
-    os.makedirs(path + ".retrain.tmp")  # partial write, no _SUCCESS
-
-    adopted = adopt_sibling(spark, path)
-    assert adopted == ".retrain.old"
-    assert spark.read.parquet(path).count() == 60
-    assert not os.path.exists(path + ".retrain.tmp")
-
-
-def test_rename_all_siblings_incomplete_raises(spark, tmp_path):
-    """Siblings exist but none is complete: refuse loudly rather than
-    rebuild from one batch over a possibly-recoverable index."""
-    path = str(tmp_path / "ivf")
-    os.makedirs(path + ".retrain.tmp")
-    with pytest.raises(IOError, match="refusing to rebuild"):
-        load_existing_index(spark, path, "rename")
-
-
-def test_rename_fresh_index_is_still_fresh(spark, tmp_path):
-    """No path, no siblings → genuinely fresh (batch-only retrain is
-    the correct behavior and must keep working)."""
-    path = str(tmp_path / "ivf")
-    assert load_existing_index(spark, path, "rename") is None
-    assert adopt_sibling(spark, path) is None
-
-
-def test_unknown_commit_mode_raises(spark, tmp_path):
-    base = _vecs(spark, range(10))
-    cents = train_centroids(base, "embedding", "vec_id", k=2, iters=1)
-    with pytest.raises(ValueError, match="unknown commit mode"):
-        build_ivf_index(
-            base, "embedding", "vec_id", cents,
-            path=str(tmp_path / "x"), commit="s3-two-phase",
-        )
-    with pytest.raises(ValueError, match="unknown commit mode"):
-        load_existing_index(spark, str(tmp_path / "x"), "nope")
-
-
 def test_manifest_fit_batches_on_virgin_path_initialize_generation(spark, tmp_path):
     """Round-10 review find (the silent-discard hazard, end to end):
     in the streaming maintenance order, FIT batches can arrive before
-    any index exists. With commit="manifest" they must initialize
-    generation 1 — a bare-path append would strand rows outside the
+    any index exists. They must initialize generation 1 — a bare-path append would strand rows outside the
     manifest layout, and the eventual drift retrain would either
     refuse or (pre-fix) silently rebuild from the drifting batch
     alone, discarding every appended vector."""
@@ -366,11 +273,12 @@ def test_manifest_fit_batches_on_virgin_path_initialize_generation(spark, tmp_pa
     cents = train_centroids(base, "embedding", "vec_id", k=4, iters=3)
     baseline = global_mean_dist2(base, "embedding", cents)
     path = str(tmp_path / "ivf")
+    assert load_existing_index(spark, path) is None  # genuinely fresh
 
     # fit batch on a VIRGIN path: initializes gen-1, never a bare append
     st = maintain_ivf_index(
         base, "embedding", "vec_id", cents, path, baseline,
-        retrain_factor=2.0, commit="manifest",
+        retrain_factor=2.0,
     )
     assert st["retrained"] is False
     assert latest_manifest(spark, path)["generation"] == 1
@@ -380,7 +288,7 @@ def test_manifest_fit_batches_on_virgin_path_initialize_generation(spark, tmp_pa
     calm = _vecs(spark, range(100, 120))
     maintain_ivf_index(
         calm, "embedding", "vec_id", cents, path, baseline,
-        retrain_factor=2.0, commit="manifest",
+        retrain_factor=2.0,
     )
     assert latest_manifest(spark, path)["generation"] == 1
     assert read_index(spark, path).count() == 120
@@ -390,105 +298,75 @@ def test_manifest_fit_batches_on_virgin_path_initialize_generation(spark, tmp_pa
     drifted = _vecs(spark, range(200, 240), offset=50.0)
     st2 = maintain_ivf_index(
         drifted, "embedding", "vec_id", cents, path, baseline,
-        retrain_factor=2.0, commit="manifest",
+        retrain_factor=2.0,
     )
     assert st2["retrained"] is True
     assert read_index(spark, path).count() == 160
 
 
 def test_manifest_mode_refuses_unmanifested_data(spark, tmp_path):
-    """A rename-mode layout (or stranded bare appends) at the path
-    must make manifest-mode maintenance raise, never treat the index
-    as fresh and abandon it."""
+    """Bare parquet at the path (stranded appends, or a layout from an
+    older directory-swapping release) must make maintenance, appends,
+    rebuilds and compaction raise — never treat the index as fresh and
+    abandon it, and never publish a generation beside it."""
     base = _vecs(spark, range(60))
     cents = train_centroids(base, "embedding", "vec_id", k=4, iters=2)
     path = str(tmp_path / "ivf")
-    build_ivf_index(base, "embedding", "vec_id", cents, path=path)  # rename layout
+    build_ivf_index(base, "embedding", "vec_id", cents).write.partitionBy(
+        "list_id"
+    ).parquet(path)
+    layout = sorted(os.listdir(path))
 
     with pytest.raises(IOError, match="committed manifest"):
-        load_existing_index(spark, path, "manifest")
+        load_existing_index(spark, path)
 
     drifted = _vecs(spark, range(200, 240), offset=50.0)
     with pytest.raises(IOError, match="committed manifest"):
         maintain_ivf_index(
             drifted, "embedding", "vec_id", cents, path,
             global_mean_dist2(base, "embedding", cents),
-            retrain_factor=2.0, commit="manifest",
+            retrain_factor=2.0,
         )
     # the fit path refuses too (it would strand MORE rows)
     with pytest.raises(IOError, match="committed manifest"):
         maintain_ivf_index(
             base, "embedding", "vec_id", cents, path,
             global_mean_dist2(base, "embedding", cents),
-            retrain_factor=2.0, commit="manifest",
+            retrain_factor=2.0,
         )
-    # the rename-mode index is untouched by the refusals
+    with pytest.raises(IOError, match="no committed index"):
+        append_to_ivf_index(
+            _vecs(spark, range(60, 70)), "embedding", "vec_id", cents, path
+        )
+    # initialization onto the DIRTY root refuses at the commit
+    # chokepoint instead of silently converting it
+    with pytest.raises(IOError, match="non-manifest content"):
+        build_ivf_index(base, "embedding", "vec_id", cents, path=path)
+    with pytest.raises(IOError, match="no committed index"):
+        compact_ivf_index(spark, path, "vec_id")
+    # the bare layout is untouched by the refusals
+    assert sorted(os.listdir(path)) == layout
     assert spark.read.parquet(path).count() == 60
 
 
-def test_invalid_commit_mode_fails_without_path_too(spark):
-    """Round-10 review find: build_ivf_index validated the commit mode
-    only on the path-writing branch, so a typo'd mode passed silently
-    through in-memory tests and first failed in production."""
-    base = _vecs(spark, range(10))
+def test_append_without_committed_manifest_raises_and_writes_nothing(spark, tmp_path):
+    """An append to a path with no committed index raises instead of
+    leaving bare rows outside the layout, which the next commit would
+    then refuse to initialize over."""
+    base = _vecs(spark, range(20))
     cents = train_centroids(base, "embedding", "vec_id", k=2, iters=1)
-    with pytest.raises(ValueError, match="unknown commit mode"):
-        build_ivf_index(base, "embedding", "vec_id", cents, commit="manifets")
-    with pytest.raises(ValueError, match="unknown commit mode"):
-        maintain_ivf_index(
-            base, "embedding", "vec_id", cents, "/tmp/nowhere", 1.0, commit="x"
-        )
-
-
-def test_rename_mode_refuses_manifest_index(spark, tmp_path):
-    """Cross-mode guard, the mirror of the un-manifested-data refusal:
-    rename-mode maintenance/compaction on a manifest-committed index
-    would misread the root (pointer JSONs + generation dirs as one
-    parquet layout) and its rewrite would swap-delete the generation
-    history — both entry points must refuse with the fix named."""
-    base = _vecs(spark, range(50))
-    cents = train_centroids(base, "embedding", "vec_id", k=4, iters=2)
     path = str(tmp_path / "ivf")
-    build_ivf_index(base, "embedding", "vec_id", cents, path=path, commit="manifest")
+    with pytest.raises(IOError, match="no committed index"):
+        append_to_ivf_index(base, "embedding", "vec_id", cents, path)
+    assert not os.path.exists(path)
 
-    with pytest.raises(IOError, match="manifest-committed"):
-        load_existing_index(spark, path, "rename")
-    with pytest.raises(IOError, match="manifest-committed"):
-        compact_ivf_index(spark, path, "vec_id")  # commit defaults to rename
-    with pytest.raises(IOError, match="manifest-committed"):
-        maintain_ivf_index(
-            _vecs(spark, range(200, 220), offset=50.0),
-            "embedding", "vec_id", cents, path,
-            global_mean_dist2(base, "embedding", cents),
-            retrain_factor=2.0,  # commit defaults to rename
-        )
-    # ... and on a CALM batch too — the guard sits at maintain ENTRY,
-    # so a misconfigured streaming job fails its first batch, not at
-    # an arbitrary later drift point (second-review find)
-    with pytest.raises(IOError, match="manifest-committed"):
-        maintain_ivf_index(
-            _vecs(spark, range(50, 60)),
-            "embedding", "vec_id", cents, path,
-            global_mean_dist2(base, "embedding", cents),
-            retrain_factor=1e9,  # guaranteed fit -> append path
-        )
-    # build's rename overwrite refuses as well (it would wipe the
-    # generation history with no error)
-    with pytest.raises(IOError, match="manifest-committed"):
-        build_ivf_index(base, "embedding", "vec_id", cents, path=path)
-    # manifest-mode initialization onto a DIRTY (rename-layout) root
-    # refuses at the commit chokepoint instead of silently converting
-    rename_path = str(tmp_path / "plain")
-    build_ivf_index(base, "embedding", "vec_id", cents, path=rename_path)
-    with pytest.raises(IOError, match="non-manifest content"):
-        build_ivf_index(
-            base, "embedding", "vec_id", cents, path=rename_path, commit="manifest"
-        )
-    with pytest.raises(IOError, match="non-manifest content"):
-        compact_ivf_index(spark, rename_path, "vec_id", commit="manifest")
-    # the manifest index is untouched by the refusals
-    assert latest_manifest(spark, path)["generation"] == 1
-    assert read_index(spark, path).count() == 50
+    # orphan generations only (a crashed first commit): still no index
+    orphan = path + "/gen-00000001"
+    base.withColumn("list_id", F.lit(0)).write.partitionBy("list_id").parquet(orphan)
+    with pytest.raises(IOError, match="no committed index"):
+        append_to_ivf_index(base, "embedding", "vec_id", cents, path)
+    assert os.listdir(path) == ["gen-00000001"]
+    assert spark.read.parquet(orphan).count() == 20
 
 
 def test_manifest_protocol_model_based(spark, tmp_path):

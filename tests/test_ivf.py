@@ -13,6 +13,10 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from open_data_pipelines_spark.operators.index_commit import (
+    read_index,
+    resolve_index_path,
+)
 from open_data_pipelines_spark.operators.ivf import (
     build_ivf_index,
     ivf_topk,
@@ -93,11 +97,15 @@ def test_partitioned_index_prunes_cells(spark, tmp_path, ivf):
     emb, _queries, cents, _idx = ivf
     path = str(tmp_path / "ivf_index")
     idx = build_ivf_index(emb, "embedding", "vec_id", cents, path=path)
-    # layout: one directory per cell -> probing nprobe cells is a
-    # partition-pruned scan
+    # layout: one directory per cell inside the committed generation
+    # -> probing nprobe cells is a partition-pruned scan
     import os
 
-    dirs = {d for d in os.listdir(path) if d.startswith("list_id=")}
+    dirs = {
+        d
+        for d in os.listdir(resolve_index_path(spark, path))
+        if d.startswith("list_id=")
+    }
     assert len(dirs) == len({r["list_id"] for r in idx.select("list_id").distinct().collect()})
     plan = idx.filter(F.col("list_id") == 3)._jdf.queryExecution().executedPlan().toString()
     assert "PartitionFilters: [isnotnull(list_id" in plan
@@ -125,7 +133,7 @@ def test_append_to_ivf_index_and_drift(spark, tmp_path):
     cents = train_centroids(base, "embedding", "vec_id", k=4, iters=5)
     path = str(tmp_path / "ivf")
     build_ivf_index(base, "embedding", "vec_id", cents, path=path)
-    n0 = spark.read.parquet(path).count()
+    n0 = read_index(spark, path).count()
 
     # offset 0.25 keeps the batch in-distribution but gives id 100 the
     # direction [3.25, 1.25] (ratio 13/5), which NO base grid vector
@@ -136,7 +144,7 @@ def test_append_to_ivf_index_and_drift(spark, tmp_path):
     # round-9 test-review find)
     batch = vecs(range(100, 120), offset=0.25)
     append_to_ivf_index(batch, "embedding", "vec_id", cents, path)
-    index = spark.read.parquet(path)
+    index = read_index(spark, path)
     assert index.count() == n0 + 20
 
     # an appended vector is findable via probes on the refreshed index
@@ -186,7 +194,7 @@ def test_maintain_ivf_index_retrain_policy(spark, tmp_path):
     )
     assert st["retrained"] is False
     assert st["centroids"] == cents and st["baseline_mean_dist2"] == baseline
-    assert spark.read.parquet(path).count() == 120
+    assert read_index(spark, path).count() == 120
 
     # drifted batch: retrain fires, the whole index is remapped
     drifted = vecs(range(200, 240), offset=50.0)
@@ -196,7 +204,7 @@ def test_maintain_ivf_index_retrain_policy(spark, tmp_path):
     )
     assert st2["retrained"] is True
     assert st2["centroids"] != cents
-    index = spark.read.parquet(path)
+    index = read_index(spark, path)
     assert index.count() == 160
 
     # the new bank actually fits the union better than the old one did
@@ -252,7 +260,7 @@ def test_compact_removes_replayed_appends(spark, tmp_path):
     append_to_ivf_index(batch, "embedding", "vec_id", cents, path)
     append_to_ivf_index(batch, "embedding", "vec_id", cents, path)  # replay
 
-    assert spark.read.parquet(path).count() == 120
+    assert read_index(spark, path).count() == 120
     res = compact_ivf_index(spark, path, "vec_id")
     assert res == {
         "rows_before": 120,
@@ -260,7 +268,7 @@ def test_compact_removes_replayed_appends(spark, tmp_path):
         "replay_rows": 20,
         "conflict_ids": 0,
     }
-    idx = spark.read.parquet(path)
+    idx = read_index(spark, path)
     assert idx.count() == 100
     assert "list_id" in idx.columns  # partitioned layout rewritten
 
@@ -305,7 +313,7 @@ def test_compact_conflicting_payloads(spark, tmp_path):
     res = compact_ivf_index(spark, path, "vec_id", on_conflict="min")
     assert res["conflict_ids"] == 1 and res["rows_after"] == 40
     kept = (
-        spark.read.parquet(path).filter(F.col("vec_id") == 7).collect()
+        read_index(spark, path).filter(F.col("vec_id") == 7).collect()
     )
     assert len(kept) == 1
     # lexicographic min of the two payload vectors is the original
@@ -318,8 +326,6 @@ def test_retrain_compacts_replayed_appends(spark, tmp_path):
     copies (compact_on_retrain default), not just the standalone
     compact operator. Replay a batch, then force a retrain: the
     rebuilt index holds exactly-once contents."""
-    import os
-
     from open_data_pipelines_spark.operators.ivf import (
         append_to_ivf_index,
         global_mean_dist2,
@@ -335,14 +341,14 @@ def test_retrain_compacts_replayed_appends(spark, tmp_path):
     batch = _mk_vecs(spark, range(100, 120))
     append_to_ivf_index(batch, "embedding", "vec_id", cents, path)
     append_to_ivf_index(batch, "embedding", "vec_id", cents, path)  # replay
-    assert spark.read.parquet(path).count() == 140
+    assert read_index(spark, path).count() == 140
 
     drifted = _mk_vecs(spark, range(200, 240), offset=50.0)
     st = maintain_ivf_index(
         drifted, "embedding", "vec_id", cents, path, baseline, retrain_factor=2.0
     )
     assert st["retrained"] is True
-    idx = spark.read.parquet(path)
+    idx = read_index(spark, path)
     assert idx.count() == 160  # 100 + 20 (replay collapsed) + 40
     assert idx.select("vec_id").distinct().count() == 160
 
@@ -379,36 +385,7 @@ def test_retrain_compacts_replayed_appends(spark, tmp_path):
         compact_on_retrain=False,
     )
     assert st2["retrained"] is True
-    assert spark.read.parquet(path).count() == 180
-
-
-def test_compact_swaps_atomically_and_cleans_siblings(spark, tmp_path):
-    """ADVICE r8: the compaction rewrite must never overwrite the only
-    durable copy in place — it writes a sibling and swaps. After a
-    successful compact neither scratch sibling remains and the index
-    reads back complete."""
-    import os
-
-    from open_data_pipelines_spark.operators.ivf import (
-        append_to_ivf_index,
-        compact_ivf_index,
-    )
-
-    base = _mk_vecs(spark, range(60))
-    cents = train_centroids(base, "embedding", "vec_id", k=4, iters=3)
-    path = str(tmp_path / "ivf")
-    build_ivf_index(base, "embedding", "vec_id", cents, path=path)
-    batch = _mk_vecs(spark, range(60, 70))
-    append_to_ivf_index(batch, "embedding", "vec_id", cents, path)
-    append_to_ivf_index(batch, "embedding", "vec_id", cents, path)  # replay
-
-    res = compact_ivf_index(spark, path, "vec_id")
-    assert res["replay_rows"] == 10
-    assert not os.path.exists(path + ".compact.tmp")
-    assert not os.path.exists(path + ".compact.old")
-    idx = spark.read.parquet(path)
-    assert idx.count() == 70
-    assert "list_id" in idx.columns
+    assert read_index(spark, path).count() == 180
 
 
 def test_retrain_schema_mismatch_fails_loud_not_silent_rebuild(spark, tmp_path):
@@ -447,4 +424,4 @@ def test_retrain_schema_mismatch_fails_loud_not_silent_rebuild(spark, tmp_path):
             drifted, "embedding", "vec_id", cents, path, baseline, retrain_factor=2.0
         )
     # the on-disk index is untouched — all 60 historical rows survive
-    assert spark.read.parquet(path).count() == 60
+    assert read_index(spark, path).count() == 60

@@ -19,6 +19,10 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from open_data_pipelines_spark.operators.index_commit import (
+    read_index,
+    resolve_index_path,
+)
 from open_data_pipelines_spark.operators.ivf import (
     build_ivf_index,
     cap_hot_cells,
@@ -223,7 +227,7 @@ def test_maintain_ivf_pq_retrains_both_models_on_drift(spark, tmp_path):
     )
     assert st["retrained"] is False
     assert st["codebooks"] == books
-    assert spark.read.parquet(path).count() == 120
+    assert read_index(spark, path).count() == 120
 
     drifted = vecs(range(200, 240), offset=50.0)
     st2 = maintain_ivf_pq_index(
@@ -239,7 +243,7 @@ def test_maintain_ivf_pq_retrains_both_models_on_drift(spark, tmp_path):
     assert st2["retrained"] is True
     assert st2["codebooks"] != books and st2["centroids"] != cents
     assert len(st2["codebooks"]) == m and len(st2["codebooks"][0]) == 1 << nbits
-    index = spark.read.parquet(path)
+    index = read_index(spark, path)
     assert index.count() == 160
 
     full = base.unionByName(calm).unionByName(drifted)
@@ -303,7 +307,7 @@ def test_pq_retrain_schema_mismatch_fails_loud(spark, tmp_path):
             drifted, "embedding", "vec_id", cents, books, path, baseline,
             retrain_factor=2.0, nbits=2,
         )
-    assert spark.read.parquet(path).count() == 60
+    assert read_index(spark, path).count() == 60
 
 
 def test_pq_meta_pins_nbits_across_bare_maintenance(spark, tmp_path):
@@ -363,7 +367,7 @@ def test_pq_meta_pins_nbits_across_bare_maintenance(spark, tmp_path):
 
 
 def test_pq_meta_survives_manifest_generations(spark, tmp_path):
-    """Manifest-mode twin: the meta is written INSIDE each generation
+    """Generation twin: the meta is written INSIDE each generation
     directory before the pointer publishes, so read_pq_meta always
     describes the committed generation a reader would scan."""
     from open_data_pipelines_spark.operators.ivf import global_mean_dist2
@@ -378,9 +382,7 @@ def test_pq_meta_survives_manifest_generations(spark, tmp_path):
     cents = train_centroids(base, "embedding", "vec_id", k=2, iters=2)
     books = train_pq(base, "embedding", "vec_id", m=2, nbits=3, iters=2)
     path = str(tmp_path / "ivfpq_manifest")
-    build_ivf_pq_index(
-        base, "embedding", "vec_id", cents, books, path, commit="manifest", nbits=3
-    )
+    build_ivf_pq_index(base, "embedding", "vec_id", cents, books, path, nbits=3)
     assert read_pq_meta(spark, path) == {"nbits": 3, "m": 2}
     baseline = global_mean_dist2(base, "embedding", cents)
 
@@ -390,7 +392,7 @@ def test_pq_meta_survives_manifest_generations(spark, tmp_path):
     )
     st = maintain_ivf_pq_index(
         drifted, "embedding", "vec_id", cents, books, path, baseline,
-        retrain_factor=2.0, commit="manifest",
+        retrain_factor=2.0,
     )
     assert st["retrained"] is True and st["nbits"] == 3
     assert read_pq_meta(spark, path) == {"nbits": 3, "m": 2}
@@ -416,7 +418,8 @@ def test_pq_meta_legacy_index_still_warns_and_m_mismatch_raises(spark, tmp_path)
     books = train_pq(base, "embedding", "vec_id", m=2, nbits=3, iters=2)
     path = str(tmp_path / "ivfpq_legacy")
     build_ivf_pq_index(base, "embedding", "vec_id", cents, books, path, nbits=3)
-    os.remove(os.path.join(path, "_pq_meta.json"))  # simulate a legacy index
+    # simulate a legacy index: a generation written before the meta existed
+    os.remove(os.path.join(resolve_index_path(spark, path), "_pq_meta.json"))
     assert read_pq_meta(spark, path) is None
     baseline = global_mean_dist2(base, "embedding", cents)
     drifted = spark.createDataFrame(

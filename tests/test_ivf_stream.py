@@ -9,6 +9,10 @@ import time
 
 from pyspark.sql import functions as F
 
+from open_data_pipelines_spark.operators.index_commit import (
+    latest_manifest,
+    read_index,
+)
 from open_data_pipelines_spark.operators.ivf import (
     build_ivf_index,
     global_mean_dist2,
@@ -71,7 +75,7 @@ def test_stream_maintains_index_and_retrains_on_drift(spark, tmp_path):
     assert state["retrains"] == 1  # only the drifted batch trips the gate
     assert state["centroids"] != cents
 
-    index = spark.read.parquet(index_path)
+    index = read_index(spark, index_path)
     assert index.count() == 160
 
     full = base.unionByName(calm).unionByName(drifted)
@@ -124,7 +128,7 @@ def test_drift_first_batch_on_fresh_index_path(spark, tmp_path):
     q.awaitTermination(120)
     assert state["retrains"] == 1 and state["batches"] == 1
 
-    index = spark.read.parquet(index_path)
+    index = read_index(spark, index_path)
     assert index.count() == 40
     queries = _vecs(spark, [301], offset=50.0)
     cols = ["query_id", "neighbor_id", "rank", "cosine_sim"]
@@ -193,7 +197,7 @@ def test_bank_state_survives_restart(spark, tmp_path):
     assert s2["retrains"] == 0       # calm batch against the true bank
     assert s2["batches"] == 2        # counter carried across sessions
 
-    index = spark.read.parquet(index_path)
+    index = read_index(spark, index_path)
     assert index.count() == 140
     full = base.unionByName(calm1).unionByName(calm2)
     queries = _vecs(spark, [0, 101, 121])
@@ -300,7 +304,7 @@ def test_pq_bank_survives_restart(spark, tmp_path):
     assert s2["retrains"] == 0 and s2["generation"] == 0
     assert s2["batches"] == 2          # counter carried across sessions
 
-    index = spark.read.parquet(index_path)
+    index = read_index(spark, index_path)
     assert index.count() == 140
     full = base.unionByName(calm1).unionByName(calm2)
     queries = _vecs4(spark, [0, 101, 121])
@@ -369,7 +373,7 @@ def test_pq_stream_retrain_bumps_generation_and_persists(spark, tmp_path):
     assert persisted["codebooks"] == st["codebooks"]
 
     # search with the persisted generation is exact at probe-all
-    index = spark.read.parquet(index_path)
+    index = read_index(spark, index_path)
     full = base.unionByName(drifted)
     queries = _vecs4(spark, [0, 205])
     cols = ["query_id", "neighbor_id", "rank", "cosine_sim"]
@@ -518,16 +522,11 @@ def test_sidecar_validation_rejects_stale_banks(spark, tmp_path):
 
 
 def test_stream_manifest_commit_end_to_end(spark, tmp_path):
-    """commit="manifest" through the REAL foreachBatch path, starting
+    """The manifest commit through the REAL foreachBatch path, starting
     from a VIRGIN index path (the round-10 review's silent-discard
     scenario): fit batch 1 initializes generation 1, fit batch 2
     appends inside it, the drifted batch retrains to generation 2 with
     ALL prior rows, and probe-all == brute force after the drain."""
-    from open_data_pipelines_spark.operators.index_commit import (
-        latest_manifest,
-        read_index,
-    )
-
     base = _vecs(spark, range(100))
     cents = train_centroids(base, "embedding", "vec_id", k=K_CELLS, iters=5)
     baseline = global_mean_dist2(base, "embedding", cents)
@@ -557,7 +556,6 @@ def test_stream_manifest_commit_end_to_end(spark, tmp_path):
         cents,
         baseline,
         retrain_factor=2.0,
-        commit="manifest",
     )
     q.awaitTermination()
 

@@ -665,7 +665,7 @@ def ivf_compact_scenario(sizes=(100_000, 1_000_000)) -> None:
     For each size: build a dim-16 IVF index, replay-append a 10% batch
     twice (the at-least-once posture), then measure (a)
     ``compact_ivf_index`` — one dropDuplicates shuffle + conflict scan
-    + sibling-swap rewrite — and (b) a forced retrain with
+    + a rewrite published as a new index generation — and (b) a forced retrain with
     ``compact_on_retrain`` on vs off (the delta IS the dropDuplicates
     the retrain absorbs). Both should scale linearly in rows: the
     compaction shuffles (id, vector) rows once, never anything
@@ -734,66 +734,6 @@ def ivf_compact_scenario(sizes=(100_000, 1_000_000)) -> None:
             "retrain_compact_off_sec": timings[False],
         }
     print(json.dumps({"scenario": "ivf_compact", "sizes": results}))
-
-
-def index_commit_scenario(sizes=(100_000, 1_000_000)) -> None:
-    """Round 10: commit-protocol overhead, rename vs manifest.
-
-    For each size: build the same dim-16 IVF index under both commit
-    modes, replay-append a 10% batch twice, and time the full
-    ``compact_ivf_index`` under each protocol. The compaction work
-    (dropDuplicates shuffle + conflict scan + partitioned rewrite) is
-    identical; the DELTA is the commit itself — two directory renames
-    (rename) vs one generation write + one small-object pointer
-    publish + GC listing (manifest). The expectation this pins: the
-    manifest protocol's object-store safety is free at any index size
-    (the pointer is O(100 bytes); GC is one directory listing)."""
-    import tempfile
-    import time
-
-    from pyspark.sql import functions as F
-
-    from open_data_pipelines_spark.operators.ivf import (
-        append_to_ivf_index,
-        build_ivf_index,
-        compact_ivf_index,
-        train_centroids,
-    )
-    from open_data_pipelines_spark.session import get_spark
-
-    spark = get_spark("stress-index-commit")
-    spark.sparkContext.setLogLevel("ERROR")
-    results = {}
-    for n in sizes:
-        dim = 16
-        vecs = spark.range(n).select(
-            F.col("id").alias("vec_id"),
-            F.array(
-                *[
-                    (F.pmod(F.xxhash64(F.col("id") + F.lit(j)), F.lit(1000)) / 100.0)
-                    for j in range(dim)
-                ]
-            ).alias("embedding"),
-        )
-        cents = train_centroids(vecs.limit(10_000), "embedding", "vec_id", k=16, iters=2)
-        batch = vecs.filter(F.col("vec_id") % 10 == 0)
-        per_mode = {}
-        for mode in ("rename", "manifest"):
-            with tempfile.TemporaryDirectory() as td:
-                path = td + "/ivf"
-                build_ivf_index(
-                    vecs, "embedding", "vec_id", cents, path=path, commit=mode
-                )
-                append_to_ivf_index(batch, "embedding", "vec_id", cents, path)
-                append_to_ivf_index(batch, "embedding", "vec_id", cents, path)
-                t0 = time.perf_counter()
-                res = compact_ivf_index(spark, path, "vec_id", commit=mode)
-                per_mode[mode] = {
-                    "compact_sec": round(time.perf_counter() - t0, 3),
-                    "replay_rows": res["replay_rows"],
-                }
-        results[n] = per_mode
-    print(json.dumps({"scenario": "index_commit", "sizes": results}))
 
 
 def substring_scenario(n_docs: int = 20_000) -> None:
@@ -2035,9 +1975,6 @@ def main() -> None:
         return
     if "--semdedup" in sys.argv:
         semdedup_scenario()
-        return
-    if "--index-commit" in sys.argv:
-        index_commit_scenario()
         return
     if "--ivf-compact" in sys.argv:
         ivf_compact_scenario()
