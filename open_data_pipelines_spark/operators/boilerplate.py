@@ -6,11 +6,11 @@ surviving lines back into documents).
 
 Scale shape: explode docs to (doc, line_idx, line) rows, ONE
 hash-groupBy over the line fingerprint counting distinct docs
-(map-side combinable), broadcast the boilerplate fingerprint set when
-it is small (it usually is — boilerplate is by definition
-heavy-hitter lines) with a shuffle-join fallback flag, then a
-groupBy(doc) reassembly ordered by line index. Two keyed shuffles
-total, never a product, no window over the raw corpus.
+(map-side combinable), then strip each document's lines against the
+boilerplate fingerprint set (small — boilerplate is by definition
+heavy-hitter lines): row-locally when the set is inlinable, else by a
+broadcast anti-join and a groupBy(doc) reassembly ordered by line
+index. Never a product, no window over the raw corpus.
 
 The line fingerprint is md5 of the whitespace-normalized line, so
 cosmetic indentation variants of the same banner collapse — the same
@@ -24,6 +24,10 @@ from pyspark.sql import functions as F
 
 from ..caching import lazy_checkpoint
 from .text_analysis import normalize_text
+
+#: Largest boilerplate fingerprint set :func:`strip_boilerplate_lines`
+#: inlines into its row-local filter; a larger set takes the join path.
+MAX_INLINE_FPS = 4096
 
 
 def _line_rows(
@@ -97,9 +101,6 @@ def strip_boilerplate_lines(
     text_col: str,
     id_col: str,
     min_docs: int = 3,
-    broadcast_boilerplate: bool = True,
-    method: str = "auto",
-    max_inline_fps: int = 4096,
 ) -> DataFrame:
     """Remove every line appearing in >= ``min_docs`` distinct docs and
     reassemble the remaining lines in order. Schema preserved; docs
@@ -110,92 +111,70 @@ def strip_boilerplate_lines(
     (round 12 — dropping them degraded html+boilerplate+paragraph
     runs to whole-document dedup granularity).
 
-    ``method`` (round 14): ``"filter"`` strips ROW-LOCALLY — the
-    boilerplate fingerprints (dim-sized by construction: heavy-hitter
-    lines) are collected once and each document's lines are filtered
-    with an array HOF, so after the one unavoidable counting
-    aggregation there is NO anti-join, NO per-line reassembly shuffle
-    and NO rebuilt-corpus join back onto ``df`` (the join path pays
-    all three; at sf0.1 the swap cut the funnel's boilerplate stage
-    ~2x). ``"join"`` is the former shape — anti-join + groupBy
-    reassembly — kept for fingerprint sets too big to inline.
-    ``"auto"`` (default) collects up to ``max_inline_fps`` + 1
-    fingerprints and picks ``filter`` when the set fits, else
-    ``join``. Both produce identical text for every document
-    (equality-pinned in tests/test_boilerplate.py).
+    The boilerplate fingerprints are collected once (up to
+    ``MAX_INLINE_FPS`` + 1 of them). When the set fits, each document's
+    lines are filtered ROW-LOCALLY with an array HOF, so after the one
+    unavoidable counting aggregation there is NO anti-join, NO per-line
+    reassembly shuffle and NO rebuilt-corpus join back onto ``df`` (at
+    sf0.1 this cut the funnel's boilerplate stage ~2x against the join
+    path). A larger set takes the join path: a broadcast anti-join of
+    the exploded lines plus a groupBy reassembly. Both produce
+    identical text for every document (equality-pinned in
+    tests/test_boilerplate.py).
 
-    EAGER at construction for ``method != "join"``: the fingerprint
-    probe is a Spark job (a ``collect``), so calling this function
-    executes the whole upstream plan BEFORE any action on the result
-    — unlike the join path, which computes the set lazily at first
-    action. Freezing the set at construction time is also a
-    semantics choice: the stripped text is pinned to the corpus as
-    seen NOW, not re-derived per downstream action. Callers that
-    only need the unexecuted plan (explain/audit paths) should pass
-    ``method="join"``.
-
-    ``broadcast_boilerplate=True`` (default) broadcasts the offending
-    fingerprint set on the JOIN path — correct while boilerplate stays
-    dim-sized. Set False at extreme corpus diversity to force the
-    shuffle anti-join (same semantics, one more keyed exchange) —
-    mirroring the decontamination operator's broadcast/shuffle flag.
+    EAGER at construction: the fingerprint probe is a Spark job (a
+    ``collect``), so calling this function executes the whole upstream
+    plan BEFORE any action on the result. Freezing the set at
+    construction time is also a semantics choice: the stripped text is
+    pinned to the corpus as seen NOW, not re-derived per downstream
+    action.
     """
-    if method not in ("auto", "filter", "join"):
-        raise ValueError(f"unknown method {method!r}")
-    if method != "join":
-        fps = _boilerplate_fps(
-            _line_rows(df, text_col, id_col), id_col, min_docs
-        ).select("line_fp")
-        head = [r.line_fp for r in fps.limit(max_inline_fps + 1).collect()]
-        if len(head) <= max_inline_fps:
-            # complete set (the limit was not hit) — strip row-locally.
-            # The HOF is CodegenFallback (interpreted), so an under-
-            # partitioned input would serialize the whole strip onto
-            # one core — a hazard the join path never had because its
-            # shuffles re-spread implicitly (the lang_classifier._spread
-            # rule); the guard is a no-op on well-partitioned corpora
-            target = df.sparkSession.sparkContext.defaultParallelism
-            # JVM-side probe (round 15): avoids the PythonRDD wrap
-            if df._jdf.queryExecution().toRdd().getNumPartitions() < target:
-                df = df.repartition(target)
-            lines = F.split(F.col(text_col), r"\n")
-            if head:
-                # one InSet membership test per line; md5('') is never
-                # in the set (_boilerplate_fps counts non-blank norms
-                # only), so blank paragraph boundaries always survive
-                kept = F.filter(
-                    lines,
-                    lambda l: ~F.md5(normalize_text(l)).isin(*head),
-                )
-            else:
-                kept = lines
-            new_text = F.coalesce(F.array_join(kept, "\n"), F.lit(""))
-            return df.select(
-                *[
-                    new_text.alias(text_col) if c == text_col else F.col(c)
-                    for c in df.columns
-                ]
+    fps = _boilerplate_fps(
+        _line_rows(df, text_col, id_col), id_col, min_docs
+    ).select("line_fp")
+    head = [r.line_fp for r in fps.limit(MAX_INLINE_FPS + 1).collect()]
+    if len(head) <= MAX_INLINE_FPS:
+        # complete set (the limit was not hit) — strip row-locally.
+        # The HOF is CodegenFallback (interpreted), so an under-
+        # partitioned input would serialize the whole strip onto
+        # one core — a hazard the join path never had because its
+        # shuffles re-spread implicitly (the lang_classifier._spread
+        # rule); the guard is a no-op on well-partitioned corpora
+        target = df.sparkSession.sparkContext.defaultParallelism
+        # JVM-side probe (round 15): avoids the PythonRDD wrap
+        if df._jdf.queryExecution().toRdd().getNumPartitions() < target:
+            df = df.repartition(target)
+        lines = F.split(F.col(text_col), r"\n")
+        if head:
+            # one InSet membership test per line; md5('') is never
+            # in the set (_boilerplate_fps counts non-blank norms
+            # only), so blank paragraph boundaries always survive
+            kept = F.filter(
+                lines,
+                lambda l: ~F.md5(normalize_text(l)).isin(*head),
             )
-        if method == "filter":
-            raise ValueError(
-                f"method='filter' but > {max_inline_fps} boilerplate "
-                "fingerprints — use method='join' (or raise max_inline_fps)"
-            )
-        # auto + oversized set: fall through to the join path
-    # ONE line-explode shared by the audit aggregation and the
-    # anti-join side — lazily checkpointed so the explode+fingerprint
-    # pass over the corpus executes once, not twice (blocks reclaimed
+        else:
+            kept = lines
+        new_text = F.coalesce(F.array_join(kept, "\n"), F.lit(""))
+        return df.select(
+            *[
+                new_text.alias(text_col) if c == text_col else F.col(c)
+                for c in df.columns
+            ]
+        )
+    # oversized set: the join path. ONE line-explode shared by the
+    # boilerplate aggregation and the anti-join side — lazily
+    # checkpointed so the explode+fingerprint pass over the corpus
+    # executes once, not twice (blocks reclaimed
     # when the result frame is GC'd). Blank lines RIDE the explode but
     # are excluded from the boilerplate count: they are paragraph
     # boundaries (the CCNet separator html_to_text emits), and the old
     # drop-blanks reassembly silently degraded any downstream
     # paragraph stage to whole-document granularity (round-12 review)
     rows = lazy_checkpoint(_line_rows(df, text_col, id_col, keep_blank=True))
-    bad = _boilerplate_fps(
-        rows.filter(F.col("__norm") != ""), id_col, min_docs
-    ).select("line_fp")
-    if broadcast_boilerplate:
-        bad = F.broadcast(bad)
+    bad = F.broadcast(
+        _boilerplate_fps(rows.filter(F.col("__norm") != ""), id_col, min_docs).select("line_fp")
+    )
     kept = rows.join(bad, rows["__fp"] == bad["line_fp"], "left_anti")
     rebuilt = kept.groupBy(id_col).agg(
         F.concat_ws(

@@ -22,9 +22,7 @@ Scale design (the asymmetry is the whole trick): the corpus is the
 3. the doc-level verdict joins back as a broadcast left join onto the
    (id, n_shingles) projection.
 
-Net shuffles on the big side: zero. For benchmark sets too big to
-broadcast, pass ``broadcast_bench=False`` to fall back to a shuffle
-hash join on the n-gram key (still |matches|-bounded aggregation).
+Net shuffles on the big side: zero.
 
 Shingles and hashes reuse the MinHash machinery
 (:mod:`.text_dedup`), defaulting to the cross-engine md5 path so the
@@ -39,20 +37,8 @@ from pyspark.sql import functions as F
 from .text_dedup import word_shingles
 
 
-def _doc_shingles(
-    df: DataFrame, text_col: str, id_col: str, n: int, hashed: bool = False
-) -> DataFrame:
+def _doc_shingles(df: DataFrame, text_col: str, id_col: str, n: int) -> DataFrame:
     sh = F.array_distinct(word_shingles(text_col, n))
-    if hashed:
-        # 64-bit keys: an 8-gram string averages ~50 bytes; hashing
-        # shrinks the broadcast side ~6x and the probe's join keys
-        # with it. Collision math: a benchmark of 1e8 distinct n-grams
-        # colliding with an innocent corpus shingle is p ~ 1e8/2^64
-        # per probe — at 1e12 corpus shingles, ~5 spurious doc drops
-        # across the whole corpus, the right trade for a DROP-only
-        # hygiene filter. array_distinct runs BEFORE hashing so a
-        # collision cannot merge two real shingles into one count.
-        sh = F.transform(sh, lambda s: F.xxhash64(s))
     return df.select(F.col(id_col), sh.alias("__sh"))
 
 
@@ -64,30 +50,12 @@ def ngram_contamination(
     bench_text_col: str | None = None,
     bench_id_col: str = "bench_id",
     n: int = 8,
-    broadcast_bench: bool = True,
-    broadcast_hits: bool = True,
-    hash_shingles: bool = False,
 ) -> DataFrame:
     """Per-document contamination report against a benchmark set.
 
-    ``hash_shingles=True`` joins on ``xxhash64`` of each n-gram
-    instead of the n-gram string: the broadcast benchmark set shrinks
-    ~6x (8 bytes vs ~50-byte strings) and the probe's join keys with
-    it — the 100 TB form when the benchmark suite is 1e7-1e8 distinct
-    n-grams and the exact-string broadcast stops fitting. Collision
-    risk is ~|bench|/2^64 per corpus shingle (a handful of spurious
-    DROPS corpus-wide at extreme scale — the right direction for a
-    hygiene filter); the default stays the exact, DuckDB-mirrorable
-    string join.
-
-    ``broadcast_hits=False`` is the escape hatch for adversarial
-    contamination rates: ``hits`` holds one row per CONTAMINATED
-    corpus doc, so while it is usually tiny, a benchmark sharing
-    common n-grams with a large corpus fraction (or a small ``n``)
-    makes it corpus-scale — forcing the broadcast would OOM the
-    driver at exactly the scale ``broadcast_bench=False`` exists for
-    (round-9 review find). Shuffle-join fallback costs one extra
-    exchange of the id-keyed report.
+    The join keys are the exact n-gram strings, so the whole report is
+    DuckDB-mirrorable. Both the benchmark n-gram set and ``hits`` (one
+    row per CONTAMINATED corpus doc) are broadcast.
 
     Returns one row per corpus doc:
     ``(id, n_shingles, n_hit_shingles, n_bench_docs_hit,
@@ -99,14 +67,12 @@ def ngram_contamination(
     length upstream.
     """
     bt = bench_text_col or text_col
-    doc_sh = _doc_shingles(docs, text_col, id_col, n, hashed=hash_shingles)
-    bench_sh = (
-        _doc_shingles(bench, bt, bench_id_col, n, hashed=hash_shingles)
+    doc_sh = _doc_shingles(docs, text_col, id_col, n)
+    bench_sh = F.broadcast(
+        _doc_shingles(bench, bt, bench_id_col, n)
         .select(F.col(bench_id_col), F.explode("__sh").alias("__s"))
         .distinct()
     )
-    if broadcast_bench:
-        bench_sh = F.broadcast(bench_sh)
 
     hits = (
         doc_sh.select(F.col(id_col), F.explode("__sh").alias("__s"))
@@ -120,9 +86,7 @@ def ngram_contamination(
         )
     )
     base = doc_sh.select(F.col(id_col), F.size("__sh").alias("n_shingles"))
-    if broadcast_hits:
-        hits = F.broadcast(hits)
-    return base.join(hits, id_col, "left").select(
+    return base.join(F.broadcast(hits), id_col, "left").select(
         id_col,
         "n_shingles",
         F.coalesce("n_hit_shingles", F.lit(0)).alias("n_hit_shingles"),
@@ -142,19 +106,11 @@ def decontaminate(
     bench_id_col: str = "bench_id",
     n: int = 8,
     max_rate: float = 0.0,
-    broadcast_bench: bool = True,
-    broadcast_bad: bool = True,
-    hash_shingles: bool = False,
 ) -> DataFrame:
     """Drop contaminated docs (rate > ``max_rate``; the default 0.0
     drops on ANY shared n-gram — the conservative pre-training
     default). Anti-join form of :func:`ngram_contamination`: only the
-    contaminated id set (usually small) is computed and broadcast —
-    ``broadcast_bad=False`` for the adversarial case where most of
-    the corpus is contaminated and the id set is corpus-scale (same
-    escape as ``broadcast_hits`` on the report). ``hash_shingles``
-    as on the report: 64-bit join keys, ~6x smaller benchmark
-    broadcast, drop-direction-safe collisions.
+    contaminated id set (usually small) is computed and broadcast.
 
     ``max_rate == 0.0`` takes a cheaper route (round 15): "drop on
     ANY shared n-gram" needs no rates, so the per-doc counting
@@ -170,45 +126,24 @@ def decontaminate(
     (STRESS.md round 15)."""
     if max_rate == 0.0:
         bt = bench_text_col or text_col
-        bench_sh = (
-            _doc_shingles(bench, bt, bench_id_col, n, hashed=hash_shingles)
+        bench_sh = F.broadcast(
+            _doc_shingles(bench, bt, bench_id_col, n)
             .select(F.explode("__sh").alias("__s"))
             .distinct()
         )
-        if broadcast_bench:
-            bench_sh = F.broadcast(bench_sh)
-        doc_sh = word_shingles(text_col, n)
-        if hash_shingles:
-            # same 64-bit key transform as the bench side; existence
-            # semantics need no array_distinct first (a collision can
-            # only add a drop, the report path's documented direction)
-            doc_sh = F.transform(doc_sh, lambda s: F.xxhash64(s))
         bad = (
-            docs.select(F.col(id_col), F.explode(doc_sh).alias("__s"))
+            docs.select(F.col(id_col), F.explode(word_shingles(text_col, n)).alias("__s"))
             .join(bench_sh, "__s")
             .select(id_col)
             .distinct()
         )
     else:
         bad = (
-            ngram_contamination(
-                docs,
-                bench,
-                text_col,
-                id_col,
-                bench_text_col,
-                bench_id_col,
-                n,
-                broadcast_bench=broadcast_bench,
-                broadcast_hits=broadcast_bad,
-                hash_shingles=hash_shingles,
-            )
+            ngram_contamination(docs, bench, text_col, id_col, bench_text_col, bench_id_col, n)
             .filter(F.col("contamination_rate") > F.lit(max_rate))
             .select(id_col)
         )
-    if broadcast_bad:
-        bad = F.broadcast(bad)
-    return docs.join(bad, id_col, "left_anti")
+    return docs.join(F.broadcast(bad), id_col, "left_anti")
 
 
 def lsh_banding_for(
@@ -340,14 +275,12 @@ def decontaminate_semantic(
     doc_id_col: str = "doc_id",
     vec_id_col: str = "vec_id",
     threshold: float = 0.95,
-    broadcast_bad: bool = True,
     **kwargs,
 ) -> DataFrame:
     """Drop documents whose embedding sits within ``threshold`` cosine
     of any benchmark embedding — anti-join form of
     :func:`embedding_contamination` (the flagged id set is usually
-    dim-sized; ``broadcast_bad=False`` for the adversarial
-    mostly-contaminated case, same escape as :func:`decontaminate`)."""
+    dim-sized and is broadcast)."""
     bad = (
         embedding_contamination(
             doc_vecs, bench_vecs, id_col=vec_id_col, threshold=threshold, **kwargs
@@ -355,6 +288,4 @@ def decontaminate_semantic(
         .select(F.col(vec_id_col).alias(doc_id_col))
         .distinct()
     )
-    if broadcast_bad:
-        bad = F.broadcast(bad)
-    return docs.join(bad, doc_id_col, "left_anti")
+    return docs.join(F.broadcast(bad), doc_id_col, "left_anti")

@@ -62,6 +62,12 @@ from .text_analysis import normalize_text
 _BATCH_PREFIX = "batch="
 _BASE_PREFIX = "base-"
 
+#: Parquet files per published segment: batch publishes and
+#: compaction alike, for every segment-log index.
+SEGMENT_FILES = 4
+#: Columns of an exact-signature segment.
+SIG_COLS = ("sig", "bucket")
+
 
 def content_signature(
     *cols,
@@ -104,15 +110,17 @@ def _with_sig_bucket(df, sig_col, n_buckets: int):
     )
 
 
-def _write_segment(sigs: DataFrame, target: str, write_files: int) -> None:
-    """One bucket-clustered segment write: repartition + in-file sort
-    give each parquet row group a tight bucket min/max, so probes'
-    pushed ``In(bucket, ...)`` filters skip row groups. Shared by the
-    batch publish, the output-derived publish, and compaction."""
+def write_segment(rows: DataFrame, target: str, cols) -> None:
+    """One bucket-clustered segment write of the distinct ``cols`` rows
+    (``cols`` includes ``bucket``): repartition + in-file sort give each
+    parquet row group a tight bucket min/max, so probes' pushed
+    ``In(bucket, ...)`` filters skip row groups. Shared by every
+    segment-log index (exact signatures, MinHash bands, media bands)
+    for its batch publish, output-derived publish and compaction."""
     (
-        sigs.select("sig", "bucket")
+        rows.select(*cols)
         .distinct()
-        .repartition(write_files, "bucket")
+        .repartition(SEGMENT_FILES, "bucket")
         .sortWithinPartitions("bucket")
         .write.mode("overwrite")
         .parquet(target)
@@ -157,22 +165,14 @@ def read_seen_index(spark: SparkSession, path: str) -> DataFrame:
     return spark.read.parquet(*dirs).select("sig", "bucket")
 
 
-def dedup_within_batch(
-    batch: DataFrame, id_col: str, *, broadcast_batch: bool = True
-) -> DataFrame:
+def dedup_within_batch(batch: DataFrame, id_col: str) -> DataFrame:
     """Deterministic within-batch collapse on ``sig`` (keeper =
     min ``id``): partial-combine groupBy + rejoin on the unique
-    ``(sig, id)`` key, never a window over the signature.
-
-    ``broadcast_batch=True`` (the default, and the
-    :func:`dedup_against_index` contract) forces the winners side of
-    the rejoin to broadcast — correct only when the batch's distinct
-    signatures fit in executor memory. Pass ``False`` for an
-    oversized batch to degrade to a shuffle join instead of an OOM."""
+    ``(sig, id)`` key, never a window over the signature. The winners
+    side of the rejoin is broadcast (the :func:`dedup_against_index`
+    broadcast-sized-batch contract)."""
     winners = batch.groupBy("sig").agg(F.min(id_col).alias(id_col))
-    if broadcast_batch:
-        winners = F.broadcast(winners)
-    return batch.join(winners, ["sig", id_col], "left_semi")
+    return batch.join(F.broadcast(winners), ["sig", id_col], "left_semi")
 
 
 def dedup_against_index(
@@ -185,8 +185,6 @@ def dedup_against_index(
     n_buckets: int = 256,
     batch_id: int | None = None,
     update: bool = True,
-    write_files: int = 4,
-    broadcast_batch: bool = True,
 ) -> DataFrame:
     """Admit the rows of ``batch`` not already in the seen index at
     ``path``; optionally publish their signatures as a new batch
@@ -197,11 +195,7 @@ def dedup_against_index(
     arrival against a huge index). The whole admission path hinges on
     it: the probe broadcasts the batch's signature set against the
     seen scan, and the anti-join broadcasts the hits, so the 100 TB
-    index is only ever SCANNED, never shuffled. For an oversized
-    batch pass ``broadcast_batch=False`` to degrade every batch-side
-    broadcast to a shuffle join (the index side still only scans) —
-    slower, not wrong (the :func:`.paragraph_dedup` ``broadcast_over``
-    escape-hatch pattern).
+    index is only ever SCANNED, never shuffled.
 
     ``sig_col`` is a Column (build one with
     :func:`content_signature`). With ``batch_id``, the probe excludes
@@ -211,9 +205,7 @@ def dedup_against_index(
     """
     if n_buckets < 1:
         raise ValueError(f"n_buckets must be >= 1, got {n_buckets}")
-    maybe_broadcast = F.broadcast if broadcast_batch else (lambda df: df)
-    sigged = _with_sig_bucket(batch, sig_col, n_buckets)
-    sigged = dedup_within_batch(sigged, id_col, broadcast_batch=broadcast_batch)
+    sigged = dedup_within_batch(_with_sig_bucket(batch, sig_col, n_buckets), id_col)
 
     base = path.rstrip("/")
     dirs = committed_log_dirs(spark, base)
@@ -228,8 +220,8 @@ def dedup_against_index(
         touched = [r["bucket"] for r in batch_sigs.select("bucket").distinct().collect()]
         if len(touched) < n_buckets:
             seen = seen.where(F.col("bucket").isin(touched))
-        hits = seen.join(maybe_broadcast(batch_sigs), ["sig", "bucket"], "left_semi")
-        fresh = sigged.join(maybe_broadcast(hits.select("sig")), "sig", "left_anti")
+        hits = seen.join(F.broadcast(batch_sigs), ["sig", "bucket"], "left_semi")
+        fresh = sigged.join(F.broadcast(hits.select("sig")), "sig", "left_anti")
     else:
         fresh = sigged
 
@@ -245,7 +237,7 @@ def dedup_against_index(
         # reuse cache: the publish action materializes it, the
         # caller's read reuses the blocks instead of re-probing
         fresh = lazy_checkpoint(fresh)
-        _write_segment(fresh, target, write_files)
+        write_segment(fresh, target, SIG_COLS)
     return fresh.drop("sig", "bucket")
 
 
@@ -256,7 +248,6 @@ def publish_batch_signatures(
     batch_id: int,
     *,
     n_buckets: int = 256,
-    write_files: int = 4,
 ) -> None:
     """Publish the signatures of ``df``'s rows as the index's
     ``batch=<id>`` segment (overwrite — replay-idempotent). The
@@ -264,10 +255,10 @@ def publish_batch_signatures(
     with this, so the output is the source of truth and a torn index
     write is repairable; the batch API's ``update=True`` publishes
     inline instead (it already carries the signatures)."""
-    _write_segment(
+    write_segment(
         _with_sig_bucket(df, sig_col, n_buckets),
         f"{path.rstrip('/')}/{_BATCH_PREFIX}{batch_id}",
-        write_files,
+        SIG_COLS,
     )
 
 
@@ -342,16 +333,14 @@ def compact_seen_index(spark: SparkSession, path: str) -> int:
       admissions per index, the same single-writer posture as
       :mod:`.index_commit`.
     """
-    return compact_segment_log(
-        spark, path, lambda df, target: _write_segment(df, target, write_files=4)
-    )
+    return compact_segment_log(spark, path, SIG_COLS)
 
 
-def compact_segment_log(spark: SparkSession, path: str, write_fn) -> int:
+def compact_segment_log(spark: SparkSession, path: str, cols) -> int:
     """The generic publish-before-delete compaction every segment-log
-    index shares (exact signatures, MinHash bands, media bands):
-    ``write_fn(union_df, target_dir)`` writes the deduped union of all
-    complete segments in the index's own layout; the protocol and
+    index shares (exact signatures, MinHash bands, media bands): the
+    deduped union of all complete segments is written by
+    :func:`write_segment` over the index's ``cols``; the protocol and
     crash argument are :func:`compact_seen_index`'s. Returns the
     compacted row count."""
     base = path.rstrip("/")
@@ -368,7 +357,7 @@ def compact_segment_log(spark: SparkSession, path: str, write_fn) -> int:
     final = f"{base}/{_BASE_PREFIX}{gen:08d}"
     tmp = final + ".tmp"
     fs.delete(hp(tmp), True)  # stale stray from a crashed attempt
-    write_fn(spark.read.parquet(*dirs), tmp)
+    write_segment(spark.read.parquet(*dirs), tmp, cols)
     n = spark.read.parquet(tmp).count()
     # a partial `final` from a crashed earlier publish (object-store
     # rename is copy-per-object) would make rename nest tmp UNDER it;

@@ -186,6 +186,11 @@ def range_join_within_gridded(
     return out.drop("__cell")
 
 
+#: Largest b-side size estimate :func:`range_join_within_auto` joins
+#: by broadcast nested loop; a larger side takes the gridded join.
+RANGE_BROADCAST_BYTES = 1 << 20
+
+
 def range_join_within_auto(
     points_a: DataFrame,
     points_b: DataFrame,
@@ -194,22 +199,19 @@ def range_join_within_auto(
     bx: str,
     by: str,
     radius: float,
-    broadcast_bytes: int | None = None,
 ) -> DataFrame:
     """Strategy-choosing planar range join (J6/F4/X9).
 
     Broadcast bbox nested-loop when the b-side's Catalyst size
-    estimate is dim-sized (default cutoff 1 MB ~ tens of thousands of
-    points — deliberately LOWER than autoBroadcastJoinThreshold: the
+    estimate is dim-sized (``RANGE_BROADCAST_BYTES``: 1 MB ~ tens of
+    thousands of points — deliberately LOWER than autoBroadcastJoinThreshold: the
     nested loop evaluates |A|x|B| pairs, so a side can fit a broadcast
     yet still lose to the gridded candidate cut; measured crossover in
     ``STRESS.md``). The gridded 3x3-replica equi-join otherwise — a
     plain hash shuffle, which is what survives two large sides at
     100 TB. The decision reads plan statistics, no extra action.
     """
-    if broadcast_bytes is None:
-        broadcast_bytes = 1 << 20
     est = int(points_b._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-    if 0 < est <= broadcast_bytes:
+    if 0 < est <= RANGE_BROADCAST_BYTES:
         return range_join_within(points_a, F.broadcast(points_b), ax, ay, bx, by, radius)
     return range_join_within_gridded(points_a, points_b, ax, ay, bx, by, radius)

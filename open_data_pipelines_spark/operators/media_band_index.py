@@ -51,11 +51,13 @@ from .incremental_dedup import (
     _BATCH_PREFIX,
     committed_log_dirs,
     compact_segment_log,
+    write_segment,
 )
 
 MEDIA_BAND_SCHEMA = (
     "kind string, band_id int, band_value long, signature long, bucket int"
 )
+MEDIA_BAND_COLS = ("kind", "band_id", "band_value", "signature", "bucket")
 
 
 def media_band_rows(
@@ -101,24 +103,11 @@ def media_band_rows(
     )
 
 
-def _write_media_segment(rows_df: DataFrame, target: str, write_files: int) -> None:
-    (
-        rows_df.select("kind", "band_id", "band_value", "signature", "bucket")
-        .distinct()
-        .repartition(write_files, "bucket")
-        .sortWithinPartitions("bucket")
-        .write.mode("overwrite")
-        .parquet(target)
-    )
-
-
 def read_media_band_index(spark: SparkSession, path: str) -> DataFrame:
     dirs = committed_log_dirs(spark, path)
     if not dirs:
         return spark.createDataFrame([], MEDIA_BAND_SCHEMA)
-    return spark.read.parquet(*dirs).select(
-        "kind", "band_id", "band_value", "signature", "bucket"
-    )
+    return spark.read.parquet(*dirs).select(*MEDIA_BAND_COLS)
 
 
 def near_dedup_media_against_index(
@@ -134,7 +123,6 @@ def near_dedup_media_against_index(
     n_buckets: int = 256,
     batch_id: int | None = None,
     update: bool = True,
-    write_files: int = 4,
 ) -> DataFrame:
     """Admit the rows of ``batch`` whose perceptual signature is
     within ``max_hamming`` of neither an admitted item of the same
@@ -217,8 +205,8 @@ def near_dedup_media_against_index(
         admitted_bands = bnd.join(
             F.broadcast(fresh.select(id_col)), id_col, "left_semi"
         )
-        _write_media_segment(
-            admitted_bands, f"{base}/{_BATCH_PREFIX}{batch_id}", write_files
+        write_segment(
+            admitted_bands, f"{base}/{_BATCH_PREFIX}{batch_id}", MEDIA_BAND_COLS
         )
     return fresh
 
@@ -233,18 +221,17 @@ def publish_media_band_rows(
     *,
     band_bits: int = 8,
     n_buckets: int = 256,
-    write_files: int = 4,
 ) -> None:
     """Publish the band rows of ``df``'s media items as the index's
     ``batch=<id>`` segment (overwrite — replay-idempotent; the
     streaming wrapper derives the index from COMMITTED output)."""
-    _write_media_segment(
+    write_segment(
         media_band_rows(
             df, sig_col, id_col, kind_col,
             band_bits=band_bits, n_buckets=n_buckets,
         ),
         f"{path.rstrip('/')}/{_BATCH_PREFIX}{batch_id}",
-        write_files,
+        MEDIA_BAND_COLS,
     )
 
 
@@ -252,6 +239,4 @@ def compact_media_band_index(spark: SparkSession, path: str) -> int:
     """Same protocol, crash argument, and concurrency posture as
     :func:`.incremental_dedup.compact_seen_index` (shared
     :func:`.incremental_dedup.compact_segment_log`)."""
-    return compact_segment_log(
-        spark, path, lambda df, target: _write_media_segment(df, target, 4)
-    )
+    return compact_segment_log(spark, path, MEDIA_BAND_COLS)

@@ -73,6 +73,7 @@ from .incremental_dedup import (
     _BATCH_PREFIX,
     committed_log_dirs,
     compact_segment_log,
+    write_segment,
 )
 from .text_dedup import (
     base_hashes,
@@ -82,6 +83,7 @@ from .text_dedup import (
 )
 
 BAND_SCHEMA = "band_id int, band_hash string, msig array<bigint>, bucket int"
+BAND_COLS = ("band_id", "band_hash", "msig", "bucket")
 
 
 def band_rows(
@@ -132,26 +134,12 @@ def _sig_agreement(a, b, k: int):
     return matches.cast("double") / F.lit(float(k))
 
 
-def _write_band_segment(rows_df: DataFrame, target: str, write_files: int) -> None:
-    """Bucket-clustered segment write (the :mod:`.incremental_dedup`
-    layout applied to band rows): tight per-row-group bucket ranges so
-    probes' pushed ``In(bucket, ...)`` filters skip row groups."""
-    (
-        rows_df.select("band_id", "band_hash", "msig", "bucket")
-        .distinct()
-        .repartition(write_files, "bucket")
-        .sortWithinPartitions("bucket")
-        .write.mode("overwrite")
-        .parquet(target)
-    )
-
-
 def read_band_index(spark: SparkSession, path: str) -> DataFrame:
     """All committed band rows; empty frame when no index exists."""
     dirs = committed_log_dirs(spark, path)
     if not dirs:
         return spark.createDataFrame([], BAND_SCHEMA)
-    return spark.read.parquet(*dirs).select("band_id", "band_hash", "msig", "bucket")
+    return spark.read.parquet(*dirs).select(*BAND_COLS)
 
 
 def near_dedup_against_index(
@@ -169,7 +157,6 @@ def near_dedup_against_index(
     n_buckets: int = 256,
     batch_id: int | None = None,
     update: bool = True,
-    write_files: int = 4,
 ) -> DataFrame:
     """Admit the rows of ``batch`` that are near-duplicates of neither
     an already-admitted document (band-index probe) nor a kept
@@ -277,9 +264,7 @@ def near_dedup_against_index(
         admitted_bands = bnd.join(
             F.broadcast(fresh.select(id_col)), id_col, "left_semi"
         )
-        _write_band_segment(
-            admitted_bands, f"{base}/{_BATCH_PREFIX}{batch_id}", write_files
-        )
+        write_segment(admitted_bands, f"{base}/{_BATCH_PREFIX}{batch_id}", BAND_COLS)
     return fresh
 
 
@@ -295,19 +280,18 @@ def publish_band_rows(
     bands: int = 4,
     fast: bool = True,
     n_buckets: int = 256,
-    write_files: int = 4,
 ) -> None:
     """Publish the band rows of ``df``'s documents as the index's
     ``batch=<id>`` segment (overwrite — replay-idempotent). The
     streaming wrapper derives the index from COMMITTED OUTPUT with
     this, so a torn index write is repairable from the output."""
-    _write_band_segment(
+    write_segment(
         band_rows(
             df, text_col, id_col, n=n, k=k, bands=bands, fast=fast,
             n_buckets=n_buckets,
         ),
         f"{path.rstrip('/')}/{_BATCH_PREFIX}{batch_id}",
-        write_files,
+        BAND_COLS,
     )
 
 
@@ -318,6 +302,4 @@ def compact_band_index(spark: SparkSession, path: str) -> int:
     as :func:`.incremental_dedup.compact_seen_index` (publish under a
     FRESH name before deleting inputs; run only while no admission —
     streaming or batch — is in flight on this index)."""
-    return compact_segment_log(
-        spark, path, lambda df, target: _write_band_segment(df, target, write_files=4)
-    )
+    return compact_segment_log(spark, path, BAND_COLS)

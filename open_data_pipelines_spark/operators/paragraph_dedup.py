@@ -34,10 +34,7 @@ Scale shape (100 TB):
   corpus.
 - ``max_docs`` reduces to a join against the over-shared hash set,
   which is bounded by the corpus's boilerplate vocabulary (small by
-  construction) and broadcast by default; a broadcast HINT is honored
-  regardless of size estimate, so ``broadcast_over=False`` is the
-  explicit fallback to a shuffle join when that vocabulary outgrows
-  memory (the :mod:`.contamination` escape-hatch contract).
+  construction) and broadcast.
 - Reassembly is one ``groupBy(doc)`` — the same doc-keyed shuffle any
   per-document aggregate pays; paragraph text crosses the wire once.
 
@@ -98,22 +95,10 @@ def paragraph_keep_flags(
     max_docs: int = 1,
     normalize: bool = True,
     fast: bool = False,
-    broadcast_over: bool = True,
 ) -> DataFrame:
     """Exploded paragraphs with a ``keep`` flag: ``(id, pos, paragraph,
     keep)``. The analysis surface — :func:`dedup_paragraphs` reassembles
     it; audits can aggregate it directly (e.g. dropped-char fraction).
-
-    ``broadcast_over=False`` is the ``max_docs`` escape hatch for a
-    corpus whose over-shared hash set outgrows broadcast (Spark honors
-    a broadcast HINT regardless of size estimate, so an enormous
-    boilerplate vocabulary would OOM rather than degrade — same
-    contract as :mod:`.contamination`'s ``broadcast_bench``); the
-    shuffle left-join fallback costs one extra exchange of the
-    paragraph frame, keyed on the hash alone — a hot boilerplate
-    paragraph concentrates its copies on one reducer there, so the
-    fallback leans on AQE's skew-join split (enabled by this engine's
-    sessions), like :mod:`.substring_dedup`'s occurrence mark.
     """
     if policy not in ("keep_first", "max_docs"):
         raise ValueError(f"unknown policy {policy!r} (keep_first|max_docs)")
@@ -146,10 +131,8 @@ def paragraph_keep_flags(
             .where(F.col("n_docs") > max_docs)
             .select("para_hash", F.lit(True).alias("is_over"))
         )
-        if broadcast_over:
-            over = F.broadcast(over)
         out = (
-            paras.join(over, "para_hash", "left")
+            paras.join(F.broadcast(over), "para_hash", "left")
             .withColumn("keep", F.col("is_over").isNull())
             .drop("is_over")
         )
@@ -167,7 +150,6 @@ def dedup_paragraphs(
     max_docs: int = 1,
     normalize: bool = True,
     fast: bool = False,
-    broadcast_over: bool = True,
 ) -> DataFrame:
     """Corpus-wide paragraph dedup with reassembly: ``(id, text,
     n_paragraphs, n_kept)``.
@@ -188,7 +170,6 @@ def dedup_paragraphs(
         max_docs=max_docs,
         normalize=normalize,
         fast=fast,
-        broadcast_over=broadcast_over,
     )
     rebuilt = flags.groupBy(id_col).agg(
         F.count(F.lit(1)).alias("n_paragraphs"),

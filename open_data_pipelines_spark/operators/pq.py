@@ -462,11 +462,20 @@ def maintain_ivf_pq_index(
     if batch_fit <= retrain_factor * baseline_mean_dist2:
         # appends land inside the current generation directory, like
         # append_to_ivf_index; a VIRGIN path initializes generation 1
-        # instead (an append needs a committed generation to land in)
+        # instead (an append needs a committed generation to land in).
+        # Neither persists an INFERRED width: pinning a possibly-narrowed
+        # inference into state would be worse than re-inferring
         if require_manifest_target(spark, path) is None:
-            build_ivf_pq_index(
-                new_vectors, vec_col, id_col, centroids, codebooks, path,
-                code_col, list_col, nbits=nbits,
+            encoded = build_ivf_pq_index(
+                new_vectors, vec_col, id_col, centroids, codebooks,
+                code_col=code_col, list_col=list_col,
+            )
+            commit_generation(
+                spark,
+                path,
+                _pq_layout_writer(
+                    encoded, list_col, None if nbits_inferred else nbits, len(codebooks)
+                ),
             )
         else:
             data_path = resolve_index_path(spark, path)
@@ -475,9 +484,7 @@ def maintain_ivf_pq_index(
                 code_col=code_col, list_col=list_col,
             ).write.mode("append").partitionBy(list_col).parquet(data_path)
             # upgrade a pre-meta layout in place (write-once: no-op on
-            # any index build_ivf_pq_index produced) — but never
-            # persist an INFERRED width: pinning a possibly-narrowed
-            # inference into state would be worse than re-inferring
+            # any index build_ivf_pq_index produced)
             if not nbits_inferred:
                 _write_pq_meta(spark, data_path, nbits, len(codebooks))
         return {
@@ -525,6 +532,9 @@ def maintain_ivf_pq_index(
         full, vec_col, id_col, new_centroids, new_books,
         code_col=code_col, list_col=list_col,
     )
+    # new_books were trained AT nbits, so the meta records the width
+    # this generation was built with (an inferred one warned above),
+    # and later bare calls read it back instead of narrowing further
     commit_generation(
         spark, path, _pq_layout_writer(encoded, list_col, nbits, len(codebooks))
     )

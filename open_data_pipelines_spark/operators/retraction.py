@@ -7,8 +7,7 @@ Three layers, cheapest first:
 
 - **Un-packed frames** (bronze, chunk tables): one broadcast
   anti-join on the id — tombstone lists are small by nature (takedown
-  requests, opt-outs), with the usual shuffle fallback for a bulk
-  purge.
+  requests, opt-outs).
 - **Packed frames**: dropping a doc's chunks breaks the affected
   packs' integrity (``pack_tokens`` would lie, and a pack is a
   training unit). :func:`retract_from_packed` drops tombstoned rows
@@ -32,27 +31,26 @@ from pyspark.sql import functions as F
 from .packing import pack_chunks
 
 
-def _tombstone_ids(tombstones: DataFrame, id_col: str, broadcast: bool) -> DataFrame:
+def _tombstone_ids(tombstones: DataFrame, id_col: str) -> DataFrame:
     """Normalize the tombstone frame to one distinct id column (the
-    'first column is the id' convention, in ONE place) — optionally
-    broadcast-hinted, since takedown lists are dim-sized by nature."""
-    t = tombstones.select(F.col(tombstones.columns[0]).alias(id_col)).distinct()
-    return F.broadcast(t) if broadcast else t
+    'first column is the id' convention, in ONE place) — broadcast-
+    hinted, since takedown lists are dim-sized by nature."""
+    ids = tombstones.select(F.col(tombstones.columns[0]).alias(id_col)).distinct()
+    return F.broadcast(ids)
 
 
-def _tombstone_join(df: DataFrame, tombstones: DataFrame, id_col: str, broadcast: bool) -> DataFrame:
-    return df.join(_tombstone_ids(tombstones, id_col, broadcast), id_col, "left_anti")
+def _tombstone_join(df: DataFrame, tombstones: DataFrame, id_col: str) -> DataFrame:
+    return df.join(_tombstone_ids(tombstones, id_col), id_col, "left_anti")
 
 
 def retract_documents(
     df: DataFrame,
     tombstones: DataFrame,
     id_col: str = "doc_id",
-    broadcast_tombstones: bool = True,
 ) -> DataFrame:
     """Remove every row whose ``id_col`` appears in ``tombstones``
     (first column of the frame). Schema unchanged."""
-    return _tombstone_join(df, tombstones, id_col, broadcast_tombstones)
+    return _tombstone_join(df, tombstones, id_col)
 
 
 def retract_from_packed(
@@ -64,7 +62,6 @@ def retract_from_packed(
     tokens_col: str = "__ct",
     pack_col: str = "pack_id",
     pack_tokens_col: str = "pack_tokens",
-    broadcast_tombstones: bool = True,
 ) -> DataFrame:
     """Retract docs from a packed corpus, re-packing ONLY the domains
     that lost rows.
@@ -84,12 +81,10 @@ def retract_from_packed(
     # every surviving pack id in it (round-9 review find)
     dom = F.regexp_replace(F.col(pack_col), "/[^/]*$", "")
     with_dom = packed.withColumn("__dom", dom)
-    survivors = _tombstone_join(with_dom, tombstones, id_col, broadcast_tombstones)
+    survivors = _tombstone_join(with_dom, tombstones, id_col)
 
     affected = (
-        with_dom.join(
-            _tombstone_ids(tombstones, id_col, broadcast_tombstones), id_col, "left_semi"
-        )
+        with_dom.join(_tombstone_ids(tombstones, id_col), id_col, "left_semi")
         .select("__dom")
         .distinct()
     )
@@ -118,7 +113,6 @@ def retract_and_reissue(
     manifest_path: str,
     id_col: str = "doc_id",
     max_tokens: int | None = None,
-    broadcast_tombstones: bool = True,
     **packed_kwargs,
 ):
     """Run a retraction AND close the evidence chain: re-sign the
@@ -149,27 +143,20 @@ def retract_and_reissue(
     with open(manifest_path) as fh:
         old = json.load(fh)
 
-    t = _tombstone_ids(tombstones, id_col, broadcast_tombstones)
+    t = _tombstone_ids(tombstones, id_col)
     # bounded driver read: |hit ids| <= |tombstones|, dim-sized by nature
     removed_ids = sorted(
         r[0] for r in df.join(t, id_col, "left_semi").select(id_col).distinct().collect()
     )
 
     if max_tokens is not None:
-        out = retract_from_packed(
-            df,
-            tombstones,
-            max_tokens,
-            id_col=id_col,
-            broadcast_tombstones=broadcast_tombstones,
-            **packed_kwargs,
-        )
+        out = retract_from_packed(df, tombstones, max_tokens, id_col=id_col, **packed_kwargs)
     else:
         if packed_kwargs:
             raise ValueError(
                 f"packed-mode kwargs {sorted(packed_kwargs)} need max_tokens"
             )
-        out = retract_documents(df, tombstones, id_col, broadcast_tombstones)
+        out = retract_documents(df, tombstones, id_col)
 
     if not removed_ids:
         return out, {
@@ -215,7 +202,7 @@ def retraction_audit(
 ) -> DataFrame:
     """One row: rows_removed, docs_removed, domains_touched — the
     takedown evidence record."""
-    hit = packed.join(_tombstone_ids(tombstones, id_col, True), id_col, "left_semi")
+    hit = packed.join(_tombstone_ids(tombstones, id_col), id_col, "left_semi")
     return hit.agg(
         F.count(F.lit(1)).alias("rows_removed"),
         F.count_distinct(F.col(id_col)).alias("docs_removed"),

@@ -385,8 +385,7 @@ def blockword_hits(col: Column | str, words: tuple[str, ...]) -> Column:
     occurrences are the DOMINANT case in prose and token equality
     misses every one of them; round-12 review). Multi-word entries
     match across any whitespace run. One ``regexp_count`` over one
-    alternation — dim-sized lists (LDNOOBW ~400 entries) inline fine;
-    for huge lexicons use :func:`filter_content_blockwords` join mode.
+    alternation — dim-sized lists (LDNOOBW ~400 entries) inline fine.
     """
     c = F.col(col) if isinstance(col, str) else col
     if not words:
@@ -423,59 +422,14 @@ def filter_content_blockwords(
     text_col: str,
     words: tuple[str, ...],
     max_hits: int = 0,
-    id_col: str | None = None,
-    mode: str = "expr",
 ) -> DataFrame:
     """Drop documents with more than ``max_hits`` blocklisted-word
     occurrences in the TEXT — the C4 page-level bad-words cut
     (default 0: any hit drops), content-side companion of the URL
-    badword gate (``url_filter.filter_url_quality``).
-
-    ``mode="expr"`` (default) is the one-regex form above — zero
-    shuffles, codegen, boundary-correct, phrases supported.
-    ``mode="join"`` explodes letter/digit-run tokens and
-    broadcast-semi-joins the word table, then anti-joins offending
-    ids back — the scale escape for lexicons too large to inline as
-    one alternation. Join-mode limits (parity-tested where both
-    apply): SINGLE-WORD entries only (phrases raise — a token join
-    cannot see across token boundaries), and ``id_col`` must be
-    non-NULL (an anti-join never matches NULL keys, so a NULL-id doc
-    would silently survive; expr mode has no such blind spot). The
-    offending-id frame is NOT broadcast-hinted — it scales with the
-    corpus, and the forced hint would hit the broadcast hard limits
-    at exactly the scale join mode exists for (round-12 review)."""
-    if mode == "expr":
-        return df.filter(blockword_hits(text_col, words) <= F.lit(max_hits))
-    if mode != "join":
-        raise ValueError(f"mode must be 'expr' or 'join', got {mode!r}")
-    if id_col is None:
-        raise ValueError("mode='join' needs id_col")
-    bad_entries = [w for w in words if len(w.split()) != 1]
-    if bad_entries:
-        raise ValueError(
-            f"mode='join' takes single-word entries only, got {bad_entries[:3]}"
-        )
-    spark = df.sparkSession
-    from ..functions.dimframe import dim_frame
-
-    # dim_frame (round-15): no Python worker per broadcast build
-    word_df = F.broadcast(
-        dim_frame(spark, [(w.strip().lower(),) for w in words], "__w string")
-    )
-    toks = df.select(
-        F.col(id_col),
-        F.explode(
-            F.regexp_extract_all(F.lower(F.col(text_col)), F.lit(r"([\p{L}\p{N}]+)"), 1)
-        ).alias("__w"),
-    )
-    bad = (
-        toks.join(word_df, "__w", "left_semi")
-        .groupBy(id_col)
-        .agg(F.count(F.lit(1)).alias("__hits"))
-        .filter(F.col("__hits") > F.lit(max_hits))
-        .select(id_col)
-    )
-    return df.join(bad, id_col, "left_anti")
+    badword gate (``url_filter.filter_url_quality``). One
+    :func:`blockword_hits` regex per row: zero shuffles, codegen,
+    boundary-correct, phrases supported."""
+    return df.filter(blockword_hits(text_col, words) <= F.lit(max_hits))
 
 
 @memo_column

@@ -1075,7 +1075,7 @@ planted_bannered AS (
   FROM url_gated
 ),
 -- C4-style content-blockword gate (operators/text_analysis
--- .filter_content_blockwords, expr mode, max_hits=0): alternation
+-- .filter_content_blockwords, max_hits=0): alternation
 -- imported from the operator; consuming boundary groups stand in for
 -- Java lookarounds (equivalent for existence)
 blockword_gated AS MATERIALIZED (

@@ -73,12 +73,10 @@ def get_spark(
         .config("spark.sql.autoBroadcastJoinThreshold", "64m")
         # local test files are single small parquet files: small split
         # size fans scans across cores. On a real cluster RAISE this
-        # (128m is the classic default) — file splits already provide
-        # parallelism there and tiny splits would explode task counts.
-        .config(
-            "spark.sql.files.maxPartitionBytes",
-            os.environ.get("SPARK_GRAFT_MAX_PART_BYTES", "4m"),
-        )
+        # through ``extra_conf`` (128m is the classic default) — file
+        # splits already provide parallelism there and tiny splits
+        # would explode task counts.
+        .config("spark.sql.files.maxPartitionBytes", "4m")
         # harness events.parquet stores TIMESTAMP(NANOS); Spark has no
         # nanos timestamp — read as long and truncate to micros in
         # load_tables (same truncation DuckDB applies on read).

@@ -142,9 +142,7 @@ def streaming_corpus_bronze(
         from ..operators.text_analysis import filter_content_blockwords
 
         # pure-expression row-local filter — stateless, so the batch
-        # funnel stage applies verbatim on the stream (expr mode only:
-        # the join escape shuffles, which an on-arrival gate never
-        # should — huge lexicons belong in batch compaction)
+        # funnel stage applies verbatim on the stream
         stream = filter_content_blockwords(
             stream, "text", content_blocklist, content_blocklist_max_hits
         )

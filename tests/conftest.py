@@ -20,6 +20,19 @@ def spark():
     yield s
 
 
+def plan_without_auto_broadcast(spark, build) -> str:
+    """Executed-plan text of the frame ``build()`` returns, planned with
+    Spark's size-based broadcast off: only hinted join sides broadcast,
+    so a join that still plans as a broadcast is one the code hints."""
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    before = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try:
+        return build()._jdf.queryExecution().executedPlan().toString()
+    finally:
+        spark.conf.set(key, before)
+
+
 # ---------------------------------------------------------------------------
 # Driver fast lane (round 16): node ids measured >= ~13 s call time on the
 # 2026-08-18 full-suite run (688 passed, 46:56 wall). pytest.ini deselects
@@ -62,7 +75,6 @@ SLOW_TESTS = {
     "tests/test_wds_exactly_once.py::test_wds_exactly_once_under_retry[local_before]",
     "tests/test_funnel_gates.py::test_funnel_gates_load_bearing",
     "tests/test_topics.py::test_labels_match_scalar_nearest_centroid",
-    "tests/test_incremental_dedup.py::test_compaction_crash_windows_never_lose_membership",
     "tests/test_quality_model.py::test_streaming_funnel_applies_quality_model",
     "tests/test_wds_exactly_once.py::test_wds_exactly_once_under_retry[local_after]",
     "tests/test_minhash_index.py::test_incremental_matches_greedy_oracle_membership",

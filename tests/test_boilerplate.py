@@ -7,6 +7,7 @@ import duckdb
 import pytest
 from pyspark.sql import functions as F
 
+from open_data_pipelines_spark.operators import boilerplate
 from open_data_pipelines_spark.operators.boilerplate import (
     boilerplate_lines,
     strip_boilerplate_lines,
@@ -61,12 +62,6 @@ def test_strip_multiline_order_preserved(spark):
     got = {r["doc_id"]: r["text"] for r in strip_boilerplate_lines(df, "text", "doc_id").collect()}
     assert got[1] == "\n".join([body[0], body[1], body[2]])
     assert got[3] == "\n".join([body[4], body[5]])
-
-
-def test_shuffle_fallback_matches_broadcast(spark, docs):
-    a = strip_boilerplate_lines(docs, "text", "doc_id", broadcast_boilerplate=True)
-    b = strip_boilerplate_lines(docs, "text", "doc_id", broadcast_boilerplate=False)
-    assert {tuple(r) for r in a.collect()} == {tuple(r) for r in b.collect()}
 
 
 def test_duckdb_parity_on_harness_corpus(spark):
@@ -168,11 +163,13 @@ def test_strip_identity_when_nothing_shared(spark):
     run()
 
 
-def test_filter_and_join_methods_agree(spark):
+def test_filter_and_join_methods_agree(spark, monkeypatch):
     """Round 14: the row-local HOF strip must produce IDENTICAL text
     to the anti-join + reassembly shape for every document, including
     blank-line preservation, all-boilerplate docs, NULL text, and the
-    no-boilerplate corpus."""
+    no-boilerplate corpus. The join path is forced by lowering
+    ``MAX_INLINE_FPS`` to -1, under which even an empty fingerprint
+    set is too big to inline."""
     rows = [
         (1, "Accept Cookies\nreal body one\n\nmore text"),
         (2, "Accept Cookies\nreal body two"),
@@ -182,36 +179,18 @@ def test_filter_and_join_methods_agree(spark):
         (6, "unique only\n\ntrailer"),
     ]
     df = spark.createDataFrame(rows, "doc_id int, text string")
-    a = {
-        r.doc_id: r.text
-        for r in strip_boilerplate_lines(df, "text", "doc_id", method="filter").collect()
-    }
-    b = {
-        r.doc_id: r.text
-        for r in strip_boilerplate_lines(df, "text", "doc_id", method="join").collect()
-    }
-    assert a == b
-    assert a[4] == "" and a[5] == ""
-    assert a[1] == "real body one\n\nmore text"  # blank line kept
-
-    # no boilerplate at all: both methods are the identity (mod NULL->'')
     clean = spark.createDataFrame(
         [(1, "a\nb"), (2, None)], "doc_id int, text string"
     )
-    fa = {r.doc_id: r.text for r in strip_boilerplate_lines(clean, "text", "doc_id", method="filter").collect()}
-    ja = {r.doc_id: r.text for r in strip_boilerplate_lines(clean, "text", "doc_id", method="join").collect()}
+
+    def strip(frame):
+        return {r.doc_id: r.text for r in strip_boilerplate_lines(frame, "text", "doc_id").collect()}
+
+    a, fa = strip(df), strip(clean)
+    monkeypatch.setattr(boilerplate, "MAX_INLINE_FPS", -1)
+    b, ja = strip(df), strip(clean)
+    assert a == b
+    assert a[4] == "" and a[5] == ""
+    assert a[1] == "real body one\n\nmore text"  # blank line kept
+    # no boilerplate at all: both paths are the identity (mod NULL->'')
     assert fa == ja == {1: "a\nb", 2: ""}
-
-    # auto with a tiny cap falls back to the join path (same output);
-    # an explicit filter request on an oversized set fails loud
-    import pytest as _pytest
-
-    auto_small = {
-        r.doc_id: r.text
-        for r in strip_boilerplate_lines(
-            df, "text", "doc_id", method="auto", max_inline_fps=0
-        ).collect()
-    }
-    assert auto_small == a
-    with _pytest.raises(ValueError, match="boilerplate"):
-        strip_boilerplate_lines(df, "text", "doc_id", method="filter", max_inline_fps=0)

@@ -1,6 +1,6 @@
 """Benchmark decontamination: full-output DuckDB parity at n=3 (the
 shingle macro the MinHash oracles already mirror), planted-
-contamination behavior, the no-broadcast fallback, and the anti-join
+contamination behavior, the broadcast plan pins, and the anti-join
 filter."""
 
 from __future__ import annotations
@@ -15,7 +15,7 @@ from open_data_pipelines_spark.operators.contamination import (
 )
 from open_data_pipelines_spark.queries.text import _SHINGLES
 from open_data_pipelines_spark.session import load_tables
-from tests.conftest import SF_SMOKE
+from tests.conftest import SF_SMOKE, plan_without_auto_broadcast
 
 
 @pytest.fixture(scope="module")
@@ -90,29 +90,24 @@ def test_planted_contamination_detected(docs, bench):
     assert planted.filter(F.col("n_bench_docs_hit") < 1).count() == 0
 
 
-def test_no_broadcast_same_result(docs, bench):
-    a = ngram_contamination(docs, bench, n=3).toPandas()
-    b = ngram_contamination(docs, bench, n=3, broadcast_bench=False).toPandas()
-    assert _rows(a) == _rows(b)
-
-
 def test_decontaminate_drops_exactly_flagged(docs, bench):
     rep = ngram_contamination(docs, bench, n=3)
     flagged = {r[0] for r in rep.filter(F.col("contamination_rate") > 0).select("doc_id").collect()}
     kept = {r[0] for r in decontaminate(docs, bench, n=3).select("doc_id").collect()}
     everyone = {r[0] for r in docs.select("doc_id").collect()}
     assert kept == everyone - flagged
+    # the planted bench rows themselves are contaminated and dropped
+    assert not any(d % 37 == 0 for d in kept)
 
 
-def test_plan_corpus_side_never_shuffles(docs, bench):
+def test_plan_corpus_side_never_shuffles(spark, docs, bench):
     """Mechanical form of the scale claim: the corpus probe is
     broadcast joins only — every shuffle Exchange in the plan belongs
-    to the (small) benchmark-distinct / hits-aggregate side."""
-    plan = (
-        ngram_contamination(docs, bench, n=3)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
+    to the (small) benchmark-distinct / hits-aggregate side. Planned
+    with the size-based broadcast off, so every broadcast counted here
+    is a hint the operator places."""
+    plan = plan_without_auto_broadcast(
+        spark, lambda: ngram_contamination(docs, bench, n=3)
     )
     shuffles = plan.count("Exchange") - plan.count("BroadcastExchange")
     assert plan.count("BroadcastHashJoin") == 2  # probe + verdict join-back
@@ -120,24 +115,21 @@ def test_plan_corpus_side_never_shuffles(docs, bench):
     assert shuffles <= 3  # bench distinct + hits partial/final agg
 
 
-def test_hashed_shingles_match_exact_path(spark, docs, bench):
-    """hash_shingles=True (64-bit join keys, the small-broadcast scale
-    form) produces the identical report and identical kept set as the
-    exact string join on this corpus — collisions are a 2^-64 event,
-    so any difference here is a bug, not bad luck."""
-    exact = ngram_contamination(docs, bench, n=3).collect()
-    hashed = ngram_contamination(docs, bench, n=3, hash_shingles=True).collect()
-    key = lambda rows: sorted(map(tuple, rows))  # noqa: E731
-    assert key(exact) == key(hashed)
-
-    kept_exact = {r["doc_id"] for r in decontaminate(docs, bench, n=3).collect()}
-    kept_hashed = {
-        r["doc_id"]
-        for r in decontaminate(docs, bench, n=3, hash_shingles=True).collect()
-    }
-    assert kept_exact == kept_hashed
-    # the planted bench rows themselves are contaminated and dropped
-    assert not any(d % 37 == 0 for d in kept_hashed)
+@pytest.mark.parametrize(
+    "max_rate, n_joins",
+    [
+        (0.0, 2),  # bench-set probe + anti-join of `bad`
+        (0.5, 3),  # report path (probe + verdict join-back) + anti-join
+    ],
+)
+def test_decontaminate_joins_broadcast_by_hint(spark, docs, bench, max_rate, n_joins):
+    """The bench n-gram set and the contaminated id set ``bad`` are
+    broadcast by hint, not by the planner's size estimate."""
+    plan = plan_without_auto_broadcast(
+        spark, lambda: decontaminate(docs, bench, n=3, max_rate=max_rate)
+    )
+    assert plan.count("BroadcastHashJoin") == n_joins, plan
+    assert "SortMergeJoin" not in plan and "ShuffledHashJoin" not in plan, plan
 
 
 def _bench_with_paraphrases(spark):

@@ -21,6 +21,8 @@ from open_data_pipelines_spark.streaming.dedup_stream import (
     stream_dedup_to_parquet,
 )
 
+from conftest import plan_without_auto_broadcast
+
 
 def _docs(spark, rows):
     return spark.createDataFrame(rows, ["doc_id", "text"])
@@ -43,7 +45,8 @@ def test_first_batch_admits_all_and_publishes(spark, tmp_path):
 def test_second_batch_sees_the_first(spark, tmp_path):
     idx = str(tmp_path / "seen")
     dedup_against_index(spark, _docs(spark, [(1, "alpha"), (2, "bravo")]), idx, _sig(), "doc_id", batch_id=1)
-    b2 = _docs(spark, [(10, "ALPHA  "), (11, "charlie")])  # normalized match
+    # normalized match against the index, plus a within-batch pair
+    b2 = _docs(spark, [(10, "ALPHA  "), (11, "charlie"), (12, "charlie")])
     fresh = dedup_against_index(spark, b2, idx, _sig(), "doc_id", batch_id=2)
     assert sorted(r["doc_id"] for r in fresh.collect()) == [11]
     assert read_seen_index(spark, idx).count() == 3
@@ -150,7 +153,11 @@ def test_no_update_probe_only(spark, tmp_path):
 
 def test_probe_plan_broadcasts_never_shuffles_seen(spark, tmp_path):
     """The seen side must reach both joins as a scan feeding a
-    BroadcastHashJoin probe — no Exchange over the seen scan."""
+    BroadcastHashJoin probe — no Exchange over the seen scan. Planned
+    with the size-based broadcast off: every batch-side join is
+    broadcast by hint — the seen probe, the anti-join of the hits, and
+    the within-batch winners join, which appears twice (under the
+    admitted rows and under the probed signature set)."""
     idx = str(tmp_path / "seen")
     dedup_against_index(
         spark, _docs(spark, [(i, f"t{i}") for i in range(50)]), idx, _sig(), "doc_id", batch_id=1
@@ -163,12 +170,9 @@ def test_probe_plan_broadcasts_never_shuffles_seen(spark, tmp_path):
         "doc_id",
         update=False,
     )
-    plan = fresh._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastHashJoin" in plan
-    # the only sort-merge-join-feeding exchanges allowed are for the
-    # within-batch winner join, which is batch-sized; the seen scan
-    # feeds the semi probe directly
-    assert "SortMergeJoin" not in plan
+    plan = plan_without_auto_broadcast(spark, lambda: fresh)
+    assert plan.count("BroadcastHashJoin") == 4, plan
+    assert "SortMergeJoin" not in plan and "ShuffledHashJoin" not in plan, plan
 
 
 def test_bucket_pruning_reaches_the_scan(spark, tmp_path):
@@ -396,25 +400,3 @@ def test_content_signature_null_position_significant(spark):
         fast_long_hash(F.concat_ws("\x1f", F.col("text"))).alias("legacy"),
     ).first()
     assert got == legacy
-
-
-def test_broadcast_escape_hatch_matches_default(spark, tmp_path):
-    """broadcast_batch=False degrades the batch-side joins to shuffle
-    joins with an identical admitted set (the oversized-batch escape
-    hatch the r10 ADVICE asked to surface)."""
-    idx_a, idx_b = str(tmp_path / "a"), str(tmp_path / "b")
-    first = _docs(spark, [(1, "alpha"), (2, "bravo")])
-    second = _docs(spark, [(3, "alpha"), (4, "charlie"), (5, "charlie")])
-    for idx, bb in ((idx_a, True), (idx_b, False)):
-        dedup_against_index(
-            spark, first, idx, content_signature("text"), "doc_id",
-            batch_id=1, broadcast_batch=bb,
-        ).collect()
-        got = {
-            r["doc_id"]
-            for r in dedup_against_index(
-                spark, second, idx, content_signature("text"), "doc_id",
-                batch_id=2, broadcast_batch=bb,
-            ).collect()
-        }
-        assert got == {4}, (bb, got)

@@ -366,6 +366,36 @@ def test_pq_meta_pins_nbits_across_bare_maintenance(spark, tmp_path):
     assert st2["retrained"] is False and st2["nbits"] == 3
 
 
+def test_fresh_path_maintenance_never_persists_inferred_nbits(spark, tmp_path):
+    """A bare maintenance call that initializes a VIRGIN path writes no
+    width it only inferred: 4 training rows leave train_pq(nbits=3)
+    with 4 centroids per subspace, whose inferred width (2) would
+    narrow the configured 3 if generation 1 recorded it. An explicit
+    ``nbits`` is persisted."""
+    from open_data_pipelines_spark.operators.ivf import global_mean_dist2
+    from open_data_pipelines_spark.operators.pq import (
+        maintain_ivf_pq_index,
+        read_pq_meta,
+    )
+
+    rows = [(i, [float(i % 4) + 1.0, float((i * 3) % 4) + 1.0]) for i in range(4)]
+    base = spark.createDataFrame(rows, ["vec_id", "embedding"])
+    cents = train_centroids(base, "embedding", "vec_id", k=2, iters=2)
+    books = train_pq(base, "embedding", "vec_id", m=2, nbits=3, iters=2)
+    assert len(books[0]) == 4  # inferred width 2, configured 3
+    baseline = global_mean_dist2(base, "embedding", cents)
+
+    for name, pinned, want in (("bare", None, None), ("pinned", 3, {"nbits": 3, "m": 2})):
+        path = str(tmp_path / name)
+        st = maintain_ivf_pq_index(
+            base, "embedding", "vec_id", cents, books, path, baseline,
+            retrain_factor=2.0, nbits=pinned,
+        )
+        assert st["retrained"] is False
+        assert read_index(spark, path).count() == 4
+        assert read_pq_meta(spark, path) == want, name
+
+
 def test_pq_meta_survives_manifest_generations(spark, tmp_path):
     """Generation twin: the meta is written INSIDE each generation
     directory before the pointer publishes, so read_pq_meta always

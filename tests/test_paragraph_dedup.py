@@ -156,21 +156,3 @@ def test_plan_has_no_window(spark, docs):
     serialize every copy of a hot paragraph on one reducer)."""
     plan = dedup_paragraphs(docs, "text", "doc_id")._jdf.queryExecution().executedPlan().toString()
     assert "Window" not in plan
-
-
-def test_max_docs_shuffle_fallback_matches_broadcast(spark, docs):
-    """broadcast_over=False (the oversized-boilerplate escape hatch)
-    must produce the identical keeper set via the shuffle join."""
-    a = {
-        (r["doc_id"], r["pos"], r["keep"])
-        for r in paragraph_keep_flags(
-            docs, "text", "doc_id", policy="max_docs", max_docs=2
-        ).collect()
-    }
-    b = {
-        (r["doc_id"], r["pos"], r["keep"])
-        for r in paragraph_keep_flags(
-            docs, "text", "doc_id", policy="max_docs", max_docs=2, broadcast_over=False
-        ).collect()
-    }
-    assert a == b

@@ -90,12 +90,13 @@ def test_bucketed_join_has_no_exchange(spark):
         spark.sql("DROP TABLE IF EXISTS b_dims")
 
 
-def test_range_join_auto_strategy_choice(spark):
+def test_range_join_auto_strategy_choice(spark, monkeypatch):
     """Auto range join: broadcast bbox plan for a small b-side,
     gridded equi-join when the b-side outgrows the threshold — same
     rows either way."""
     from pyspark.sql import functions as F
 
+    from open_data_pipelines_spark.operators import joins
     from open_data_pipelines_spark.operators.joins import (
         range_join_within,
         range_join_within_auto,
@@ -116,7 +117,8 @@ def test_range_join_auto_strategy_choice(spark):
     auto_small = range_join_within_auto(a, b, "ax", "ay", "bx", "by", 10.0)
     assert "BroadcastNestedLoopJoin" in auto_small._jdf.queryExecution().executedPlan().toString()
 
-    auto_big = range_join_within_auto(a, b, "ax", "ay", "bx", "by", 10.0, broadcast_bytes=1)
+    monkeypatch.setattr(joins, "RANGE_BROADCAST_BYTES", 1)
+    auto_big = range_join_within_auto(a, b, "ax", "ay", "bx", "by", 10.0)
     plan_big = auto_big._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastNestedLoopJoin" not in plan_big
 
