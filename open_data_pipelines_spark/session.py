@@ -22,6 +22,15 @@ The reference delegates all execution to DuckDB/MotherDuck
   launches the JVM can size it; a session this library did not build
   (the driver's) owns that conf itself, as it owns the timezone under
   ``load_tables(configure_session=False)``.
+- Call-site capture off (``spark.python.sql.dataFrameDebugging.enabled``):
+  with it on, PySpark wraps every ``Column``/``DataFrame`` method to walk
+  the Python stack and send the call site to the JVM, about 4 py4j
+  round trips per call (a warm ``impact_scores`` build makes 1087 round
+  trips with it, about 420 without). The cost is that an analysis error
+  loses its Python call-site fragment. To debug, turn it back on
+  through ``extra_conf``; PySpark reads the setting once per process,
+  from the first session that calls a wrapped method, so it takes a
+  fresh process.
 """
 
 from __future__ import annotations
@@ -94,6 +103,7 @@ def get_spark(
         .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
         .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
         .config("spark.ui.enabled", "false")
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "24g"))
     )
     for k, v in (extra_conf or {}).items():

@@ -42,6 +42,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from ..operators.index_commit import _hadoop_fs, _is_complete
 from ..operators.scd2 import scd2_initial_load, scd2_merge
+from ..session import footer_schema
 
 # Writers format ``v{batch_id:08d}`` — zero-padded but GROWABLE past
 # 1e8 batches, so the match must be 8-or-more digits, not exactly 8.
@@ -69,6 +70,12 @@ def _versions(spark: SparkSession, root: str) -> list[tuple[int, str]]:
     return sorted(out)
 
 
+def _read_snapshot(spark: SparkSession, path: str) -> DataFrame:
+    # schema from one footer on the driver: a bare read.parquet would
+    # launch a schema-inference job per snapshot read
+    return spark.read.schema(footer_schema(spark, path)).parquet(path)
+
+
 def latest_snapshot(
     spark: SparkSession, root: str
 ) -> tuple[DataFrame | None, int]:
@@ -78,7 +85,7 @@ def latest_snapshot(
     if not vs:
         return None, -1
     v, path = vs[-1]
-    return spark.read.parquet(path), v
+    return _read_snapshot(spark, path), v
 
 
 def prune_snapshots(spark: SparkSession, root: str, keep: int = 3) -> int:
@@ -157,7 +164,7 @@ def stream_scd2(
             # multi-version case.)
             return
         prior = [(v, p) for v, p in vs if v < batch_id]
-        dim = spark.read.parquet(prior[-1][1]) if prior else None
+        dim = _read_snapshot(spark, prior[-1][1]) if prior else None
         if dim is None:
             new_dim = scd2_initial_load(
                 batch_df, entity_key, event_time, attr_cols, hash_cols, tiebreakers

@@ -7,7 +7,8 @@ round 1's biggest failure mode, pinned here as a subprocess test with
 
 The session this library builds must also stay warm across re-runs:
 re-running a query set compiles no generated class again
-(``session.CODEGEN_CACHE_ENTRIES``).
+(``session.CODEGEN_CACHE_ENTRIES``), and building a query does not pay
+PySpark's per-call call-site capture in py4j round trips.
 """
 
 from __future__ import annotations
@@ -100,3 +101,39 @@ def test_rerun_compiles_no_new_classes(spark):
     before, _ = janino(spark)
     run_all()
     assert janino(spark)[0] - before == 0
+
+
+def test_warm_build_py4j_round_trips(spark, monkeypatch):
+    """A warm ``impact_scores`` build on a ``get_spark`` session: 1087
+    py4j round trips with PySpark's call-site capture on (the Spark
+    default), about 420 with it off."""
+    import gc
+
+    from pyspark.errors import utils as origin
+
+    from open_data_pipelines_spark.plans.impact import impact_scores
+
+    # PySpark caches the setting per process at the first wrapped call;
+    # make it read this session's conf
+    monkeypatch.setattr(origin, "_enable_debugging_cache", None)
+    impact_scores(spark, SF_SMOKE)
+    client = spark._jvm._gateway_client
+    send = client.send_command
+    sent = []
+
+    def counting(command, *args, **kwargs):
+        sent.append(command)
+        return send(command, *args, **kwargs)
+
+    gc.collect()
+    gc.disable()
+    monkeypatch.setattr(client, "send_command", counting)
+    try:
+        impact_scores(spark, SF_SMOKE)
+    finally:
+        monkeypatch.undo()
+        gc.enable()
+    # object releases ("m\nd") free Java objects of earlier frames
+    # whenever Python drops them; they are not this build's calls
+    calls = [c for c in sent if not c.startswith("m\nd")]
+    assert len(calls) <= 500, len(calls)

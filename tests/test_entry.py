@@ -44,3 +44,25 @@ def test_queries_and_oracles_aligned():
     o = e.oracle_sql()
     assert set(o) <= set(q)
     assert len(q) >= 15
+
+
+def test_impact_scores_scores_once(spark):
+    """The scoring chain (orders scan, three broadcast joins, nation
+    aggregate) is planned and run once: the extremes of the min-max
+    normalization come from a window over the nation-grain aggregate,
+    not from a second copy of the chain. Three exchanges run: the
+    lineitem spread, the nation aggregate and the window's."""
+    from open_data_pipelines_spark import metrics
+    from open_data_pipelines_spark.plans.impact import impact_scores
+
+    spark.catalog.clearCache()  # a cached copy of the mart would run no stage
+    df = impact_scores(spark, SF_SMOKE)
+    sc = spark.sparkContext
+    sc.setJobGroup("impact-scores-once", "impact_scores")
+    try:
+        df.collect()
+    finally:
+        sc._jsc.clearJobGroup()
+    assert metrics.shuffle_stages_run(spark, "impact-scores-once") == 3
+    final = df._jdf.queryExecution().executedPlan().toString().split("== Initial Plan ==")[0]
+    assert final.count("orders.parquet") == 1, final

@@ -2,7 +2,10 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from open_data_pipelines_spark.operators.aggregates import minmax_normalize
+from open_data_pipelines_spark.operators.aggregates import (
+    minmax_normalize,
+    minmax_normalize_small,
+)
 from open_data_pipelines_spark.operators.dedup import top1_per_key
 from open_data_pipelines_spark.operators.joins import (
     anti_join,
@@ -31,6 +34,20 @@ def test_minmax_normalize_range(spark):
     df = spark.createDataFrame([(1, 0.0), (2, 50.0), (3, 100.0)], ["k", "x"])
     got = {r["k"]: r["score"] for r in minmax_normalize(df, "x", "score").collect()}
     assert got[1] == 1.0 and got[3] == 100.0 and got[2] == 50.5
+
+
+def test_minmax_normalize_small_equals_broadcast_form(spark):
+    # the window form reads its input once; same doubles, same columns
+    for rows in (
+        [(1, 5.0), (2, 5.0)],
+        [(1, 0.0), (2, 50.0), (3, 100.0), (4, None)],
+        [(1, 0.1), (2, 0.7), (3, 0.3)],
+    ):
+        df = spark.createDataFrame(rows, "k INT, x DOUBLE")
+        small = minmax_normalize_small(df, "x", "score")
+        wide = minmax_normalize(df, "x", "score")
+        assert small.columns == wide.columns == ["k", "x", "score"]
+        assert sorted(small.collect()) == sorted(wide.collect())
 
 
 def test_anti_and_overlap(spark):

@@ -259,3 +259,26 @@ def test_snapshot_file_count_stays_bounded(spark, tmp_path):
     # 5+5+4+3+2+1 versions of e0..e5, one current row each
     assert got.count() == 20
     assert got.filter(F.col("is_current")).count() == 6
+
+
+def test_merge_batch_reads_previous_snapshot_without_a_job(spark, tmp_path):
+    """A warm batch reads the previous snapshot's schema from its
+    footer: the merge batch runs the stream's own jobs and the
+    snapshot write, and no schema-inference job (4 jobs with one)."""
+    from open_data_pipelines_spark import metrics
+
+    landing = str(tmp_path / "landing")
+    ckpt, root = str(tmp_path / "ckpt"), str(tmp_path / "dim")
+    b1 = spark.createDataFrame(BATCH1, COLS)
+
+    def drain():
+        stream = spark.readStream.schema(b1.schema).parquet(landing)
+        return stream_scd2(stream, root, ckpt, **ARGS)
+
+    b1.coalesce(1).write.parquet(landing)
+    drain()  # initial load
+    time.sleep(1.1)  # file mtime orders the micro-batches
+    spark.createDataFrame(BATCH2, COLS).coalesce(1).write.mode("append").parquet(landing)
+    q = drain()
+    assert latest_snapshot(spark, root)[1] == 1
+    assert len(metrics.jobs(spark, str(q.runId))) == 3
