@@ -17,6 +17,10 @@ Engine-native shape (cluster boundary moved to driver/executors):
      ``spark.read``); expression-layer cleaning; ONE partitioned table
      with dynamic month overwrite (idempotent re-runs)
   4. same metadata log row
+
+Steps 3-4 are one function, :func:`ingest_landed`: its callers
+(:func:`run_monthly_ingest`, each catalog kind, the catalog backfill)
+supply only ``load``.
 """
 
 from __future__ import annotations
@@ -25,14 +29,14 @@ import urllib.request
 from collections.abc import Callable
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .functions.cleaning import normalize_column_names, normalize_null_tokens, safe_cast
 from .schemas import TemplateRegistry
 from .sinks.metadata import MetadataLogger
 from .sinks.writers import write_month_partition
-from .sources.csv_source import read_csv_bronze
+from .sources.csv_source import read_csv_bronze, read_csv_header
 from .sources.zip_source import fetch_and_extract
 
 
@@ -51,6 +55,75 @@ class MonthlyIngestConfig:
     strict_schema: bool = True
 
 
+def ingest_landed(
+    spark: SparkSession,
+    load: Callable[[], DataFrame | dict[str, DataFrame]],
+    *,
+    warehouse_path: str,
+    log_path: str,
+    data_source: str,
+    table_name: str,
+    processor_type: str,
+    url: str,
+    year: int | Column,
+    month: int | Column,
+    numeric_columns: dict[str, str] | None = None,
+) -> DataFrame | dict[str, DataFrame]:
+    """Run ``load()`` inside one metadata log row, add the numeric casts
+    and partition columns (values, or per-row columns for a backfill) in
+    one projection, and month-write each frame (a dict of frames goes to
+    ``warehouse_path/<key>``). Returns the written frame(s).
+
+    Idempotent per (year, month): re-runs replace exactly the months
+    written (the reference's CREATE OR REPLACE month table, I2).
+    """
+    with MetadataLogger(
+        spark,
+        log_path,
+        data_source=data_source,
+        table_name=table_name,
+        processor_type=processor_type,
+        url=url,
+    ) as meta:
+        out = load()
+        # one projection: each withColumn would be its own eager analysis
+        derived = {
+            **{
+                col: safe_cast(normalize_null_tokens(col), typ)
+                for col, typ in (numeric_columns or {}).items()
+            },
+            "year": F.lit(year),
+            "month": F.lit(month),
+            "date_time_processed": F.current_timestamp(),
+        }
+        written: dict[str | None, DataFrame] = {}
+        total = 0
+        for table, bronze in (out if isinstance(out, dict) else {None: out}).items():
+            written[table] = bronze.withColumns(derived)
+            target = warehouse_path if table is None else f"{warehouse_path.rstrip('/')}/{table}"
+            total += write_month_partition(written[table], target)
+        meta.rows_processed = total
+        return written if isinstance(out, dict) else written[None]
+
+
+def read_csv_members(
+    spark: SparkSession, cfg: MonthlyIngestConfig, members: list[str]
+) -> DataFrame:
+    """All-string bronze union of a drop's landed CSV files, header names
+    normalized. No declared columns -> lenient: each file's own header
+    is its schema."""
+    if not members:
+        raise FileNotFoundError(f"no members matching {cfg.member_glob!r} in {cfg.url}")
+    bronze: DataFrame | None = None
+    for path in members:
+        expected = cfg.expected_columns or read_csv_header(path)
+        part = normalize_column_names(
+            read_csv_bronze(spark, path, expected, strict=cfg.strict_schema)
+        )
+        bronze = part if bronze is None else bronze.unionByName(part)
+    return bronze
+
+
 def run_monthly_ingest(
     spark: SparkSession,
     cfg: MonthlyIngestConfig,
@@ -59,44 +132,25 @@ def run_monthly_ingest(
     log_path: str,
     opener: Callable = urllib.request.urlopen,
 ) -> DataFrame:
-    """One monthly drop, end to end. Returns the silver DataFrame.
+    """One monthly drop, end to end. Returns the silver DataFrame."""
 
-    Idempotent per (year, month): re-runs replace exactly that month's
-    partitions (the reference's CREATE OR REPLACE month table, I2).
-    """
-    with MetadataLogger(
+    def load() -> DataFrame:
+        members = fetch_and_extract(cfg.url, landing_dir, cfg.member_glob, opener=opener)
+        return read_csv_members(spark, cfg, members)
+
+    return ingest_landed(
         spark,
-        log_path,
+        load,
+        warehouse_path=warehouse_path,
+        log_path=log_path,
         data_source=cfg.data_source,
         table_name=f"{cfg.month:02d}_{cfg.year}",
         processor_type="monthly_ingest",
         url=cfg.url,
-    ) as meta:
-        members = fetch_and_extract(cfg.url, landing_dir, cfg.member_glob, opener=opener)
-        if not members:
-            raise FileNotFoundError(f"no members matching {cfg.member_glob!r} in {cfg.url}")
-
-        silver: DataFrame | None = None
-        for path in members:
-            bronze = read_csv_bronze(spark, path, cfg.expected_columns, strict=cfg.strict_schema)
-            part = normalize_column_names(bronze)
-            silver = part if silver is None else silver.unionByName(part)
-
-        # one projection: each withColumn would be its own eager analysis
-        silver = silver.withColumns(
-            {
-                **{
-                    col: safe_cast(normalize_null_tokens(col), typ)
-                    for col, typ in cfg.numeric_columns.items()
-                },
-                "year": F.lit(cfg.year),
-                "month": F.lit(cfg.month),
-                "date_time_processed": F.current_timestamp(),
-            }
-        )
-
-        meta.rows_processed = write_month_partition(silver, warehouse_path)
-        return silver
+        year=cfg.year,
+        month=cfg.month,
+        numeric_columns=cfg.numeric_columns,
+    )
 
 
 def run_dual_schema_ingest(

@@ -50,12 +50,7 @@ def append_table(df: DataFrame, table: str) -> None:
     df.write.mode("append").saveAsTable(table)
 
 
-def write_month_partition(
-    df: DataFrame,
-    path: str,
-    year_col: str = "year",
-    month_col: str = "month",
-) -> int:
+def write_month_partition(df: DataFrame, path: str) -> int:
     """I2: idempotent month reload — dynamic partition overwrite
     replaces only the (year, month) partitions present in ``df``.
 
@@ -67,7 +62,7 @@ def write_month_partition(
         df.observe(obs, F.count(F.lit(1)).alias("rows"))
         .write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")
-        .partitionBy(year_col, month_col)
+        .partitionBy("year", "month")
         .parquet(path)
     )
     return obs.get["rows"]

@@ -8,13 +8,15 @@ The reference ships one thin ``main()`` per source under
 points as *declarative* :class:`SourceConfig` rows keyed by the
 reference's source codes (``src/data_sources/data_source_config.py:20-98``),
 so a user invokes a pipeline by name and everything else — discovery
-strategy, ingest shape, schema/table naming, batch sizing — comes from
-config lookup alone.
+strategy, ingest shape, schema/table naming — comes from config lookup
+alone.
 
 Engine-native differences (same as :mod:`..pipelines`): no DDL, one
 partitioned parquet table per source with dynamic month overwrite, and
-the ingest fan-out is Spark's, so ``batch_limit`` maps to the target
-max rows per written file rather than an insert-loop chunk.
+the ingest fan-out is Spark's (partition sizing replaces the
+reference's insert-loop batch limits). Each ingest kind supplies only a
+``load`` closure; the partition columns, the month write and the log
+row come from :func:`..pipelines.ingest_landed`, the one ingest path.
 
 Discovery strategies (all in :mod:`.discovery`, network injectable):
 
@@ -41,12 +43,13 @@ from dataclasses import dataclass, field
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
-from ..pipelines import MonthlyIngestConfig
+from ..pipelines import MonthlyIngestConfig, ingest_landed, read_csv_members
 from . import discovery
-from .csv_source import read_csv_bronze, read_csv_header
 from .gtfs import load_gtfs_bundle
-from .zip_source import download_to_landing, fetch_and_extract
+from .json_source import flatten_struct_columns, read_json_events
+from .zip_source import download_to_landing, fetch_and_extract, zip_lines_distributed
 
 
 @dataclass(frozen=True)
@@ -59,10 +62,8 @@ class SourceConfig:
     ingest: str  # zip_json|zip_csv|csv|gtfs|ods|encrypted_xls|geopackage
     schema_name: str
     table_template: str = "{month:02d}_{year}"
-    batch_limit: int | None = None
     member_glob: str = "*.csv"
     columns: tuple[str, ...] | None = None  # None -> lenient header check
-    numeric_columns: dict[str, str] = field(default_factory=dict)
     discovery_args: dict[str, Any] = field(default_factory=dict)
     ingest_args: dict[str, Any] = field(default_factory=dict)  # loader kwargs (sheet/header)
     ref: str = ""  # reference pipeline module, for parity audit
@@ -79,7 +80,6 @@ CATALOG: dict[str, SourceConfig] = {
             discovery="latest_month_link",
             ingest="zip_json",
             schema_name="street_manager",
-            batch_limit=300_000,
             member_glob="*.json",
             columns=(
                 "event_reference",
@@ -104,7 +104,6 @@ CATALOG: dict[str, SourceConfig] = {
             discovery="latest_month_link",
             ingest="zip_json",
             schema_name="section_58",
-            batch_limit=150_000,
             member_glob="*.json",
             ref="src/pipelines/section_58.py",
         ),
@@ -143,7 +142,6 @@ CATALOG: dict[str, SourceConfig] = {
             ingest="zip_csv",
             schema_name="os_usrn_uprn",
             table_template="usrn_uprn_latest",
-            batch_limit=200_000,
             discovery_args={"product_id": "LIDS", "fmt": "CSV"},
             ref="src/pipelines/os_usrn_uprn.py",
         ),
@@ -246,7 +244,6 @@ CATALOG: dict[str, SourceConfig] = {
             ingest="csv",
             schema_name="naptan",
             table_template="naptan_latest",
-            batch_limit=100_000,
             ref="src/pipelines/naptan.py",
         ),
         SourceConfig(
@@ -310,7 +307,6 @@ CATALOG: dict[str, SourceConfig] = {
             discovery="ckan_latest",
             ingest="csv",
             schema_name="nhs_epd",
-            batch_limit=500_000,
             discovery_args={"format": "CSV"},
             ref="src/pipelines/nhs_prescriptions.py",
         ),
@@ -429,116 +425,71 @@ def run_source(
         else resolve_url(cfg, year=year, month=month, fetch=fetch, catalogue=catalogue)
     )
 
+    def land() -> str:
+        return download_to_landing(resolved, landing_dir, opener=opener)
+
     if cfg.ingest in ("zip_csv", "csv"):
-        mcfg = MonthlyIngestConfig(
+        csv_cfg = MonthlyIngestConfig(
             data_source=cfg.name,
             url=resolved,
             year=year,
             month=month,
-            expected_columns=list(cfg.columns) if cfg.columns else [],
-            numeric_columns=dict(cfg.numeric_columns),
+            expected_columns=list(cfg.columns or ()),
             member_glob=cfg.member_glob,
             strict_schema=cfg.columns is not None,
         )
-        table_name = cfg.table_template.format(year=year, month=month)
-        if cfg.ingest == "csv":
-            # direct CSV: land the single file, then the same silver path
-            local = download_to_landing(resolved, landing_dir, opener=opener)
-            return _ingest_csv_files(
-                spark, mcfg, [local], warehouse_path, log_path, table_name=table_name
-            )
-        members = fetch_and_extract(resolved, landing_dir, cfg.member_glob, opener=opener)
-        return _ingest_csv_files(
-            spark, mcfg, members, warehouse_path, log_path, table_name=table_name
-        )
 
-    if cfg.ingest == "zip_json":
-        from pyspark.sql import functions as F
+        def load():
+            if cfg.ingest == "csv":
+                members = [land()]
+            else:
+                members = fetch_and_extract(resolved, landing_dir, cfg.member_glob, opener=opener)
+            return read_csv_members(spark, csv_cfg, members)
 
-        from ..sinks.metadata import MetadataLogger
-        from ..sinks.writers import write_month_partition
-        from .json_source import read_json_events
-
+    elif cfg.ingest == "zip_json":
         if json_schema is None:
             raise ValueError("zip_json ingest needs a declared schema (json_schema=)")
-        with MetadataLogger(
-            spark,
-            log_path,
-            data_source=cfg.name,
-            table_name=cfg.table_template.format(year=year, month=month),
-            processor_type="catalog_ingest",
-            url=resolved,
-        ) as meta:
-            members = fetch_and_extract(
-                resolved, landing_dir, cfg.member_glob, opener=opener
-            )
+
+        def load():
             # read only the extracted members (the landing dir also holds the zip)
-            flat = read_json_events(spark, members, json_schema)
-            silver = (
-                flat.withColumn("year", F.lit(year))
-                .withColumn("month", F.lit(month))
-                .withColumn("date_time_processed", F.current_timestamp())
-            )
-            # dynamic month overwrite -> idempotent re-runs (reference:
-            # street_manager.py:202-265 rebuilds the month table,
-            # motherduck.py:69-71 CREATE OR REPLACE)
-            meta.rows_processed = write_month_partition(silver, warehouse_path)
-            return silver
+            members = fetch_and_extract(resolved, landing_dir, cfg.member_glob, opener=opener)
+            return read_json_events(spark, members, json_schema)
 
-    # the remaining kinds share one epilogue: bronze frame(s) ->
-    # month-partitioned warehouse write (dynamic overwrite, idempotent
-    # re-runs) -> one processing_logs row — the same contract the
-    # zip_json/zip_csv paths guarantee, so EVERY catalogued kind lands
-    # and logs uniformly (reference: street_manager.py:202-265 rebuild
-    # + metadata_logger.py evidence row per run)
-    if cfg.ingest == "gtfs":
+    elif cfg.ingest == "gtfs":
 
-        def load(local: str):
-            return load_gtfs_bundle(spark, local, landing_dir)
+        def load():
+            return load_gtfs_bundle(spark, land(), landing_dir)
 
     elif cfg.ingest in ("ods", "encrypted_xls"):
         from .spreadsheet import load_spreadsheet_bronze
 
-        def load(local: str):
-            return load_spreadsheet_bronze(spark, local, **cfg.ingest_args)
+        def load():
+            return load_spreadsheet_bronze(spark, land(), **cfg.ingest_args)
 
     elif cfg.ingest == "geopackage":
         from .geopackage import gpkg_to_parquet, load_geoparquet
 
-        def load(local: str):
-            pq = gpkg_to_parquet(local, f"{landing_dir}/geo.parquet")
-            return load_geoparquet(spark, pq)
+        def load():
+            return load_geoparquet(spark, gpkg_to_parquet(land(), f"{landing_dir}/geo.parquet"))
 
     else:
         raise KeyError(f"unknown ingest kind {cfg.ingest!r}")
 
-    from pyspark.sql import functions as F
-
-    from ..sinks.metadata import MetadataLogger
-    from ..sinks.writers import write_month_partition
-
-    with MetadataLogger(
+    # every kind lands and logs alike: dynamic month overwrite (reference:
+    # street_manager.py:202-265 rebuilds the month table) and one
+    # processing_logs evidence row per run (metadata_logger.py)
+    return ingest_landed(
         spark,
-        log_path,
+        load,
+        warehouse_path=warehouse_path,
+        log_path=log_path,
         data_source=cfg.name,
         table_name=cfg.table_template.format(year=year, month=month),
         processor_type="catalog_ingest",
         url=resolved,
-    ) as meta:
-        local = download_to_landing(resolved, landing_dir, opener=opener)
-        out = load(local)
-        frames = out if isinstance(out, dict) else {None: out}
-        total = 0
-        for table, frame in frames.items():
-            silver = (
-                frame.withColumn("year", F.lit(year))
-                .withColumn("month", F.lit(month))
-                .withColumn("date_time_processed", F.current_timestamp())
-            )
-            target = warehouse_path if table is None else f"{warehouse_path.rstrip('/')}/{table}"
-            total += write_month_partition(silver, target)
-        meta.rows_processed = total
-        return out
+        year=year,
+        month=month,
+    )
 
 
 def run_source_backfill(
@@ -564,82 +515,25 @@ def run_source_backfill(
     the whole backfill, untouched months preserved. One metadata row
     logs the run (reference equivalent: looping
     ``src/pipelines/street_manager.py`` month by month)."""
-    from pyspark.sql import functions as F
-
-    from ..sinks.metadata import MetadataLogger
-    from ..sinks.writers import write_month_partition
-    from .json_source import flatten_struct_columns
-    from .zip_source import zip_lines_distributed
-
     cfg = CATALOG[name]
     if cfg.ingest != "zip_json":
         raise ValueError(f"backfill supports zip_json sources, {name!r} is {cfg.ingest}")
-    with MetadataLogger(
+
+    def load() -> DataFrame:
+        lines = zip_lines_distributed(spark, zip_glob, cfg.member_glob)
+        parsed = lines.select(F.from_json("line", json_schema).alias("__e")).select("__e.*")
+        return flatten_struct_columns(parsed, sep="_", strip_prefix="object_data_")
+
+    ts = F.to_timestamp(event_time_col)
+    return ingest_landed(
         spark,
-        log_path,
+        load,
+        warehouse_path=warehouse_path,
+        log_path=log_path,
         data_source=cfg.name,
         table_name="backfill",
         processor_type="catalog_backfill",
         url=zip_glob,
-    ) as meta:
-        lines = zip_lines_distributed(spark, zip_glob, cfg.member_glob)
-        parsed = lines.select(F.from_json("line", json_schema).alias("__e")).select("__e.*")
-        flat = flatten_struct_columns(parsed, sep="_", strip_prefix="object_data_")
-        ts = F.to_timestamp(event_time_col)
-        silver = (
-            flat.withColumn("year", F.year(ts))
-            .withColumn("month", F.month(ts))
-            .withColumn("date_time_processed", F.current_timestamp())
-        )
-        meta.rows_processed = write_month_partition(silver, warehouse_path)
-        return silver
-
-
-def _ingest_csv_files(
-    spark: SparkSession,
-    mcfg: MonthlyIngestConfig,
-    files: list[str],
-    warehouse_path: str,
-    log_path: str,
-    table_name: str | None = None,
-) -> DataFrame:
-    """Shared CSV silver path for already-landed files (the body of
-    ``run_monthly_ingest`` minus the zip download). ``table_name``
-    carries the catalog row's ``table_template`` (e.g. a ``_latest``
-    style name) into the metadata log; monthly default otherwise."""
-    from pyspark.sql import functions as F
-
-    from ..functions.cleaning import (
-        normalize_column_names,
-        normalize_null_tokens,
-        safe_cast,
+        year=F.year(ts),
+        month=F.month(ts),
     )
-    from ..sinks.metadata import MetadataLogger
-    from ..sinks.writers import write_month_partition
-
-    with MetadataLogger(
-        spark,
-        log_path,
-        data_source=mcfg.data_source,
-        table_name=table_name or f"{mcfg.month:02d}_{mcfg.year}",
-        processor_type="catalog_ingest",
-        url=mcfg.url,
-    ) as meta:
-        silver: DataFrame | None = None
-        for path in files:
-            # no declared columns -> lenient: the landed header IS the schema
-            expected = mcfg.expected_columns or read_csv_header(path)
-            bronze = read_csv_bronze(spark, path, expected, strict=mcfg.strict_schema)
-            part = normalize_column_names(bronze)
-            silver = part if silver is None else silver.unionByName(part)
-        if silver is None:
-            raise ValueError("no files to ingest")
-        for col, typ in mcfg.numeric_columns.items():
-            silver = silver.withColumn(col, safe_cast(normalize_null_tokens(col), typ))
-        silver = (
-            silver.withColumn("year", F.lit(mcfg.year))
-            .withColumn("month", F.lit(mcfg.month))
-            .withColumn("date_time_processed", F.current_timestamp())
-        )
-        meta.rows_processed = write_month_partition(silver, warehouse_path)
-        return silver

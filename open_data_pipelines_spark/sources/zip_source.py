@@ -44,13 +44,12 @@ CHUNK = 1024 * 1024  # 1 MiB — reference's streaming chunk size
 def download_to_landing(
     url: str,
     landing_dir: str,
-    filename: str | None = None,
     opener: Callable = urllib.request.urlopen,
 ) -> str:
     """Stream a remote file to the landing dir in 1 MiB chunks."""
     dest = Path(landing_dir)
     dest.mkdir(parents=True, exist_ok=True)
-    out = dest / (filename or url.rstrip("/").split("/")[-1])
+    out = dest / url.rstrip("/").split("/")[-1]
     with opener(url) as resp, open(out, "wb") as fh:
         shutil.copyfileobj(resp, fh, CHUNK)
     return str(out)
@@ -60,9 +59,9 @@ def extract_zip(
     zip_path: str,
     landing_dir: str,
     member_glob: str = "*",
-    flatten: bool = True,
 ) -> list[str]:
-    """Extract matching members, streamed per member. Returns paths.
+    """Extract matching members, streamed per member, flat into
+    ``landing_dir``. Returns paths.
 
     ``member_glob`` picks members the way the reference picks ``.csv``
     inside BDUK zips or ``Data/*.csv`` inside ONS zips.
@@ -75,22 +74,18 @@ def extract_zip(
         for info in zf.infolist():
             if info.is_dir() or not fnmatch.fnmatch(info.filename, member_glob):
                 continue
-            if flatten:
-                name = Path(info.filename).name
-                if str(dest / name) in seen:
-                    # basename collision across ZIP dirs: disambiguate
-                    # instead of silently overwriting the first member;
-                    # loop until genuinely unused (a flattened full
-                    # path can itself collide)
-                    base = info.filename.replace("/", "_")
-                    name, i = base, 1
-                    while str(dest / name) in seen:
-                        name = f"{i}_{base}"
-                        i += 1
-                target = dest / name
-            else:
-                target = dest / info.filename
-            target.parent.mkdir(parents=True, exist_ok=True)
+            name = Path(info.filename).name
+            if str(dest / name) in seen:
+                # basename collision across ZIP dirs: disambiguate
+                # instead of silently overwriting the first member;
+                # loop until genuinely unused (a flattened full
+                # path can itself collide)
+                base = info.filename.replace("/", "_")
+                name, i = base, 1
+                while str(dest / name) in seen:
+                    name = f"{i}_{base}"
+                    i += 1
+            target = dest / name
             with zf.open(info) as src, open(target, "wb") as dst:
                 shutil.copyfileobj(src, dst, CHUNK)
             seen.add(str(target))

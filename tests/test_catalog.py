@@ -195,8 +195,9 @@ def test_nhs_by_name(spark, tmp_path):
 
 def test_geoplace_swa_catalog_ingest_end_to_end(spark, tmp_path):
     """S9 through the catalog path: the encrypted VelvetSweatshop
-    fixture decrypts natively (no msoffcrypto in-container) and lands
-    as all-string bronze with the catalog row's header_row=1."""
+    fixture decrypts natively (no msoffcrypto in-container), reads as
+    all-string bronze with the catalog row's header_row=1, and
+    run_source returns the silver frame it wrote."""
     import pathlib
 
     fixture = pathlib.Path(__file__).resolve().parent / "fixtures" / "encrypted_velvet.xls"
@@ -210,7 +211,10 @@ def test_geoplace_swa_catalog_ingest_end_to_end(spark, tmp_path):
         month=1,
         url=f"file://{fixture}",
     )
-    assert set(df.columns) == {"swa_code", "account_name", "prefix", "account_type"}
+    assert set(df.columns) == {
+        "swa_code", "account_name", "prefix", "account_type",
+        "year", "month", "date_time_processed",
+    }
     rows = {r["prefix"]: r["account_name"] for r in df.collect()}
     assert rows["YG"] == "Transport for London"
 
@@ -234,6 +238,22 @@ def test_corrupt_ods_raises_cleanly(spark, tmp_path):
             month=1,
             url=f"file://{ods}",
         )
+
+
+def test_zip_csv_without_matching_member_raises(spark, tmp_path):
+    """A zip_csv drop whose archive holds no ``*.csv`` member fails with
+    FileNotFoundError, as run_monthly_ingest does, and logs the run as
+    FAILED."""
+    bundle = tmp_path / "nspl.zip"
+    with zipfile.ZipFile(bundle, "w") as z:
+        z.writestr("README.txt", "no data here\n")
+    with pytest.raises(FileNotFoundError, match="no members matching"):
+        run_source(
+            spark, "national_statistic_postcode_lookup",
+            url=f"file://{bundle}", **_kwargs(tmp_path),
+        )
+    log = spark.read.parquet(str(tmp_path / "logs")).collect()
+    assert [r["status"] for r in log] == ["FAILED"]
 
 
 def test_zip_json_catalog_ingest_idempotent_at_scale(spark, tmp_path):

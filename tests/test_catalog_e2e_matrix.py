@@ -116,7 +116,9 @@ def test_every_kind_lands_partition_and_logs(spark, tmp_path, name, kind, fixtur
         url=url,
         **extra,
     )
-    run_source(spark, name, **kwargs)
+    out = run_source(spark, name, **kwargs)
+    returned = out if isinstance(out, dict) else {None: out}
+    assert set(returned) == set(tables), kind
 
     month_counts = {}
     for table in tables:
@@ -127,6 +129,10 @@ def test_every_kind_lands_partition_and_logs(spark, tmp_path, name, kind, fixtur
         n = part.count()
         assert n > 0, (kind, table)
         assert "date_time_processed" in part.columns
+        # run_source returns the frames it wrote: the partition's columns,
+        # in order once the read has moved year/month last
+        cols = [c for c in returned[table].columns if c not in ("year", "month")]
+        assert cols + ["year", "month"] == part.columns, (kind, table)
         month_counts[table] = n
 
     log = spark.read.parquet(logs).collect()

@@ -27,14 +27,17 @@ def test_impact_scores_invariants(spark):
     from open_data_pipelines_spark.plans.impact import impact_scores
 
     df = impact_scores(spark, SF_SMOKE).cache()
-    # not_null dbt-style schema tests
-    assert df.filter(F.col("impact_score").isNull()).count() == 0
-    assert df.filter(F.col("total_impact_level").isNull()).count() == 0
-    # normalized range
-    bad = df.filter((F.col("impact_score") < 1.0) | (F.col("impact_score") > 100.0))
-    assert bad.count() == 0
-    # unique key
-    assert df.count() == df.select("nation").distinct().count()
+    try:
+        # not_null dbt-style schema tests
+        assert df.filter(F.col("impact_score").isNull()).count() == 0
+        assert df.filter(F.col("total_impact_level").isNull()).count() == 0
+        # normalized range
+        bad = df.filter((F.col("impact_score") < 1.0) | (F.col("impact_score") > 100.0))
+        assert bad.count() == 0
+        # unique key
+        assert df.count() == df.select("nation").distinct().count()
+    finally:
+        df.unpersist()
 
 
 def test_queries_and_oracles_aligned():
